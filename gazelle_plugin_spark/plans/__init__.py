@@ -48,10 +48,7 @@ def load_all() -> None:
         text_pipeline,
         similarity_queries,
         multimodal,
-        sqltext,
-        sqltext_tpcds,
-        sqltext_tpcds_full,
-        sqltext_tpcds_v27,
+        sqltext_tpcds,  # registers every corpus in sqltext_tpcds.CORPORA
         layout,
     )
 
@@ -128,28 +125,15 @@ ROWS_ONLY_WINDOW: frozenset[str] = frozenset()
 
 def _conditionally_absent() -> frozenset[str]:
     """Window names whose registration is corpus-gated AND whose corpus
-    is unavailable on this machine. The sqltext_*/dstext_* entries run
-    the reference's literal SQL files, so they only register when the
-    read-only reference checkout exists (plans/sqltext.py REF_SQL_ROOT);
+    is unavailable on this machine. The corpus rows run the reference's
+    literal SQL files, so they only register when the read-only
+    reference checkout exists (plans/sqltext.py REF_SQL_ROOT);
     everywhere else the registry must degrade gracefully rather than
     hard-fail on the curated window."""
-    from gazelle_plugin_spark.plans import (
-        sqltext,
-        sqltext_tpcds,
-        sqltext_tpcds_full,
-        sqltext_tpcds_v27,
-    )
+    from gazelle_plugin_spark.plans.sqltext_tpcds import CORPORA
 
-    absent: set[str] = set()
-    if not sqltext.corpus_available():
-        absent.update(n for n in DRIVER_WINDOW if n.startswith("sqltext_"))
-    if not sqltext_tpcds.tpcds_corpus_available():
-        absent.update(n for n in DRIVER_WINDOW if n.startswith("dstext_"))
-    if not sqltext_tpcds_full.tpcds_full_corpus_available():
-        absent.update(n for n in DRIVER_WINDOW if n.startswith("tpcdsfull_"))
-    if not sqltext_tpcds_v27.tpcds_v27_corpus_available():
-        absent.update(n for n in DRIVER_WINDOW if n.startswith("dsv27_"))
-    return frozenset(absent)
+    gated = tuple(c.prefix for c in CORPORA if not c.available())
+    return frozenset(n for n in DRIVER_WINDOW if n.startswith(gated))
 
 
 def _curated(reg: dict[str, str | QueryFn]) -> dict:

@@ -1,12 +1,12 @@
-"""Verbatim SQL-text corpus execution (reference parity surface).
+"""Verbatim replay of the reference's SQL-text corpora.
 
-The reference executes its TPC-H and SSB suites from literal query
-files — ``native-sql-engine/core/src/test/resources/tpch/q1.sql ..
-q22.sql`` (driven by ``com/intel/oap/tpc/h/TPCHSuite.scala:42-120``)
-and ``resources/ssb/1.1.sql .. 4.3.sql`` (``SSBQuerySuite.scala``).
-This module runs those texts UNMODIFIED through :class:`SqlEngine`-
-style ``spark.sql`` over a compatibility catalog, closing the last
-user-facing entry path: a user's literal SQL files run as-is.
+The reference proves parity by running its own query files: TPC-H
+``tpch/q1.sql .. q22.sql`` (``TPCHSuite.scala:42-120``), SSB
+``ssb/1.1.sql .. 4.3.sql`` (``SSBQuerySuite.scala``) and three TPC-DS
+sets (plans/sqltext_tpcds.py). Each set is one :class:`Corpus` record;
+one runner executes any of their texts UNMODIFIED through
+``spark.sql`` over a compatibility catalog, and one oracle builder
+runs the identical text on DuckDB over the same view definitions.
 
 The driver's synthetic schema is reduced TPC-H (no ``partsupp``; no
 comment/address/phone/shipmode/commitdate... columns) — so the
@@ -40,16 +40,22 @@ do not exist here), each text runs in TWO variants:
   design ("-- using default substitutions"); the fitted variant is a
   legal substitution set, and is required to be non-empty.
 
-Both variants run the identical text on Spark AND DuckDB (the oracle
-prelude defines the same views as CTEs, shadowing the base views;
-inner references use ``main.<table>`` to bypass the shadow).
+The oracle side may differ from the Spark text only by value-
+preserving rewrites the record declares: dialect patches (identifier
+quoting, SEMI JOIN spelling, alias resolution, Spark's default null
+order) and an outer projection that casts or renames output columns
+where the engines' physical types or default names diverge. The
+oracle prelude defines the views as CTEs, shadowing the base views;
+inner references use ``main.<table>`` to bypass the shadow.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass
+from collections.abc import Mapping, Sequence
+from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,33 +63,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gazelle_plugin_spark.catalog import table_path
+from gazelle_plugin_spark.plans import query
 
 #: Where the reference's SQL text corpus lives (read-only checkout).
 REF_SQL_ROOT = os.environ.get(
     "SPARK_GRAFT_REF_SQL",
     "/root/reference/native-sql-engine/core/src/test/resources",
 )
-
-TPCH_NAMES = tuple(f"q{i}" for i in range(1, 23))
-SSB_NAMES = (
-    "1.1", "1.2", "1.3",
-    "2.1", "2.2", "2.3",
-    "3.1", "3.2", "3.3", "3.4",
-    "4.1", "4.2", "4.3",
-)
-
-
-def corpus_available() -> bool:
-    return os.path.isdir(os.path.join(REF_SQL_ROOT, "tpch")) and os.path.isdir(
-        os.path.join(REF_SQL_ROOT, "ssb")
-    )
-
-
-def load_text(family: str, name: str) -> str:
-    """Raw reference SQL text (family 'tpch' -> qN.sql, 'ssb' -> N.M.sql)."""
-    fn = f"{name}.sql"
-    with open(os.path.join(REF_SQL_ROOT, family, fn)) as f:
-        return f.read()
 
 
 # ---------------------------------------------------------------------------
@@ -233,11 +219,15 @@ FROM {src('part')}""",
     }
 
 
-def register_views(spark: SparkSession, sf_dir: str, family: str) -> None:
-    """Create the compatibility temp views for ``family`` ('tpch' or
-    'ssb'). Idempotent; called by every text runner so the two
-    families can share a session (their supplier/customer/part views
-    intentionally shadow each other — last registration wins)."""
+#: A view family: ``(dialect, src) -> {view name: body}``, where
+#: ``src(table)`` renders the raw-table reference for the dialect.
+Views = Callable[[_Dialect, Callable[[str], str]], dict[str, str]]
+
+
+def register_views(spark: SparkSession, sf_dir: str, views: Views) -> None:
+    """Create a family's compatibility temp views. Idempotent; the
+    families share view names (customer, supplier, part) and shadow
+    each other — last registration wins."""
     raws = {}
 
     def src(name: str) -> str:
@@ -247,21 +237,18 @@ def register_views(spark: SparkSession, sf_dir: str, family: str) -> None:
             raws[name] = view
         return raws[name]
 
-    views = _tpch_views(_SPARK, src) if family == "tpch" else _ssb_views(_SPARK, src)
-    for name, body in views.items():
+    for name, body in views(_SPARK, src).items():
         spark.sql(body).createOrReplaceTempView(name)
 
 
-def oracle_prelude(family: str) -> str:
+def oracle_prelude(views: Views) -> str:
     """DuckDB WITH-prelude defining the same views as CTEs. CTE names
     shadow the driver's base views; inner references go through
     ``main.<table>`` to reach the real tables."""
-    views = (
-        _tpch_views(_DUCK, lambda n: f"main.{n}")
-        if family == "tpch"
-        else _ssb_views(_DUCK, lambda n: f"main.{n}")
+    ctes = ",\n".join(
+        f'"{name}" AS ({body})'
+        for name, body in views(_DUCK, lambda n: f"main.{n}").items()
     )
-    ctes = ",\n".join(f'"{name}" AS ({body})' for name, body in views.items())
     return f"WITH {ctes}"
 
 
@@ -280,54 +267,7 @@ def merge_prelude(prelude: str, text: str) -> str:
     return f"{prelude}\n{body}"
 
 
-# ---------------------------------------------------------------------------
-# Fitted substitutions: literal parameters only, remapped to this
-# dataset's domains (dates +3y -> 1995-2001; names -> synthetic
-# domains). The query text is otherwise byte-identical.
-# ---------------------------------------------------------------------------
-
-_DATE_LIT = re.compile(r"date '(\d{4})-")
-
-
-def _shift_dates(text: str, years: int = 3) -> str:
-    return _DATE_LIT.sub(lambda m: f"date '{int(m.group(1)) + years}-", text)
-
-
-#: Per-query literal remaps (applied longest-key-first, after the
-#: global date shift). Only parameters whose default values name
-#: domains absent from the synthetic data.
-FITTED_SUBS: dict[str, dict[str, str]] = {
-    "q2": {"'%BRASS'": "'%DARD'"},
-    "q7": {"'FRANCE'": "'NATION_4'", "'GERMANY'": "'NATION_5'"},
-    "q8": {"'BRAZIL'": "'NATION_6'",
-           "'ECONOMY ANODIZED STEEL'": "'ECONOMY'"},
-    "q9": {"'%green%'": "'%red%'"},
-    "q11": {"'GERMANY'": "'NATION_5'"},
-    "q16": {"'Brand#45'": "'Brand#4'", "'MEDIUM POLISHED%'": "'MEDIUM%'"},
-    "q19": {"'Brand#34'": "'Brand#14'"},
-    "q20": {"'forest%'": "'red%'", "'CANADA'": "'NATION_8'"},
-    "q21": {"'SAUDI ARABIA'": "'NATION_7'"},
-    "1.1": {"1993": "1996"},
-    "1.2": {"199401": "199701"},
-    "1.3": {"1994": "1997"},
-    "2.1": {"'MFGR#12'": "'PROMO'"},
-    "2.2": {"'MFGR#2221'": "'Brand#20'", "'MFGR#2228'": "'Brand#24'"},
-    "2.3": {"'MFGR#2221'": "'Brand#22'"},
-    "3.1": {"1992": "1995", "1997": "2000"},
-    "3.2": {"'UNITED STATES'": "'NATION_2'", "1992": "1995", "1997": "2000"},
-    "3.3": {"'UNITED KINGDOM'": "'NATION_9'", "'UNITED KI1'": "'NATION_9_C4'",
-            "'UNITED KI5'": "'NATION_9_C9'", "1992": "1995", "1997": "2000"},
-    "3.4": {"'UNITED KINGDOM'": "'NATION_9'", "'UNITED KI1'": "'NATION_9_C4'",
-            "'UNITED KI5'": "'NATION_9_C9'", "'Dec1997'": "'May1995'"},
-    "4.1": {"'MFGR#1'": "'ECONOMY'", "'MFGR#2'": "'LARGE'"},
-    "4.2": {"'MFGR#1'": "'ECONOMY'", "'MFGR#2'": "'LARGE'",
-            "1997": "2000", "1998": "2001"},
-    "4.3": {"'MFGR#14'": "'SMALL'", "'UNITED STATES'": "'NATION_2'",
-            "1997": "2000", "1998": "2001"},
-}
-
-
-def sub_literals(text: str, subs: dict[str, str]) -> str:
+def sub_literals(text: str, subs: Mapping[str, str]) -> str:
     """Apply literal-only substitutions, longest key first. Quoted
     keys replace verbatim; bare-number keys replace only as WHOLE
     numbers (regex word boundaries) — a plain substring replace would
@@ -339,18 +279,6 @@ def sub_literals(text: str, subs: dict[str, str]) -> str:
         else:
             text = re.sub(rf"\b{re.escape(old)}\b", new, text)
     return text
-
-
-def fitted_text(family: str, name: str) -> str:
-    text = load_text(family, name)
-    if family == "tpch":
-        text = _shift_dates(text)
-    return sub_literals(text, FITTED_SUBS.get(name, {}))
-
-
-# ---------------------------------------------------------------------------
-# Runners
-# ---------------------------------------------------------------------------
 
 
 def normalize_output(df: DataFrame) -> DataFrame:
@@ -381,90 +309,192 @@ def normalize_output(df: DataFrame) -> DataFrame:
     return out.toDF(*names) if dup else out
 
 
-def run_text(
+# ---------------------------------------------------------------------------
+# The corpus record and the one runner over it
+# ---------------------------------------------------------------------------
+
+_DATE_LIT = re.compile(r"date '(\d{4})-")
+
+#: A dialect patch: (regex, replacement), applied to the oracle text
+#: only. Each must be value-preserving (quoting, spelling, alias
+#: resolution, explicit null order).
+Patch = tuple[str, str]
+
+
+@dataclass(frozen=True)
+class Corpus:
+    """One reference SQL-text corpus and everything needed to replay
+    it on Spark and on DuckDB."""
+
+    #: registry name prefix of its driver queries (prefix + name, with
+    #: '.' spelled '_')
+    prefix: str
+    #: directory of ``<name>.sql`` files under ``root``
+    dir: str
+    #: the compatibility view family its texts run over
+    views: Views
+    #: the file names; None lists them from the directory
+    fixed_names: tuple[str, ...] | None = None
+    #: fitted variant: years added to every ``date 'YYYY-`` literal ...
+    shift_years: int = 0
+    #: ... then per-name literal-only substitutions (sub_literals)
+    fitted_subs: Mapping[str, Mapping[str, str]] = field(default_factory=dict)
+    #: oracle dialect patches for every text, then per name
+    patches: Sequence[Patch] = ()
+    name_patches: Mapping[str, Sequence[Patch]] = field(default_factory=dict)
+    #: oracle output projection per name: ordered (column, DuckDB cast
+    #: type or None) — DuckDB SUM(INTEGER) is HUGEINT where Spark's is
+    #: BIGINT, and Spark types grouping()/rank() narrower
+    out_casts: Mapping[str, Sequence[tuple[str, str | None]]] = field(default_factory=dict)
+    #: oracle output renames per name: (DuckDB name, Spark name) — the
+    #: driver compare pairs columns BY NAME (count_star() vs count(1))
+    out_renames: Mapping[str, Sequence[tuple[str, str]]] = field(default_factory=dict)
+    #: driver-registered (name, fitted) entries: the value-safe subset
+    #: (exact sums/counts/attributes; no avg/ratio output columns)
+    tranche: tuple[tuple[str, bool], ...] = ()
+    root: str = REF_SQL_ROOT
+
+    def available(self) -> bool:
+        return os.path.isdir(os.path.join(self.root, self.dir))
+
+    def names(self) -> tuple[str, ...]:
+        if self.fixed_names is not None:
+            return self.fixed_names
+        if not self.available():
+            return ()
+        files = os.listdir(os.path.join(self.root, self.dir))
+        return tuple(sorted(f[:-4] for f in files if f.endswith(".sql")))
+
+    def qname(self, name: str) -> str:
+        return self.prefix + name.replace(".", "_")
+
+    def text(self, name: str, fitted: bool = False) -> str:
+        """The reference text, or its fitted variant."""
+        with open(os.path.join(self.root, self.dir, f"{name}.sql")) as f:
+            text = f.read()
+        if not fitted:
+            return text
+        if self.shift_years:
+            text = _DATE_LIT.sub(
+                lambda m: f"date '{int(m.group(1)) + self.shift_years}-", text
+            )
+        return sub_literals(text, self.fitted_subs.get(name) or {})
+
+
+def run(
     spark: SparkSession,
     sf_dir: str,
-    family: str,
+    corpus: Corpus,
     name: str,
     fitted: bool = False,
     register: bool = True,
 ) -> DataFrame:
-    """Execute one reference SQL text over the compatibility views.
+    """Execute one reference text over its compatibility views.
 
     ``register=False`` skips the (idempotent) view registration for
     callers that registered once up front — e.g. the test sweeps'
     concurrent prewarm, where per-call re-registration would race."""
     if register:
-        register_views(spark, sf_dir, family)
-    text = fitted_text(family, name) if fitted else load_text(family, name)
-    return normalize_output(spark.sql(text))
+        register_views(spark, sf_dir, corpus.views)
+    return normalize_output(spark.sql(corpus.text(name, fitted)))
 
 
-def oracle_sql_for(family: str, name: str, fitted: bool = False) -> str:
-    text = fitted_text(family, name) if fitted else load_text(family, name)
-    return merge_prelude(oracle_prelude(family), text)
+def _out_projection(corpus: Corpus, name: str, text: str) -> str:
+    renames = dict(corpus.out_renames.get(name, ()))
+    spec = corpus.out_casts.get(name) or [(c, None) for c in renames]
+    if not spec:
+        return text
+    # one merged projection: cast AND rename per column, so a name in
+    # both tables drops neither
+    cols = []
+    for c, t in spec:
+        src = f'CAST("{c}" AS {t})' if t else f'"{c}"'
+        cols.append(f'{src} AS "{renames.pop(c, c)}"')
+    assert not renames, (
+        f"{corpus.dir}/{name}: out_renames columns {sorted(renames)} absent "
+        "from its out_casts projection — merge them there"
+    )
+    return f"SELECT {', '.join(cols)} FROM (\n{text}\n) _out"
+
+
+def oracle_sql(corpus: Corpus, name: str, fitted: bool = False) -> str:
+    """The DuckDB oracle: the same text, dialect-patched and wrapped in
+    the family's view prelude."""
+    text = corpus.text(name, fitted)
+    for pat, rep in (*corpus.patches, *corpus.name_patches.get(name, ())):
+        text = re.sub(pat, rep, text)
+    return merge_prelude(
+        oracle_prelude(corpus.views), _out_projection(corpus, name, text)
+    )
+
+
+def register_tranche(corpus: Corpus) -> None:
+    """Register the corpus's driver tranche, if its files are present."""
+    if not corpus.available():
+        return
+    for name, fitted in corpus.tranche:
+        impl = partial(run, corpus=corpus, name=name, fitted=fitted)
+        query(corpus.qname(name), oracle=oracle_sql(corpus, name, fitted))(impl)
 
 
 # ---------------------------------------------------------------------------
-# Driver-registered entries: a cross-section of the corpus whose
-# outputs are bit-stable across engines (decimal-exact sums, keys,
-# strings, dates — no engine-scale-dependent ratios/averages).
+# TPC-H and SSB
 # ---------------------------------------------------------------------------
 
-from gazelle_plugin_spark.plans import query  # noqa: E402  (registry import)
+TPCH = Corpus(
+    prefix="sqltext_",
+    dir="tpch",
+    views=_tpch_views,
+    fixed_names=tuple(f"q{i}" for i in range(1, 23)),
+    shift_years=3,
+    # only parameters whose default values name domains absent from
+    # the synthetic data
+    fitted_subs={
+        "q2": {"'%BRASS'": "'%DARD'"},
+        "q7": {"'FRANCE'": "'NATION_4'", "'GERMANY'": "'NATION_5'"},
+        "q8": {"'BRAZIL'": "'NATION_6'",
+               "'ECONOMY ANODIZED STEEL'": "'ECONOMY'"},
+        "q9": {"'%green%'": "'%red%'"},
+        "q11": {"'GERMANY'": "'NATION_5'"},
+        "q16": {"'Brand#45'": "'Brand#4'", "'MEDIUM POLISHED%'": "'MEDIUM%'"},
+        "q19": {"'Brand#34'": "'Brand#14'"},
+        "q20": {"'forest%'": "'red%'", "'CANADA'": "'NATION_8'"},
+        "q21": {"'SAUDI ARABIA'": "'NATION_7'"},
+    },
+    # physical width only: DuckDB extract(year) is BIGINT, Spark's INT
+    out_casts={"q9": [("nation", None), ("o_year", "INT"), ("sum_profit", None)]},
+    # q18 runs verbatim: its default substitutions are non-vacuous here
+    tranche=(("q5", True), ("q9", True), ("q18", False)),
+)
 
-
-def _register(
-    qname: str,
-    family: str,
-    name: str,
-    fitted: bool,
-    doc: str,
-    wrap: str | None = None,
-) -> None:
-    def impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return run_text(spark, sf_dir, family, name, fitted=fitted)
-
-    impl.__name__ = qname
-    impl.__doc__ = doc
-    oracle = oracle_sql_for(family, name, fitted=fitted)
-    if wrap is not None:
-        # physical-width alignment only (e.g. DuckDB extract(year) is
-        # BIGINT where Spark's is INT) — values untouched
-        oracle = f"SELECT {wrap} FROM (\n{oracle}\n) _t"
-    query(qname, oracle=oracle)(impl)
-
-
-if corpus_available():
-    _V = " (fitted substitutions: dates +3y / domain literals remapped)"
-    _register(
-        "sqltext_q5", "tpch", "q5", True,
-        "Reference tpch/q5.sql executed VERBATIM through spark.sql over "
-        "the compatibility catalog (TPCHSuite.scala entry path)." + _V,
-    )
-    _register(
-        "sqltext_q9", "tpch", "q9", True,
-        "Reference tpch/q9.sql (product-type profit) verbatim through "
-        "spark.sql; exercises the synthetic partsupp view." + _V,
-        wrap="nation, CAST(o_year AS INT) AS o_year, sum_profit",
-    )
-    _register(
-        "sqltext_q18", "tpch", "q18", False,
-        "Reference tpch/q18.sql byte-identical (default substitutions "
-        "are non-vacuous on this data) through spark.sql.",
-    )
-    _register(
-        "sqltext_ssb1_1", "ssb", "1.1", True,
-        "Reference ssb/1.1.sql through spark.sql over the lineorder/"
-        "date SSB compatibility views (SSBQuerySuite entry path)." + _V,
-    )
-    _register(
-        "sqltext_ssb2_1", "ssb", "2.1", True,
-        "Reference ssb/2.1.sql (flight 2: two dims + group) verbatim "
-        "through spark.sql over the SSB views." + _V,
-    )
-    _register(
-        "sqltext_ssb4_2", "ssb", "4.2", True,
-        "Reference ssb/4.2.sql (flight 4: profit, three dims) verbatim "
-        "through spark.sql over the SSB views." + _V,
-    )
+SSB = Corpus(
+    prefix="sqltext_ssb",
+    dir="ssb",
+    views=_ssb_views,
+    fixed_names=(
+        "1.1", "1.2", "1.3",
+        "2.1", "2.2", "2.3",
+        "3.1", "3.2", "3.3", "3.4",
+        "4.1", "4.2", "4.3",
+    ),
+    fitted_subs={
+        "1.1": {"1993": "1996"},
+        "1.2": {"199401": "199701"},
+        "1.3": {"1994": "1997"},
+        "2.1": {"'MFGR#12'": "'PROMO'"},
+        "2.2": {"'MFGR#2221'": "'Brand#20'", "'MFGR#2228'": "'Brand#24'"},
+        "2.3": {"'MFGR#2221'": "'Brand#22'"},
+        "3.1": {"1992": "1995", "1997": "2000"},
+        "3.2": {"'UNITED STATES'": "'NATION_2'", "1992": "1995", "1997": "2000"},
+        "3.3": {"'UNITED KINGDOM'": "'NATION_9'", "'UNITED KI1'": "'NATION_9_C4'",
+                "'UNITED KI5'": "'NATION_9_C9'", "1992": "1995", "1997": "2000"},
+        "3.4": {"'UNITED KINGDOM'": "'NATION_9'", "'UNITED KI1'": "'NATION_9_C4'",
+                "'UNITED KI5'": "'NATION_9_C9'", "'Dec1997'": "'May1995'"},
+        "4.1": {"'MFGR#1'": "'ECONOMY'", "'MFGR#2'": "'LARGE'"},
+        "4.2": {"'MFGR#1'": "'ECONOMY'", "'MFGR#2'": "'LARGE'",
+                "1997": "2000", "1998": "2001"},
+        "4.3": {"'MFGR#14'": "'SMALL'", "'UNITED STATES'": "'NATION_2'",
+                "1997": "2000", "1998": "2001"},
+    },
+    tranche=(("1.1", True), ("2.1", True), ("4.2", True)),
+)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 from gazelle_plugin_spark.plans import all_queries
+from gazelle_plugin_spark.plans.sqltext_tpcds import TPCDS_FULL, TPCDS_V27
 from tests.conftest import SF_MED
 
 QUERIES = all_queries()
@@ -58,8 +59,11 @@ def _rows(df):
         # exchange), the IVF-ADC candidate scoring's decimal LUT sums,
         # and the incremental-dedup probe whose hot-bucket salting
         # must stay a layout-free no-op on healthy data
-        "tpcdsfull_q86",
-        "dsv27_q86a",
+        *(
+            pytest.param(c.qname(n), marks=pytest.mark.skipif(
+                not c.available(), reason=f"reference {c.dir}/ absent"))
+            for c, n in ((TPCDS_FULL, "q86"), (TPCDS_V27, "q86a"))
+        ),
         "emb_ivfpq_search",
         "doc_incremental_dedup",
     ],

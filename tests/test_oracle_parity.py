@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from gazelle_plugin_spark.plans import all_oracles, all_queries
+from gazelle_plugin_spark.plans.sqltext_tpcds import CORPORA
 from tests.compare import assert_same_pdf
 from tests.conftest import SF_MED
 
@@ -14,13 +15,12 @@ QUERIES = all_queries()
 ORACLES = all_oracles()
 
 
-#: Query families whose implementations RE-REGISTER the shared
-#: compatibility temp views on every call (run_text /
-#: run_tpcds_text / run_tpcds_full / run_tpcds_v27, and the tpch/ssb
-#: view layers deliberately shadow each other): concurrent execution
-#: races on createOrReplaceTempView (a view is briefly absent
-#: mid-replacement — AnalysisException), so these replay SERIALLY.
-_SERIAL_PREFIXES = ("sqltext_", "dstext_", "tpcdsfull_", "dsv27_")
+#: Corpus replays RE-REGISTER the shared compatibility temp views on
+#: every call (plans/sqltext.run), and the view families deliberately
+#: shadow each other: concurrent execution races on
+#: createOrReplaceTempView (a view is briefly absent mid-replacement —
+#: AnalysisException), so these replay SERIALLY.
+_SERIAL_PREFIXES = tuple(c.prefix for c in CORPORA)
 
 
 @pytest.fixture(scope="session")

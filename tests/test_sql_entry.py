@@ -69,16 +69,19 @@ def test_driver_window_is_a_family_cross_section():
     from gazelle_plugin_spark.plans import (
         DRIVER_WINDOW,
         ROWS_ONLY_WINDOW,
+        _conditionally_absent,
         all_oracles,
         all_queries,
     )
 
     qs, os_ = all_queries(), all_oracles()
+    # corpus-gated rows are absent without the reference checkout
+    window = [n for n in DRIVER_WINDOW if n not in _conditionally_absent()]
     assert len(DRIVER_WINDOW) == 50
-    assert list(qs)[: len(DRIVER_WINDOW)] == list(DRIVER_WINDOW)
+    assert list(qs)[: len(window)] == window
     assert DRIVER_WINDOW[0] == "q1"
     missing_oracle = [
-        n for n in DRIVER_WINDOW if n not in os_ and n not in ROWS_ONLY_WINDOW
+        n for n in window if n not in os_ and n not in ROWS_ONLY_WINDOW
     ]
     assert not missing_oracle, f"window entries without oracle: {missing_oracle}"
     assert ROWS_ONLY_WINDOW <= set(DRIVER_WINDOW)
@@ -91,24 +94,21 @@ def test_driver_window_is_a_family_cross_section():
 
 def test_registry_degrades_without_reference_corpus(monkeypatch):
     """On a machine without the read-only reference checkout, the
-    corpus-gated sqltext_*/dstext_* rows never register — the curated
-    window must drop them gracefully instead of hard-failing the whole
-    269-query registry (round-8 advice)."""
+    corpus-gated rows never register — the curated window must drop
+    them gracefully instead of hard-failing the whole registry
+    (round-8 advice)."""
     import gazelle_plugin_spark.plans as P
-    from gazelle_plugin_spark.plans import sqltext, sqltext_tpcds
+    from gazelle_plugin_spark.plans.sqltext import Corpus
+    from gazelle_plugin_spark.plans.sqltext_tpcds import CORPORA
 
     P.load_all()
-    monkeypatch.setattr(sqltext, "corpus_available", lambda: False)
-    monkeypatch.setattr(sqltext_tpcds, "tpcds_corpus_available", lambda: False)
-    pruned = {
-        n: f
-        for n, f in P.QUERIES.items()
-        if not n.startswith(("sqltext_", "dstext_"))
-    }
+    monkeypatch.setattr(Corpus, "available", lambda self: False)
+    gated = tuple(c.prefix for c in CORPORA)
+    pruned = {n: f for n, f in P.QUERIES.items() if not n.startswith(gated)}
     monkeypatch.setattr(P, "QUERIES", pruned)
     out = P._curated(pruned)
     assert "q1" in out
-    assert not any(n.startswith(("sqltext_", "dstext_")) for n in out)
+    assert not any(n.startswith(gated) for n in out)
     # unconditional names still hard-fail if genuinely unregistered
     monkeypatch.setattr(P, "QUERIES", {n: f for n, f in pruned.items() if n != "q1"})
     with pytest.raises(ValueError, match="q1"):
