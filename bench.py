@@ -4,47 +4,31 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Modes:
-  python bench.py [names...]            compare (default): engine in
-      this process, vanilla Spark in ONE persistent subprocess,
+  python bench.py [names...]            compare (default): engine and
+      vanilla Spark each in a persistent measurement subprocess,
       INTERLEAVED per query — engine median-of-R then vanilla
       median-of-R for the same query back-to-back, so sandbox load
-      shifts hit both sides alike (round-3/4 verdict item). R =
-      $SPARK_GRAFT_BENCH_REPS (default 3, median); a first rep under
-      $SPARK_GRAFT_BENCH_WARM_UNDER sec (default 2.0) is an untimed
-      warm-up on BOTH sides (r11: first-plan codegen dominated
-      sub-second medians).
-  python bench.py --no-compare [names...]  engine only
-  python bench.py --vanilla [names...]     default-conf Spark session only
-  python bench.py --worker                 internal: vanilla-session
+      shifts hit both sides alike. R = $SPARK_GRAFT_BENCH_REPS
+      (default 3, median); a first rep under WARM_EXCLUDE_UNDER
+      (2.0 s) is an untimed warm-up on BOTH sides.
+  python bench.py --no-compare [names...]  engine worker only
+  python bench.py --vanilla [names...]     vanilla worker only
+  python bench.py --worker[=kind]          internal: measurement
       subprocess; reads query names from stdin, answers one JSON line
       per name on stdout.
+
+All three modes time queries through the same worker path; the
+one-side modes simply ask one worker.
 
 Crash isolation (round-4 lesson: one broken query zeroed the whole
 artifact): every query runs under try/except; failures land in
 "errors": {name: message} and the run continues. The JSON always
 prints.
 
-Self-adjudication (round-13 verdict task 2; band widened round 15):
-after a compare run, suspect ratios are re-measured in isolated fresh
-JVMs — one side at a time, never co-tenant — and the verdict
-(machine-state / borderline / confirmed-weak) is recorded in an
-"adjudications" block. Suspects = every ratio under
-$SPARK_GRAFT_BENCH_ADJ_UNDER (default 0.7) PLUS rows in
-[ADJ_UNDER, $SPARK_GRAFT_BENCH_ADJ_BAND=0.9) whose engine rep array
-is NOT warm-up-shaped (round-14 verdict task 3: ds_month_flag_pivot
-at 0.733 left the r14 artifact unexplained). Band rows whose engine
-reps DO decay and whose steady-state ratio (first rep dropped, both
-sides) is parity-band are recorded as "rep-decay" without spending
-JVMs. Fresh-JVM re-measurement is bounded at the worst
-$SPARK_GRAFT_BENCH_ADJ_MAX=4 rows; anything past the cap is listed in
-"adjudications_skipped" so the artifact never silently claims full
-coverage.
-
-The headline set is the 22 TPC-H-derived queries (matching
-BENCH_r01.json and the reference's Decision Support Benchmark1) PLUS
-the LLM-pipeline operators (PIPELINE_BENCH) — the ops whose 100 TB
-posture the brief grades are measured every round, not argued.
-Other queries run through the same harness when named explicitly.
+The headline set is TPC-H q1-q22, SSB flights 1-4 and the ds_ TPC-DS
+patterns PLUS the LLM-pipeline operators (PIPELINE_BENCH), so the ops
+whose 100 TB posture matters are measured, not argued. Other queries
+run through the same harness when named explicitly.
 """
 
 from __future__ import annotations
@@ -95,15 +79,26 @@ REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 #: Long queries keep all reps (the warm-up share is negligible and an
 #: extra execution is expensive). Symmetric: both workers time
 #: through this same function.
-WARM_EXCLUDE_UNDER = float(os.environ.get("SPARK_GRAFT_BENCH_WARM_UNDER", "2.0"))
+WARM_EXCLUDE_UNDER = 2.0
 
 #: Queries whose timed median lands under WARM_EXCLUDE_UNDER extend to
 #: this many timed reps (round-12 verdict task 2): the sub-2s class is
-#: exactly where median-of-3 was repeatedly too noisy for the driver
-#: artifact to adjudicate (ds_dow_pivot 0.437, doc_incremental_dedup
+#: exactly where median-of-3 was repeatedly too noisy to judge from
+#: the driver artifact (ds_dow_pivot 0.437, doc_incremental_dedup
 #: 0.598 — both clean on manual re-bench), so short queries buy more
 #: reps (cheap) and every rep is EMITTED, not just the median.
-SHORT_QUERY_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_SHORT_REPS", "5"))
+SHORT_QUERY_REPS = 5
+
+#: Both workers are recycled to fresh JVMs every this many queries: in
+#: a 90+-query session a single long-lived JVM accumulates
+#: code-cache/GC aging that shows up as random 2-4x ONE-SIDED
+#: per-query outliers (round-6/7 lesson: every full-set "regression"
+#: vanished on a clean subset re-run).
+RESPAWN_EVERY = 24
+
+#: The stdout line must survive the driver's ~2000-char tail capture
+#: (round-9 verdict item 1: every prior artifact had "parsed": null).
+LINE_CAP = 1900
 
 
 def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
@@ -156,21 +151,6 @@ def _warm(spark, queries, sf_dir) -> None:
         queries["q6"](spark, sf_dir).collect()
     except Exception:
         pass
-
-
-def _run_queries(spark, names, queries, sf_dir):
-    """(timings, errors, reps) — crash-isolated per query."""
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    reps: dict[str, dict] = {}
-    for name in names:
-        try:
-            ans = _time_one(spark, queries[name], sf_dir)
-            timings[name] = ans["sec"]
-            reps[name] = {"t": ans["t"], "w": ans["w"]}
-        except Exception as exc:  # noqa: BLE001 - record and continue
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-    return timings, errors, reps
 
 
 def _machine_state() -> dict:
@@ -384,140 +364,16 @@ class _WorkerHandle:
         return {"err": err}
 
 
-#: Compare-mode ratios below this trigger END-OF-RUN self-adjudication
-#: (round-13 verdict task 2): the r13 driver artifact carried q7 at
-#: 0.548 with uniform reps that fresh-JVM re-measurement refuted
-#: (machine-state: load1=1.85 at record time). Now the artifact
-#: adjudicates itself — each sub-threshold query is re-measured in
-#: ISOLATED fresh JVMs (one per side, sequential, never co-tenant)
-#: and the verdict lands in an "adjudications" block.
-ADJUDICATE_UNDER = float(os.environ.get("SPARK_GRAFT_BENCH_ADJ_UNDER", "0.7"))
-ADJUDICATE_MAX = int(os.environ.get("SPARK_GRAFT_BENCH_ADJ_MAX", "4"))
-
-#: Upper edge of the adjudication BAND (round-14 verdict task 3): rows
-#: in [ADJUDICATE_UNDER, ADJUDICATE_BAND) were previously a blind spot
-#: — sub-0.9 but over the fresh-JVM trigger, so the artifact shipped
-#: them unexplained (r14's ds_month_flag_pivot at 0.733). Band rows
-#: whose engine reps are uniform (no warm-up decay to blame) now join
-#: the fresh-JVM queue; warm-up-shaped band rows self-explain via the
-#: steady-state ratio instead.
-ADJUDICATE_BAND = float(os.environ.get("SPARK_GRAFT_BENCH_ADJ_BAND", "0.9"))
-
-#: A rep array is warm-up-shaped ("decaying") when its FIRST timed rep
-#: runs at least this factor over the median of the remaining reps —
-#: the residue of first-plan codegen/JIT that WARM_EXCLUDE_UNDER only
-#:  catches for sub-2s queries. r14's ds_month_flag_pivot engine reps
-#: [4.99, 3.91, 2.89]: 4.99 >= 1.25 * median(3.91, 2.89) -> decaying.
-REP_DECAY_FACTOR = float(os.environ.get("SPARK_GRAFT_BENCH_DECAY_FACTOR", "1.25"))
-
-
-def _reps_decaying(t: list[float] | None) -> bool:
-    """True when a timed rep array has warm-up shape (see
-    REP_DECAY_FACTOR). Arrays of fewer than 2 reps carry no shape
-    evidence and classify as NOT decaying, i.e. they stay eligible for
-    fresh-JVM adjudication rather than self-explaining."""
-    if not t or len(t) < 2:
-        return False
-    return t[0] >= REP_DECAY_FACTOR * statistics.median(t[1:])
-
-
-def _steady_ratio(et: list[float] | None, vt: list[float] | None) -> float | None:
-    """Steady-state ratio: drop the FIRST rep on BOTH sides (the
-    decay residue) and compare medians over the same number of leading
-    remaining reps. None when either side lacks 2+ reps."""
-    if not et or not vt or len(et) < 2 or len(vt) < 2:
-        return None
-    k = min(len(et), len(vt))
-    return round(statistics.median(vt[1:k]) / statistics.median(et[1:k]), 3)
-
-
-def _select_suspects(
-    rd: dict[str, float],
-    ereps: dict[str, dict],
-    vreps: dict[str, dict],
-) -> tuple[dict[str, dict], list[str], list[str]]:
-    """Partition compare-run ratios into (self-explained rep-decay
-    entries, fresh-JVM queue, skipped-past-cap names), worst ratio
-    first. Sub-ADJUDICATE_UNDER rows always queue; band rows
-    [ADJUDICATE_UNDER, ADJUDICATE_BAND) self-explain as "rep-decay"
-    only when the engine rep array is warm-up-shaped AND the
-    steady-state ratio (first rep dropped both sides) is back in the
-    parity band — otherwise they queue too. The fresh-JVM queue is
-    capped at ADJUDICATE_MAX; the overflow is RETURNED, not dropped,
-    so the artifact records what it did not re-measure."""
-    explained: dict[str, dict] = {}
-    queue: list[str] = []
-    for n, r in sorted(rd.items(), key=lambda kv: kv[1]):
-        if r < ADJUDICATE_UNDER:
-            queue.append(n)
-        elif r < ADJUDICATE_BAND:
-            et = (ereps.get(n) or {}).get("t")
-            vt = (vreps.get(n) or {}).get("t")
-            steady = _steady_ratio(et, vt)
-            if _reps_decaying(et) and steady is not None and steady >= ADJUDICATE_BAND:
-                explained[n] = {
-                    "ratio": r,
-                    "verdict": "rep-decay",
-                    "steady_ratio": steady,
-                }
-            else:
-                queue.append(n)
-    return explained, queue[:ADJUDICATE_MAX], queue[ADJUDICATE_MAX:]
-
-
-def _adjudicate(names: list[str], rd: dict[str, float]) -> dict:
-    """Re-measure each suspect query pair in fresh, isolated JVMs
-    (engine then vanilla, sequentially — the interleaved session's
-    worker-JVM aging and host load are exactly what's on trial) and
-    classify: machine-state (fresh ratio >= 0.9), confirmed-weak
-    (still < threshold), or borderline."""
-    out: dict[str, dict] = {}
-    for name in names:
-        entry: dict = {"ratio": rd[name]}
-        sides: dict[str, dict] = {}
-        for kind in ("engine", "vanilla"):
-            h = _WorkerHandle(kind)
-            sides[kind] = h.ask(name)
-            h.stop()
-        e, v = sides["engine"], sides["vanilla"]
-        if "sec" in e and "sec" in v:
-            et, vt = e.get("t") or [], v.get("t") or []
-            # like-for-like: the SHORT_QUERY_REPS extension can fire on
-            # ONE side only (its median crossed the 2s threshold),
-            # handing that side extra warmed reps — compare medians
-            # over the same number of leading reps on both sides
-            k = min(len(et), len(vt))
-            if k:
-                fr = round(statistics.median(vt[:k]) / statistics.median(et[:k]), 3)
-            else:
-                fr = round(v["sec"] / e["sec"], 3)
-            entry["fresh_ratio"] = fr
-            entry["e"] = [round(x, 2) for x in et]
-            entry["v"] = [round(x, 2) for x in vt]
-            # confirmed-weak FIRST: with a raised threshold (env), a
-            # fresh ratio under it must never read as refuted
-            entry["verdict"] = (
-                "confirmed-weak"
-                if fr < ADJUDICATE_UNDER
-                else "machine-state"
-                if fr >= 0.9
-                else "borderline"
-            )
-        else:
-            entry["err"] = (e.get("err") or v.get("err") or "no measurement")[:200]
-        out[name] = entry
-    return out
-
-
 USAGE = """usage: python bench.py [--no-compare | --vanilla] [query ...]
 
 Runs the headline query set (TPC-H + SSB + ds_ patterns + the
 LLM-pipeline ops) at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON result line. Default mode compares the engine
-against a vanilla-Spark measurement subprocess, interleaved per query.
+and prints ONE JSON result line. Default mode compares an engine
+measurement subprocess against a vanilla-Spark one, interleaved per
+query.
 
-  --no-compare     engine-only run
-  --vanilla        default-conf Spark session only
+  --no-compare     engine worker only
+  --vanilla        default-conf Spark worker only
   --worker[=kind]  internal measurement subprocess (engine|vanilla)
   -h, --help       this message
 
@@ -550,23 +406,16 @@ def main() -> None:
             kind = a.split("=", 1)[1] if "=" in a else "vanilla"
             _worker(cpus, sf_dir, kind)
             return
-    vanilla = "--vanilla" in args
-    compare = "--no-compare" not in args and not vanilla
-    args = [a for a in args if not a.startswith("--")]
-
-    from gazelle_plugin_spark.plans import all_queries
-
-    queries = all_queries()
-    # TPC-H q1-q22 + SSB 1.1-4.3 (BASELINE.md's promised sets) + the
-    # TPC-DS patterns (the reference's Decision Support Benchmark2
-    # analog, README.md:37-39) + the LLM-pipeline representatives.
-    default_names = (
-        sorted(n for n in queries if n.startswith("q"))
-        + sorted(n for n in queries if n.startswith("ssb"))
-        + sorted(n for n in queries if n.startswith("ds_"))
-        + PIPELINE_BENCH
-    )
-    names = args or default_names
+    # reps of a one-side run land under that side's own label, so a
+    # vanilla-only artifact never reads as "engine" in rep_detail
+    # (round-13 advice)
+    if "--vanilla" in args:
+        kinds = ("vanilla",)
+    elif "--no-compare" in args:
+        kinds = ("engine",)
+    else:
+        kinds = ("engine", "vanilla")
+    names = [a for a in args if not a.startswith("--")] or _default_names()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
@@ -577,60 +426,35 @@ def main() -> None:
         "short_query_reps": SHORT_QUERY_REPS,
         "machine": _machine_state(),
     }
-    ereps: dict[str, dict] = {}
-    vreps: dict[str, dict] = {}
 
-    if vanilla:
-        spark = _vanilla_session(cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        _warm(spark, queries, sf_dir)
-        # reps land in vreps so rep_detail labels them "vanilla", not
-        # "engine" (round-13 advice: a vanilla-only artifact must not
-        # mislabel its side)
-        timings, errors, vreps = _run_queries(spark, names, queries, sf_dir)
-        spark.stop()
-    elif not compare:
-        spark = _engine_session(cpus)
-        spark.sparkContext.setLogLevel("ERROR")
-        _warm(spark, queries, sf_dir)
-        timings, errors, ereps = _run_queries(spark, names, queries, sf_dir)
-        spark.stop()
-    else:
-        # Interleaved SYMMETRIC compare: engine AND vanilla each live
-        # in their own measurement subprocess, asked back-to-back per
-        # query, and BOTH are recycled to fresh JVMs every
-        # RESPAWN_EVERY queries — in a 90+-query session a single
-        # long-lived JVM accumulates code-cache/GC aging that shows up
-        # as random 2-4x ONE-SIDED per-query outliers (round-6/7
-        # lesson: every full-set "regression" vanished on a clean
-        # subset re-run). Bounded-budget crash respawns are per side.
-        RESPAWN_EVERY = int(os.environ.get("SPARK_GRAFT_BENCH_RESPAWN", "24"))
-
-        eng = _WorkerHandle("engine")
-        van = _WorkerHandle("vanilla")
-        timings, errors = {}, {}
-        vtimings, verrors = {}, {}
-        for i, name in enumerate(names):
-            if i and i % RESPAWN_EVERY == 0:
-                eng.recycle()
-                van.recycle()
-            ans = eng.ask(name)
+    # Interleaved SYMMETRIC measurement: each side lives in its own
+    # worker subprocess, asked back-to-back per query; crash respawns
+    # are budgeted per side.
+    workers = {k: _WorkerHandle(k) for k in kinds}
+    secs: dict[str, dict[str, float]] = {k: {} for k in kinds}
+    errs: dict[str, dict[str, str]] = {k: {} for k in kinds}
+    reps: dict[str, dict[str, dict]] = {k: {} for k in kinds}
+    for i, name in enumerate(names):
+        if i and i % RESPAWN_EVERY == 0:
+            for w in workers.values():
+                w.recycle()
+        for kind, w in workers.items():
+            ans = w.ask(name)
             if "sec" in ans:
-                timings[name] = ans["sec"]
-                ereps[name] = {"t": ans.get("t"), "w": ans.get("w")}
+                secs[kind][name] = ans["sec"]
+                reps[kind][name] = {"t": ans.get("t"), "w": ans.get("w")}
             else:
-                errors[name] = ans["err"]
-            ans = van.ask(name)
-            if "sec" in ans:
-                vtimings[name] = ans["sec"]
-                vreps[name] = {"t": ans.get("t"), "w": ans.get("w")}
-            else:
-                verrors[name] = ans["err"]
-        eng.stop()
-        van.stop()
-        if eng.respawns or van.respawns:
-            result["worker_respawns"] = eng.respawns + van.respawns
+                errs[kind][name] = ans["err"]
+    for w in workers.values():
+        w.stop()
+    respawns = sum(w.respawns for w in workers.values())
+    if respawns:
+        result["worker_respawns"] = respawns
 
+    timings, errors = secs[kinds[0]], errs[kinds[0]]
+    compare = len(kinds) == 2
+    if compare:
+        vtimings, verrors = secs["vanilla"], errs["vanilla"]
         # like-for-like totals: only queries BOTH sides completed
         both = [n for n in names if timings.get(n) and vtimings.get(n)]
         ratios = [vtimings[n] / timings[n] for n in both]
@@ -652,65 +476,23 @@ def main() -> None:
     # class (first-plan spike, single GC outlier, uniform shift)
     # produced any weak median, no manual re-bench needed
     result["rep_detail"] = {
-        n: {
-            **({"engine": ereps[n]} if n in ereps else {}),
-            **({"vanilla": vreps[n]} if n in vreps else {}),
-        }
-        for n in sorted(set(ereps) | set(vreps))
+        n: {k: reps[k][n] for k in kinds if n in reps[k]}
+        for n in sorted(set().union(*reps.values()))
     }
     if errors:
         result["errors"] = errors
     if compare:
-        # >1.0 = engine faster. Ratios are emitted BEST-FIRST so tail
-        # truncation (if it ever happens again) drops the healthy
-        # queries and the weak ones survive.
-        rd = {
-            n: round(vtimings[n] / timings[n], 3)
-            for n in names
-            if timings.get(n) and vtimings.get(n)
-        }
+        # >1.0 = engine faster; best-first in the side file
         result["ratios"] = dict(
-            sorted(rd.items(), key=lambda kv: kv[1], reverse=True)
+            sorted(
+                ((n, round(vtimings[n] / timings[n], 3)) for n in both),
+                key=lambda kv: kv[1],
+                reverse=True,
+            )
         )
-        # End-of-run self-adjudication (worst first, bounded): sub-0.7
-        # rows always queue for fresh JVMs; band rows [0.7, 0.9) queue
-        # only when their engine reps are uniform — a warm-up-shaped
-        # band row whose steady-state ratio is parity self-explains as
-        # "rep-decay" without spending JVMs (round-14 verdict task 3).
-        adjudications, fresh_queue, skipped = _select_suspects(rd, ereps, vreps)
-        if skipped:
-            result["adjudications_skipped"] = skipped
-        if fresh_queue:
-            adjudications.update(_adjudicate(fresh_queue, rd))
-        if adjudications:
-            result["adjudications"] = adjudications
-        if rd:
-            gm = round(math.exp(sum(math.log(r) for r in rd.values()) / len(rd)), 4)
-            worst = sorted(rd.items(), key=lambda kv: kv[1])[:10]
-
-            def _worst_entry(n: str, r: float) -> dict:
-                out = {"q": n, "ratio": r}
-                # sub-0.9 entries carry BOTH sides' raw reps in the
-                # compact line: the driver artifact adjudicates its
-                # own weak rows (round-12 verdict task 2)
-                if r < 0.9 and n in ereps and n in vreps:
-                    out["e"] = [round(x, 2) for x in ereps[n]["t"] or []]
-                    out["v"] = [round(x, 2) for x in vreps[n]["t"] or []]
-                    if ereps[n].get("w") is not None:
-                        out["ew"] = round(ereps[n]["w"], 2)
-                    if vreps[n].get("w") is not None:
-                        out["vw"] = round(vreps[n]["w"], 2)
-                return out
-
-            result["summary"] = {
-                "geomean": gm,
-                "worst": [_worst_entry(n, r) for n, r in worst],
-            }
 
     # Full-precision per-query detail goes to a SIDE file; stdout gets
-    # ONE compact line sized to survive the driver's ~2000-char tail
-    # capture, so BENCH_r{N}.json parses end-to-end (round-9 verdict
-    # item 1: every prior round's artifact had "parsed": null).
+    # ONE compact line of at most LINE_CAP chars.
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
@@ -720,7 +502,6 @@ def main() -> None:
             json.dump(result, fh, indent=1)
     except OSError:
         detail_path = None
-    line_cap = int(os.environ.get("SPARK_GRAFT_BENCH_LINECAP", "1900"))
 
     compact = {
         k: result[k]
@@ -737,8 +518,6 @@ def main() -> None:
             "worker_respawns",
             "short_query_reps",
             "machine",
-            "adjudications",
-            "adjudications_skipped",
         )
         if k in result
     }
@@ -751,42 +530,43 @@ def main() -> None:
             n: e[:120] for n, e in result["vanilla_errors"].items()
         }
 
-    def _line(n_queries: int | None, full_summary: bool = True) -> str:
+    slowest = sorted(timings, key=timings.get, reverse=True)
+    rd = result.get("ratios", {})
+    worst = sorted(rd, key=rd.get)
+
+    def _line(n: int) -> str:
+        """The compact line with the n slowest queries and, in compare
+        mode, the n worst ratios."""
         c = dict(compact)
-        qnames = sorted(timings, key=timings.get, reverse=True)
-        if n_queries is not None and len(qnames) > n_queries:
-            qnames = qnames[:n_queries]
-            c["queries_truncated_to_slowest"] = n_queries
-        c["queries"] = {n: round(timings[n], 2) for n in qnames}
-        if result.get("ratios"):
-            # worst-first here (opposite of the side file): with the
-            # summary these are the entries worth a compact line's bytes
-            rnames = sorted(result["ratios"], key=result["ratios"].get)
-            if n_queries is not None and len(rnames) > n_queries:
-                rnames = rnames[:n_queries]
-            c["ratios_worst_first"] = {n: result["ratios"][n] for n in rnames}
-        if "summary" in result:
-            c["summary"] = result["summary"]
-            if not full_summary:  # last-resort trim: drop rep arrays
-                c["summary"] = {
-                    "geomean": result["summary"]["geomean"],
-                    "worst": [
-                        {"q": w["q"], "ratio": w["ratio"]}
-                        for w in result["summary"]["worst"]
-                    ],
-                }
-        if not full_summary and "adjudications" in c:
-            c["adjudications"] = {
-                n: {k: v for k, v in a.items() if k not in ("e", "v")}
-                for n, a in c["adjudications"].items()
-            }
+        if n < len(slowest):
+            c["queries_truncated_to_slowest"] = n
+        c["queries"] = {q: round(timings[q], 2) for q in slowest[:n]}
+        if rd:
+            c["ratios_worst_first"] = {q: rd[q] for q in worst[:n]}
         return json.dumps(c, separators=(",", ":"))
 
-    for budget, full in ((None, True), (30, True), (12, True), (12, False), (0, False)):
-        line = _line(budget, full)
-        if len(line) <= line_cap:
-            break
+    # the largest n whose line fits the cap (line length grows with n)
+    n = len(slowest)
+    line = _line(n)
+    while n and len(line) > LINE_CAP:
+        n -= 1
+        line = _line(n)
     print(line)
+
+
+def _default_names() -> list[str]:
+    """TPC-H q1-q22 + SSB 1.1-4.3 (BASELINE.md's promised sets) + the
+    TPC-DS patterns (the reference's Decision Support Benchmark2
+    analog) + the LLM-pipeline representatives."""
+    from gazelle_plugin_spark.plans import all_queries
+
+    queries = all_queries()
+    return (
+        sorted(n for n in queries if n.startswith("q"))
+        + sorted(n for n in queries if n.startswith("ssb"))
+        + sorted(n for n in queries if n.startswith("ds_"))
+        + PIPELINE_BENCH
+    )
 
 
 if __name__ == "__main__":

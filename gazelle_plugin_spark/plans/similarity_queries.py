@@ -70,6 +70,16 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.withColumn("n2", _dot("embedding", "embedding"))
 
 
+def _scored_centroid(c: Column) -> Column:
+    """One (c_label, ce, cn2) centroid struct scored against the corpus
+    row: (rounded cosine, negated label), so ``array_max`` over the
+    centroids picks the best cosine, ties to the lowest label."""
+    cos = F.round(
+        _dot("embedding", c["ce"]) / F.sqrt(F.col("n2") * c["cn2"]), SIM_DECIMALS
+    )
+    return F.struct(cos.alias("cos"), (-c["c_label"]).alias("negl"))
+
+
 def _nearest_centroid(v: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid assignment with ZERO shuffle: collapse the k
     centroids (c_label, ce) into ONE broadcast row holding an array of
@@ -90,19 +100,7 @@ def _nearest_centroid(v: DataFrame, cent: DataFrame) -> DataFrame:
         F.collect_list(F.struct("c_label", "ce", "cn2")).alias("cents")
     )
 
-    def _scored(c):
-        prods = F.zip_with(
-            F.col("embedding"), c["ce"],
-            lambda x, y: x.cast("double") * y.cast("double"),
-        )
-        cos = F.round(
-            F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
-            / F.sqrt(F.col("n2") * c["cn2"]),
-            SIM_DECIMALS,
-        )
-        return F.struct(cos.alias("cos"), (-c["c_label"]).alias("negl"))
-
-    best = F.array_max(F.transform(F.col("cents"), _scored))
+    best = F.array_max(F.transform(F.col("cents"), _scored_centroid))
     return (
         v.join(F.broadcast(cents1))
         .withColumn("c_label", -best.getField("negl"))
@@ -129,19 +127,7 @@ def _nearest_centroid_grouped(
         .agg(F.collect_list(F.struct("c_label", "ce", "cn2")).alias("cents"))
     )
 
-    def _scored(c):
-        prods = F.zip_with(
-            F.col("embedding"), c["ce"],
-            lambda x, y: x.cast("double") * y.cast("double"),
-        )
-        cos = F.round(
-            F.aggregate(prods, F.lit(0.0), lambda acc, p: acc + p)
-            / F.sqrt(F.col("n2") * c["cn2"]),
-            SIM_DECIMALS,
-        )
-        return F.struct(cos.alias("cos"), (-c["c_label"]).alias("negl"))
-
-    best = F.array_max(F.transform(F.col("cents"), _scored))
+    best = F.array_max(F.transform(F.col("cents"), _scored_centroid))
     return (
         v.join(F.broadcast(cents), group_col, "left")
         .withColumn(

@@ -103,7 +103,10 @@ def plan_signature(df: DataFrame) -> dict[str, Any]:
 
 
 def compute_all(spark, sf_dir: str) -> dict[str, dict[str, Any]]:
-    """Signature for every registered query (plan-only, nothing runs)."""
+    """Signature for every registered query. No query's final plan is
+    executed, but each builder still runs the eager jobs it starts before
+    returning its DataFrame (e.g. emb_semdedup's ``count()`` and the
+    connected-components convergence loop), so this is not job-free."""
     from gazelle_plugin_spark.plans import all_queries
 
     out = {}

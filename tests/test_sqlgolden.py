@@ -23,13 +23,14 @@ import pytest
 
 from gazelle_plugin_spark.plans import sqlgolden as g
 
-pytestmark = [
-    pytest.mark.skipif(
-        not g.corpus_available(),
-        reason="reference sql-tests corpus not present on this machine",
-    ),
-    pytest.mark.conformance,
-]
+pytestmark = pytest.mark.conformance
+
+#: The replay tests need the reference corpus; the pure-function units
+#: at the end of this module do not, and run everywhere.
+needs_corpus = pytest.mark.skipif(
+    not g.corpus_available(),
+    reason="reference sql-tests corpus not present on this machine",
+)
 
 #: Tranche 1 (round 9): relational core + subquery family.  These also
 #: run the DuckDB cross-check (dialect-portable subset).
@@ -739,13 +740,18 @@ def _session_for(spark, rel):
     return spark.newSession() if rel in g.DDL_FILES or rel == "udaf" else spark
 
 
-#: Statements that touch the SHARED catalog — persistent tables,
-#: databases, functions, global temp views. Files containing any of
-#: these must replay serially (their DDL collides across concurrent
-#: sessions); everything else only creates session-local temp views /
-#: UDFs and is safe in an isolated session per file.
+#: Statements that touch the SHARED catalog — persistent tables and
+#: views, databases, functions, table writes, the shared cache, global
+#: temp views. Files containing any of these must replay serially
+#: (their DDL collides across concurrent sessions); everything else
+#: only creates session-local temp views / UDFs and is safe in an
+#: isolated session per file. DROP VIEW cannot tell a temp view from a
+#: persistent one, so it always counts.
 _CATALOG_DDL = re.compile(
-    r"\bCREATE\s+(?:OR\s+REPLACE\s+)?(?:TABLE|DATABASE|SCHEMA|FUNCTION)\b"
+    r"\bCREATE\s+(?:OR\s+REPLACE\s+)?(?:TABLE|VIEW|DATABASE|SCHEMA|FUNCTION)\b"
+    r"|\b(?:DROP|ALTER)\s+(?:TABLE|VIEW|DATABASE|SCHEMA)\b"
+    r"|\bINSERT\s+(?:INTO|OVERWRITE)\b"
+    r"|\b(?:UN)?CACHE\s+(?:LAZY\s+)?TABLE\b"
     r"|\bGLOBAL\s+TEMP\w*\b",
     re.I,
 )
@@ -803,6 +809,7 @@ def golden_results(spark):
     return get
 
 
+@needs_corpus
 @pytest.mark.parametrize("rel", FILES)
 def test_golden_file(golden_results, rel):
     results = golden_results(rel)
@@ -815,6 +822,7 @@ def test_golden_file(golden_results, rel):
     )
 
 
+@needs_corpus
 def test_golden_corpus_counts(golden_results):
     """Pin the sweep's aggregate shape so a silently-shrinking corpus
     or an over-eager skip list is caught: >=4300 value-compared
@@ -837,6 +845,7 @@ def test_golden_corpus_counts(golden_results):
     assert skipped <= 250, skipped
 
 
+@needs_corpus
 def test_registered_file_count():
     """One authoritative corpus-surface number (round-9 verdict item 6
     pinned COVERAGE.md/SCALE.md/README to this count): 194 golden
@@ -851,6 +860,7 @@ def test_registered_file_count():
     assert len(FILES) == len(set(FILES))
 
 
+@needs_corpus
 def test_duckdb_cross_check(spark):
     """Independent-engine second opinion: every portable SELECT in the
     corpus re-runs on DuckDB over Arrow-exported views and must match
@@ -865,6 +875,41 @@ def test_duckdb_cross_check(spark):
         assert not failures, f"{rel}: {failures[:3]}"
         total_checked += checked
     assert total_checked >= 300, total_checked
+
+
+# ------------------------------------------------- parallel-replay gate
+
+
+@pytest.mark.parametrize(
+    "sql, shared",
+    [
+        ("CREATE TABLE t (a INT) USING parquet", True),
+        ("create or replace view v as select 1", True),
+        ("CREATE VIEW v AS SELECT 1", True),
+        ("CREATE DATABASE showdb", True),
+        ("CREATE FUNCTION f AS 'x.Y'", True),
+        ("CREATE GLOBAL TEMP VIEW g AS SELECT 1", True),
+        ("DROP TABLE IF EXISTS t", True),
+        ("DROP VIEW v", True),
+        ("DROP DATABASE showdb CASCADE", True),
+        ("ALTER TABLE t ADD COLUMNS (b INT)", True),
+        ("ALTER VIEW v AS SELECT 2", True),
+        ("ALTER DATABASE showdb SET DBPROPERTIES ('a'='b')", True),
+        ("INSERT INTO t VALUES (1)", True),
+        ("INSERT OVERWRITE TABLE t SELECT 1", True),
+        ("CACHE TABLE t", True),
+        ("CACHE LAZY TABLE c AS SELECT 1", True),
+        ("UNCACHE TABLE t", True),
+        ("CREATE TEMP VIEW v AS SELECT 1", False),
+        ("CREATE OR REPLACE TEMPORARY VIEW v AS SELECT 1", False),
+        ("CREATE TEMPORARY FUNCTION f AS 'x.Y'", False),
+        ("SELECT * FROM t WHERE dropped_table = 1", False),
+    ],
+)
+def test_catalog_ddl_classifies_statements(sql, shared):
+    """Files with a shared-catalog statement replay serially; only
+    session-local DDL may join the concurrent pool."""
+    assert bool(_CATALOG_DDL.search(sql)) is shared
 
 
 # ------------------------------------------------- DDL-normalizer units

@@ -32,61 +32,6 @@ def test_sf1_report_disjoint_sides(tmp_path, monkeypatch, capsys):
     assert "uncompared" in out
 
 
-def test_bench_adjudicate_classifies_verdicts(monkeypatch):
-    """bench._adjudicate re-measures suspects and classifies: fresh
-    ratio >= 0.9 -> machine-state, < threshold -> confirmed-weak, else
-    borderline; a side that errors records err instead of a verdict.
-    Pinned with a fake worker so no JVMs spawn."""
-    import bench
-
-    fresh = {
-        ("engine", "qa"): {"sec": 1.0, "t": [1.0, 1.0]},
-        ("vanilla", "qa"): {"sec": 1.2, "t": [1.2, 1.2]},
-        ("engine", "qb"): {"sec": 2.0, "t": [2.0, 2.0]},
-        ("vanilla", "qb"): {"sec": 1.0, "t": [1.0, 1.0]},
-        ("engine", "qc"): {"sec": 1.0, "t": [1.0]},
-        ("vanilla", "qc"): {"sec": 0.8, "t": [0.8]},
-        ("engine", "qd"): {"err": "boom"},
-        ("vanilla", "qd"): {"sec": 1.0, "t": [1.0]},
-    }
-
-    class FakeHandle:
-        def __init__(self, kind):
-            self.kind = kind
-
-        def ask(self, name):
-            return dict(fresh[(self.kind, name)])
-
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(bench, "_WorkerHandle", FakeHandle)
-    rd = {"qa": 0.5, "qb": 0.6, "qc": 0.65, "qd": 0.69}
-    out = bench._adjudicate(list(rd), rd)
-    assert out["qa"]["verdict"] == "machine-state" and out["qa"]["fresh_ratio"] == 1.2
-    assert out["qb"]["verdict"] == "confirmed-weak" and out["qb"]["fresh_ratio"] == 0.5
-    assert out["qc"]["verdict"] == "borderline"
-    assert "err" in out["qd"] and "verdict" not in out["qd"]
-    # original interleaved ratio is preserved for the artifact reader
-    assert out["qa"]["ratio"] == 0.5
-
-    # like-for-like reps: one side's SHORT_QUERY_REPS extension (extra
-    # warmed reps) must not skew the ratio — compare medians over the
-    # same number of LEADING reps
-    fresh[("engine", "qe")] = {"sec": 1.0, "t": [2.0, 2.0, 2.0, 1.0, 1.0]}
-    fresh[("vanilla", "qe")] = {"sec": 2.0, "t": [2.0, 2.0, 2.0]}
-    out = bench._adjudicate(["qe"], {"qe": 0.5})
-    assert out["qe"]["fresh_ratio"] == 1.0  # not 2.0/1.0 from the medians
-
-    # a raised threshold must never let 'machine-state' swallow a
-    # fresh ratio still under it (confirmed-weak wins the precedence)
-    monkeypatch.setattr(bench, "ADJUDICATE_UNDER", 0.95)
-    fresh[("engine", "qf")] = {"sec": 1.0, "t": [1.0]}
-    fresh[("vanilla", "qf")] = {"sec": 0.92, "t": [0.92]}
-    out = bench._adjudicate(["qf"], {"qf": 0.5})
-    assert out["qf"]["verdict"] == "confirmed-weak"
-
-
 def test_sf1_report_flags_degraded(tmp_path, monkeypatch, capsys):
     a = tmp_path / "sf1.json"
     b = tmp_path / "sf01.json"
@@ -97,76 +42,6 @@ def test_sf1_report_flags_degraded(tmp_path, monkeypatch, capsys):
     out = capsys.readouterr().out
     assert '{"flagged": ["q1"]}' in out
     assert "geomean" in out
-
-
-def test_bench_rep_shape_classifier_boundaries():
-    """Pin the warm-up-shape classifier (round-14 verdict task 3):
-    decaying iff first timed rep >= 1.25x the median of the rest;
-    short arrays carry no shape evidence and stay adjudicable."""
-    import bench
-
-    # r14's ds_month_flag_pivot engine reps: the motivating example
-    assert bench._reps_decaying([4.99, 3.91, 2.89])
-    # exactly at the factor boundary counts as decaying (>=)
-    assert bench._reps_decaying([1.25, 1.0, 1.0])
-    assert not bench._reps_decaying([1.24, 1.0, 1.0])
-    # uniform gap = not decaying = needs fresh JVMs
-    assert not bench._reps_decaying([2.0, 2.0, 2.0])
-    # no shape evidence: empty / single-rep arrays
-    assert not bench._reps_decaying(None)
-    assert not bench._reps_decaying([3.0])
-
-    # steady ratio drops the first rep on BOTH sides, like-for-like:
-    # median(2.73, 2.87) / median(3.91, 2.89). With r14's real
-    # ds_month_flag_pivot arrays this is 0.824 < 0.9, so that row
-    # would still QUEUE for fresh JVMs — decay alone never excuses a
-    # row whose steady state is below the band.
-    assert bench._steady_ratio([4.99, 3.91, 2.89], [3.83, 2.73, 2.87]) == round(
-        2.80 / 3.4, 3
-    )
-    assert bench._steady_ratio([1.0], [1.0, 1.0]) is None
-
-
-def test_bench_select_suspects_band_and_cap(monkeypatch):
-    """The adjudication blind band is closed: [0.7, 0.9) rows with
-    uniform engine reps queue for fresh JVMs; warm-up-shaped band rows
-    with parity steady-state self-explain as rep-decay; sub-0.7 rows
-    always queue; overflow past ADJUDICATE_MAX is RETURNED as skipped,
-    never silently dropped (round-14 ADVICE item 1)."""
-    import bench
-
-    monkeypatch.setattr(bench, "ADJUDICATE_MAX", 2)
-    rd = {
-        "low1": 0.5,          # sub-0.7: always queue (worst first)
-        "low2": 0.65,         # sub-0.7: queue -> cap reached
-        "band_uniform": 0.8,  # uniform reps: queue -> skipped past cap
-        "band_decay": 0.85,   # warm-up shape + parity steady: explained
-        "band_decay_still_weak": 0.85,  # decay but steady < 0.9: queue
-        "healthy": 1.1,       # over the band: untouched
-    }
-    ereps = {
-        "band_uniform": {"t": [2.0, 2.0, 2.0]},
-        "band_decay": {"t": [4.99, 3.91, 2.89]},
-        "band_decay_still_weak": {"t": [4.0, 2.0, 2.0]},
-        "healthy": {"t": [1.0, 1.0]},
-    }
-    vreps = {
-        "band_uniform": {"t": [1.6, 1.6, 1.6]},
-        "band_decay": {"t": [3.83, 3.2, 3.3]},
-        "band_decay_still_weak": {"t": [1.5, 1.5, 1.5]},
-        "healthy": {"t": [1.1, 1.1]},
-    }
-    explained, queue, skipped = bench._select_suspects(rd, ereps, vreps)
-    assert list(explained) == ["band_decay"]
-    assert explained["band_decay"]["verdict"] == "rep-decay"
-    assert explained["band_decay"]["steady_ratio"] >= 0.9
-    assert queue == ["low1", "low2"]
-    assert skipped == ["band_uniform", "band_decay_still_weak"]
-
-    # a band row with NO rep arrays (e.g. worker err on one side's
-    # reps) has no shape evidence -> queues rather than self-explains
-    explained, queue, _ = bench._select_suspects({"bare": 0.8}, {}, {})
-    assert not explained and queue == ["bare"]
 
 
 def test_bench_rejects_unknown_flags(monkeypatch, capsys):
@@ -191,6 +66,127 @@ def test_bench_rejects_unknown_flags(monkeypatch, capsys):
     with pytest.raises(SystemExit) as exc:
         bench.main()
     assert exc.value.code == 2
+
+
+_R16 = os.path.join(
+    os.path.dirname(_TOOLS), "measurements", "bench_detail_r16_sf01.json"
+)
+
+
+def _fake_bench(monkeypatch, tmp_path, capsys, *flags, detail="d.json", slower=None):
+    """Drive bench.main() over the 96 queries of the committed r16
+    sf0.1 side file with fake workers that answer that run's per-query
+    medians and rep arrays, so no JVM starts. ``slower`` multiplies
+    named engine medians. Returns (stdout, side file, worker kinds)."""
+    import bench
+
+    r16 = json.load(open(_R16))
+    secs = {"engine": dict(r16["queries"]), "vanilla": r16["vanilla_queries"]}
+    for name, factor in (slower or {}).items():
+        secs["engine"][name] *= factor
+    kinds = []
+
+    class FakeHandle:
+        respawns = 0
+
+        def __init__(self, kind):
+            self.kind = kind
+            kinds.append(kind)
+
+        def ask(self, name):
+            reps = r16["rep_detail"][name][self.kind]
+            return {"name": name, "sec": secs[self.kind][name], **reps}
+
+        def recycle(self):
+            pass
+
+        def stop(self):
+            pass
+
+    path = tmp_path / detail
+    monkeypatch.setattr(bench, "_WorkerHandle", FakeHandle)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(path))
+    monkeypatch.setattr(sys, "argv", ["bench.py", *flags, *sorted(r16["queries"])])
+    bench.main()
+    return capsys.readouterr().out, json.load(open(path)), kinds
+
+
+def test_bench_compare_line_from_fake_workers(tmp_path, monkeypatch, capsys):
+    """Compare mode: the side file carries every query and ratio and
+    every key it had in r16 except the removed adjudication/summary
+    blocks; stdout is ONE line within the cap that keeps the contract
+    keys plus the N slowest queries and N worst ratios for the largest
+    N that fits (r16's five-level trim kept only 12)."""
+    import pytest
+
+    import bench
+
+    r16 = json.load(open(_R16))
+    names = set(r16["queries"])
+    assert len(names) == 96
+    out, detail, kinds = _fake_bench(monkeypatch, tmp_path, capsys)
+    assert kinds == ["engine", "vanilla"]
+    assert set(detail["queries"]) == names and set(detail["ratios"]) == names
+    assert detail["ratios"] == r16["ratios"]
+    assert detail["geomean_speedup_vs_vanilla"] == pytest.approx(
+        r16["geomean_speedup_vs_vanilla"], abs=1e-4
+    )
+    # r16's keys minus its two adjudication blocks and its summary
+    assert set(detail) < set(r16) and len(set(r16) - set(detail)) == 3
+    assert not any(k.startswith("adjudications") for k in detail)
+
+    lines = out.splitlines()
+    assert len(lines) == 1 and len(lines[0]) <= bench.LINE_CAP
+    line = json.loads(lines[0])
+    for key in ("metric", "unit", "sf", "value", "queries", "geomean_speedup_vs_vanilla"):
+        assert key in line, key
+    n = len(line["queries"])
+    assert n >= 35 and len(line["ratios_worst_first"]) == n
+    assert line["queries_truncated_to_slowest"] == n
+    secs, ratios = detail["queries"], detail["ratios"]
+    kept = set(line["queries"])
+    assert min(secs[q] for q in kept) >= max(secs[q] for q in names - kept)
+    kept_r = list(line["ratios_worst_first"])
+    assert [ratios[q] for q in kept_r] == sorted(ratios.values())[:n]
+
+
+def test_bench_one_side_modes_ask_only_their_worker(tmp_path, monkeypatch, capsys):
+    """--no-compare and --vanilla go through the same worker path and
+    start only their own side; a vanilla-only run labels its reps
+    "vanilla" in rep_detail (round-13 advice), and neither emits a
+    geomean or ratios."""
+    r16 = json.load(open(_R16))
+    for flag, kind, medians in (
+        ("--no-compare", "engine", r16["queries"]),
+        ("--vanilla", "vanilla", r16["vanilla_queries"]),
+    ):
+        out, detail, kinds = _fake_bench(monkeypatch, tmp_path, capsys, flag)
+        assert kinds == [kind]
+        assert detail["queries"] == medians
+        assert all(list(d) == [kind] for d in detail["rep_detail"].values())
+        assert len(detail["rep_detail"]) == 96
+        line = json.loads(out)
+        assert "geomean_speedup_vs_vanilla" not in line
+        assert "ratios_worst_first" not in line and "ratios" not in detail
+
+
+def test_sf1_report_reads_bench_side_files(tmp_path, monkeypatch, capsys):
+    """tools/sf1_report.py renders two bench.py side files: it reads
+    their ``ratios`` and ``queries`` keys, so this pins that contract."""
+    _, a, _ = _fake_bench(
+        monkeypatch, tmp_path, capsys, detail="sf1.json", slower={"q1": 2.0}
+    )
+    _, b, _ = _fake_bench(monkeypatch, tmp_path, capsys, detail="sf01.json")
+    monkeypatch.setattr(
+        sys, "argv", ["sf1_report.py", str(tmp_path / "sf1.json"), str(tmp_path / "sf01.json")]
+    )
+    _load("sf1_report").main()
+    out = capsys.readouterr().out
+    rows = [r for r in out.splitlines() if r.startswith("| ") and not r.startswith("| query")]
+    assert len(rows) == 96
+    assert rows[0].startswith("| q1 |") and "DEGRADED" in rows[0]
+    assert out.rstrip().endswith('{"flagged": ["q1"]}')
+    assert "geomean over the 96 common queries" in out
 
 
 def test_scale_bench_growth_report_refuses_vacuous():
