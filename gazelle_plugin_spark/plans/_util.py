@@ -20,6 +20,19 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
+def shuffle_width(spark: SparkSession) -> int:
+    """Explicit partition count for plan-side ``repartition`` calls and
+    the cogrouped numpy kernels' bucket width: the session's
+    ``spark.sql.shuffle.partitions`` (the same scale knob every other
+    exchange uses), at least 1, falling back to ``defaultParallelism``
+    when the conf is non-numeric (e.g. ``auto`` on platforms that let a
+    resource manager size it)."""
+    try:
+        return max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    except (TypeError, ValueError):
+        return max(1, spark.sparkContext.defaultParallelism)
+
+
 def dec(col: str | Column, prec: int = 12, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(f"decimal({prec},{scale})")

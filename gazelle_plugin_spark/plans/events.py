@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gazelle_plugin_spark.plans import query
-from gazelle_plugin_spark.plans._util import dec, t
+from gazelle_plugin_spark.plans._util import dec, shuffle_width, t
 
 #: session gap threshold: 30 minutes, in microseconds
 SESSION_GAP_US = 30 * 60 * 1_000_000
@@ -996,11 +996,10 @@ def events_gapfill(spark, sf_dir):
     # back on the AQE-coalesced exchange); (user_id, h0) forces a
     # user-specified-width exchange AQE leaves alone, and the explode
     # runs on all cores.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     grid = (
         hourly.groupBy("user_id")
         .agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-        .repartition(width, "user_id", "h0")
+        .repartition(shuffle_width(spark), "user_id", "h0")
         .select(
             "user_id",
             F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("h"),

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from gazelle_plugin_spark.operators.skew import cap_bucket
 from gazelle_plugin_spark.plans import query
-from gazelle_plugin_spark.plans._util import t
+from gazelle_plugin_spark.plans._util import shuffle_width, t
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 10
@@ -70,13 +70,70 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.withColumn("n2", _dot("embedding", "embedding"))
 
 
+def _cosine(
+    a: str | Column, b: str | Column, a_n2: str | Column, b_n2: str | Column
+) -> Column:
+    """Cosine of two float arrays given their squared norms, rounded to
+    ``SIM_DECIMALS`` (the rounding every ranking and threshold uses)."""
+    a_n2 = F.col(a_n2) if isinstance(a_n2, str) else a_n2
+    b_n2 = F.col(b_n2) if isinstance(b_n2, str) else b_n2
+    return F.round(_dot(a, b) / F.sqrt(a_n2 * b_n2), SIM_DECIMALS)
+
+
+def _queries(v: DataFrame, *extra: Column) -> DataFrame:
+    """The bounded query set (``vec_id < N_QUERIES``) of a
+    :func:`_vectors` frame as (q_id, *extra, qe, qn2)."""
+    return v.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        *extra,
+        F.col("embedding").alias("qe"),
+        F.col("n2").alias("qn2"),
+    )
+
+
+def _rank_top_k(scored: DataFrame) -> DataFrame:
+    """Per-query top-``TOP_K`` of a (q_id, vec_id, cos_sim, ...) frame:
+    rank ``rk`` by cosine descending, ties to the lowest vec_id (the
+    WindowGroupLimit top-k path), ordered by (q_id, rk)."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+        .orderBy("q_id", "rk")
+    )
+
+
+def _centroids(
+    df: DataFrame, key: str, emb: str = "embedding", out: str = "c_label"
+) -> DataFrame:
+    """Coordinate-mean centroid of ``emb`` per ``key`` group as
+    (``out``, ce): each dimension's mean is rounded to 6 decimals for
+    cross-engine determinism, and the dimensions fold back into an
+    array in position order. The posexplode puts the mean at
+    (key, dim) grain, so the aggregate combines map-side."""
+    return (
+        df.select(key, F.posexplode(emb).alias("pos", "x"))
+        .groupBy(key, "pos")
+        .agg(F.round(F.avg(F.col("x").cast("double")), SIM_DECIMALS).alias("c"))
+        .groupBy(key)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
+        .select(F.col(key).alias(out), F.expr("transform(pc, p -> p.c)").alias("ce"))
+    )
+
+
+def _doubles(df: DataFrame) -> DataFrame:
+    """(vec_id, e): an embeddings frame with its float array widened to
+    double, the input of the exact-decimal distance builders."""
+    return df.select(
+        "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e")
+    )
+
+
 def _scored_centroid(c: Column) -> Column:
     """One (c_label, ce, cn2) centroid struct scored against the corpus
     row: (rounded cosine, negated label), so ``array_max`` over the
     centroids picks the best cosine, ties to the lowest label."""
-    cos = F.round(
-        _dot("embedding", c["ce"]) / F.sqrt(F.col("n2") * c["cn2"]), SIM_DECIMALS
-    )
+    cos = _cosine("embedding", c["ce"], "n2", c["cn2"])
     return F.struct(cos.alias("cos"), (-c["c_label"]).alias("negl"))
 
 
@@ -169,27 +226,13 @@ def emb_topk_cosine(spark, sf_dir):
     query set is broadcast (bounded), the corpus streams once; ranking
     reuses the WindowGroupLimit top-k path."""
     v = _vectors(spark, sf_dir)
-    q = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qe"),
-            F.col("n2").alias("qn2"),
-        )
-    )
-    cos = F.round(
-        _dot("qe", "embedding") / F.sqrt(F.col("qn2") * F.col("n2")), SIM_DECIMALS
-    )
+    q = _queries(v)
+    cos = _cosine("qe", "embedding", "qn2", "n2")
     scored = (
         v.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .orderBy("q_id", "rk")
-    )
+    return _rank_top_k(scored)
 
 
 def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,25 +317,13 @@ def emb_lsh_topk(spark, sf_dir):
         .select("q_id", "vec_id")
         .distinct()
     )
-    q = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"),
-                F.col("n2").alias("qn2"))
-    )
-    cos = F.round(
-        _dot("qe", "embedding") / F.sqrt(F.col("qn2") * F.col("n2")), SIM_DECIMALS
-    )
+    cos = _cosine("qe", "embedding", "qn2", "n2")
     scored = (
-        cand.join(F.broadcast(q), "q_id")
+        cand.join(F.broadcast(_queries(v)), "q_id")
         .join(v, "vec_id")
         .select("q_id", "vec_id", cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .orderBy("q_id", "rk")
-    )
+    return _rank_top_k(scored)
 
 
 #: emb_neardup_pairs verify threshold (the synthetic corpus has no
@@ -344,7 +375,7 @@ def emb_neardup_pairs(spark, sf_dir):
                   F.col("n2").alias("na"))
     vb = v.select(F.col("vec_id").alias("v2"), F.col("embedding").alias("eb"),
                   F.col("n2").alias("nb"))
-    cos = F.round(_dot("ea", "eb") / F.sqrt(F.col("na") * F.col("nb")), SIM_DECIMALS)
+    cos = _cosine("ea", "eb", "na", "nb")
     return (
         cand.join(va, "v1")
         .join(vb, "v2")
@@ -377,6 +408,37 @@ _SQL_ASSIGN = f"""
     FROM v CROSS JOIN cent c
   ) WHERE rk = 1
 """
+
+
+def _ivf_probe(spark: SparkSession, v: DataFrame):
+    """IVF build and probe over a :func:`_vectors` frame, shared by
+    emb_ivf_search and emb_ivfpq_search. Returns:
+
+    - ``assign`` (vec_id, c_label): every corpus vector's nearest label
+      centroid, hash-spread on vec_id so the per-candidate scoring
+      downstream runs shuffle-width-parallel instead of riding the
+      scan's few input splits;
+    - ``q``: the query set (:func:`_queries`);
+    - ``probes`` (q_id, c_label): each query's ``N_PROBE`` nearest
+      cells, ties to the lowest label.
+    """
+    cent = _centroids(v, "label")
+    assign = (
+        _nearest_centroid(v, cent)
+        .select("vec_id", "c_label")
+        .repartition(shuffle_width(spark), "vec_id")
+    )
+    q = _queries(v)
+    cos_qc = _cosine("qe", "ce", "qn2", _dot("ce", "ce"))
+    w_probe = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "c_label")
+    probes = (
+        q.join(F.broadcast(cent))
+        .select("q_id", "c_label", cos_qc.alias("cos_sim"))
+        .withColumn("rk", F.row_number().over(w_probe))
+        .filter(F.col("rk") <= N_PROBE)
+        .select("q_id", "c_label")
+    )
+    return assign, q, probes
 
 
 @query(
@@ -423,49 +485,9 @@ def emb_ivf_search(spark, sf_dir):
     assignment is a build-time linear pass, and the centroid set is
     broadcast everywhere."""
     v = _vectors(spark, sf_dir)
-    # build: centroids + corpus assignment (same derivation as
-    # emb_centroid_assign, kept inline so the query is self-contained)
-    dims = v.select("label", F.posexplode("embedding").alias("pos", "x"))
-    cent = (
-        dims.groupBy("label", "pos")
-        .agg(F.round(F.avg(F.col("x").cast("double")), SIM_DECIMALS).alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.expr("transform(pc, p -> p.c)").alias("ce"),
-        )
-    )
-    # Hash-spread the assignment on vec_id so the per-candidate cosine
-    # in the probe join below runs shuffle-width-parallel instead of
-    # riding the scan's few input splits (same discipline as
-    # emb_semdedup's pair join).
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assign = (
-        _nearest_centroid(v, cent)
-        .select("vec_id", "c_label")
-        .repartition(width, "vec_id")
-    )
-    # probe: nearest N_PROBE centroids per query
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    cos_qc = F.round(
-        _dot("qe", "ce") / F.sqrt(F.col("qn2") * _dot("ce", "ce")), SIM_DECIMALS
-    )
-    w_probe = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "c_label")
-    probes = (
-        q.join(F.broadcast(cent))
-        .select("q_id", "c_label", cos_qc.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= N_PROBE)
-        .select("q_id", "c_label")
-    )
+    assign, q, probes = _ivf_probe(spark, v)
     # search: score only probed buckets
-    cos_qv = F.round(
-        _dot("qe", "embedding") / F.sqrt(F.col("qn2") * F.col("n2")), SIM_DECIMALS
-    )
+    cos_qv = _cosine("qe", "embedding", "qn2", "n2")
     scored = (
         probes.join(assign, "c_label")
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -473,12 +495,7 @@ def emb_ivf_search(spark, sf_dir):
         .join(F.broadcast(q), "q_id")
         .select("q_id", "vec_id", cos_qv.alias("cos_sim"))
     )
-    w_rank = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= TOP_K)
-        .orderBy("q_id", "rk")
-    )
+    return _rank_top_k(scored)
 
 
 @query(
@@ -519,21 +536,8 @@ def emb_centroid_assign(spark, sf_dir):
     confusion counts. At scale the centroid set is tiny and broadcast;
     assignment is one linear pass."""
     v = _vectors(spark, sf_dir)
-    dims = v.select("label", F.posexplode("embedding").alias("pos", "x"))
-    cent = (
-        dims.groupBy("label", "pos")
-        .agg(F.round(F.avg(F.col("x").cast("double")), SIM_DECIMALS).alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.expr("transform(pc, p -> p.c)").alias("ce"),
-        )
-    )
-    cos = F.round(
-        _dot("embedding", "ce") / F.sqrt(F.col("n2") * _dot("ce", "ce")),
-        SIM_DECIMALS,
-    )
+    cent = _centroids(v, "label")
+    cos = _cosine("embedding", "ce", "n2", _dot("ce", "ce"))
     scored = v.join(F.broadcast(cent)).select(
         "vec_id", "label", "c_label", cos.alias("cos_sim")
     )
@@ -703,9 +707,7 @@ def emb_kmeans(spark, sf_dir):
     (k x dims) partial sums. A production run adds rounds (driver
     loop, localCheckpoint every few rounds like connected_components)
     and k-means|| init; the per-round dataflow is exactly this."""
-    v = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e")
-    )
+    v = _doubles(t(spark, sf_dir, "embeddings"))
     init = v.filter(F.col("vec_id") < KM_K).select(
         F.col("vec_id").alias("cl"), F.col("e").alias("ce")
     )
@@ -720,16 +722,7 @@ def emb_kmeans(spark, sf_dir):
             .select("vec_id", "cl", "e", "d2")
         )
 
-    a0 = assign(init)
-    cent1 = (
-        a0.select("cl", F.posexplode("e").alias("pos", "x"))
-        .groupBy("cl", "pos")
-        .agg(F.round(F.avg("x"), 6).alias("c"))
-        .groupBy("cl")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select("cl", F.expr("transform(pc, p -> p.c)").alias("ce"))
-    )
-    a1 = assign(cent1)
+    a1 = assign(_centroids(assign(init), "cl", emb="e", out="cl"))
     return (
         a1.groupBy("cl")
         .agg(
@@ -746,19 +739,6 @@ def emb_kmeans(spark, sf_dir):
 PQ_M = 4
 PQ_SUB_DIM = 16
 PQ_K = 8
-
-
-def _shuffle_width(spark) -> int:
-    """Bucket width for the cogrouped numpy kernels: the session's
-    ``spark.sql.shuffle.partitions`` (so the kernel fan-out tracks the
-    same scale knob every other exchange uses — no local[32]
-    hard-coding), falling back to ``defaultParallelism`` when the conf
-    is non-numeric (e.g. ``auto`` on platforms that let a resource
-    manager size it; r15 ADVICE)."""
-    try:
-        return max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
-    except (TypeError, ValueError):
-        return max(1, spark.sparkContext.defaultParallelism)
 
 
 def _round8_int64(v):
@@ -876,24 +856,66 @@ def _argmax_centroid(rows_pdf, cand_pdf):
     return lbl[num.argmax(axis=1)]
 
 
-def _route_group(rows_pdf, cand_pdf):
-    """Cogroup kernel for the COARSE routing pass: emit every corpus
-    row with its routing group ``g`` (nearest coarse centroid).
+#: pandas dtype of each type a kernel schema declares (the typed empty
+#: output of :func:`_bucket_cogroup`)
+_KERNEL_DTYPES = {
+    "long": "int64",
+    "int": "int32",
+    "double": "float64",
+    "array<float>": "object",
+}
 
-    The empty-rows branch (a bucket holding only candidate rows —
-    reachable whenever the session's shuffle width exceeds the kernel
-    bucket width, e.g. vanilla's 200 partitions vs the engine's 32)
-    must keep the INPUT frame's Arrow-given dtypes: a bare
-    ``pd.DataFrame({col: []})`` defaults every column to float64 and
-    pyarrow cannot convert an empty float64 column to the declared
-    ``array<float>`` output type (NumPyConverter error — found by the
-    r16 sf1 vanilla bench run, pinned in tests/test_pipelines.py)."""
+
+def _bucket_cogroup(spark, rows, cand, kernel, schema, width=None, key=()):
+    """Run the numpy cogroup ``kernel(rows_pdf, cand_pdf)`` over every
+    ``rows`` bucket: ``rows`` cross ONE fixed-width exchange bucketed by
+    (``key``, ``pmod(vec_id, width)``), ``width`` defaulting to
+    :func:`shuffle_width`; the small ``cand`` side replicates to every
+    bucket of its ``key`` through a broadcast crossJoin, the cogroup
+    analog of a broadcast join (optimization guide §4.2). The kernel
+    replaces O(|rows| x |cand|) interpreted zip_with/aggregate folds
+    with numpy at memory bandwidth.
+
+    A bucket key present only on the candidate side (a bucket the rows
+    leave empty, e.g. under a wide session such as vanilla's 200
+    partitions) returns an empty frame typed from ``schema`` without
+    calling the kernel: a bare ``pd.DataFrame({col: []})`` makes every
+    column float64, and pyarrow cannot convert an empty float64 column
+    to a declared ``array<float>`` (pinned in tests/test_pipelines.py).
+    """
+    import functools
+
     import pandas as pd
 
-    if len(rows_pdf) == 0:
-        out = rows_pdf[["vec_id", "embedding", "n2"]].copy()
-        out.insert(1, "g", pd.Series(dtype="int64"))
-        return out
+    empty = pd.DataFrame(
+        {
+            name: pd.Series(dtype=_KERNEL_DTYPES[typ])
+            for name, typ in (f.split(" ", 1) for f in schema.split(", "))
+        }
+    )
+
+    @functools.wraps(kernel)  # the plan names the kernel, not the wrapper
+    def run(rows_pdf, cand_pdf):
+        return kernel(rows_pdf, cand_pdf) if len(rows_pdf) else empty
+
+    width = shuffle_width(spark) if width is None else width
+    buckets = spark.range(width).select(F.col("id").cast("int").alias("b"))
+    b_rows = rows.select(
+        *key,
+        F.pmod(F.col("vec_id"), F.lit(width)).cast("int").alias("b"),
+        *(c for c in rows.columns if c not in key),
+    )
+    b_cand = cand.crossJoin(F.broadcast(buckets))
+    return (
+        b_rows.groupBy(*key, "b")
+        .cogroup(b_cand.groupBy(*key, "b"))
+        .applyInPandas(run, schema)
+    )
+
+
+def _route_group(rows_pdf, cand_pdf):
+    """Cogroup kernel for the COARSE routing pass: emit every corpus
+    row with its routing group ``g`` (nearest coarse centroid)."""
     out = rows_pdf[["vec_id", "embedding", "n2"]].copy()
     out.insert(1, "g", _argmax_centroid(rows_pdf, cand_pdf))
     return out
@@ -906,19 +928,12 @@ def _assign_group(rows_pdf, cand_pdf):
     same coalesce guard as :func:`_nearest_centroid_grouped`'s LEFT
     join (a cogroup key present only on the rows side arrives here
     with an empty ``cand_pdf``)."""
-    import pandas as pd
-
-    if len(rows_pdf) == 0:
-        # typed empty frame — see _route_group's empty-rows note
-        out = rows_pdf[["vec_id", "embedding", "n2"]].copy()
-        out.insert(1, "c_label", pd.Series(dtype="int64"))
-        return out
     out = rows_pdf[["vec_id", "embedding", "n2"]].copy()
     if len(cand_pdf) == 0:
         out.insert(1, "c_label", rows_pdf["g"].to_numpy())
     else:
         out.insert(1, "c_label", _argmax_centroid(rows_pdf, cand_pdf))
-    return out[["vec_id", "c_label", "embedding", "n2"]]
+    return out
 
 
 _ROUTE_SCHEMA = "vec_id long, g long, embedding array<float>, n2 double"
@@ -927,49 +942,41 @@ _ASSIGN_SCHEMA = "vec_id long, c_label long, embedding array<float>, n2 double"
 
 def _route_vec(spark, rows, coarse, width):
     """Vectorized :func:`_nearest_centroid` for the ROUTED branch's
-    coarse pass (guide §4.2, the `_pq_codes_wide` shape): ``rows``
-    (vec_id, embedding, n2) cross one fixed-width exchange bucketed by
-    ``pmod(vec_id, width)``; the ``coarse`` relation (s = ceil(sqrt(k))
-    centroids — the small side at every scale) replicates per bucket
-    through a broadcast. Replaces O(|rows| * s) interpreted zip_with/
-    aggregate cosine folds with numpy at memory bandwidth."""
-    buckets = spark.range(width).select(F.col("id").cast("int").alias("b"))
-    b_rows = rows.select(
-        F.pmod(F.col("vec_id"), F.lit(width)).cast("int").alias("b"),
-        "vec_id",
-        "embedding",
-        "n2",
-    )
-    b_cand = coarse.select("c_label", "ce").crossJoin(F.broadcast(buckets))
-    return (
-        b_rows.groupBy("b")
-        .cogroup(b_cand.groupBy("b"))
-        .applyInPandas(_route_group, _ROUTE_SCHEMA)
+    coarse pass: ``rows`` (vec_id, embedding, n2) against the
+    ``coarse`` centroids (s = ceil(sqrt(k)), the small side at every
+    scale) replicated to every bucket."""
+    return _bucket_cogroup(
+        spark,
+        rows.select("vec_id", "embedding", "n2"),
+        coarse.select("c_label", "ce"),
+        _route_group,
+        _ROUTE_SCHEMA,
+        width,
     )
 
 
 def _grouped_assign_vec(spark, rows_g, cand_g, subw):
     """Vectorized :func:`_nearest_centroid_grouped`: corpus rows carry
     their routing group ``g``; candidates replicate only across their
-    OWN group's ``subw`` sub-buckets (not the full width — the cogroup
-    analog of the per-group broadcast join it replaces, with strictly
-    less replication than a broadcast at large k). ``subw`` sub-buckets
-    per group restore reduce-side parallelism when the group count is
-    below the session width."""
-    subs = spark.range(subw).select(F.col("id").cast("int").alias("sub"))
-    b_rows = rows_g.select(
-        "g",
-        F.pmod(F.col("vec_id"), F.lit(subw)).cast("int").alias("sub"),
-        "vec_id",
-        "embedding",
-        "n2",
+    OWN group's ``subw`` sub-buckets (strictly less replication than a
+    broadcast at large k), and ``subw`` sub-buckets per group restore
+    reduce-side parallelism when the group count is below the session
+    width."""
+    return _bucket_cogroup(
+        spark,
+        rows_g.select("g", "vec_id", "embedding", "n2"),
+        cand_g.select("g", "c_label", "ce"),
+        _assign_group,
+        _ASSIGN_SCHEMA,
+        subw,
+        key=("g",),
     )
-    b_cand = cand_g.select("g", "c_label", "ce").crossJoin(F.broadcast(subs))
-    return (
-        b_rows.groupBy("g", "sub")
-        .cogroup(b_cand.groupBy("g", "sub"))
-        .applyInPandas(_assign_group, _ASSIGN_SCHEMA)
-    )
+
+
+class NonFiniteEmbeddingError(ValueError):
+    """A PQ code build met a NaN or infinite embedding coordinate. Its
+    rounded-decimal distance has no int64 numerator (NaN casts to
+    INT64_MIN), so the codes and the error would be silently wrong."""
 
 
 def _pq_codes_group(corpus_pdf, cb_pdf):
@@ -983,75 +990,73 @@ def _pq_codes_group(corpus_pdf, cb_pdf):
     is the same IEEE double op sequence, per-term rounding matches
     Spark's Round via :func:`_round8_int64`, and the DECIMAL sums
     compare as exact int64 numerators, so argmin and tie-breaks can
-    never diverge.
+    never diverge. Raises :class:`NonFiniteEmbeddingError` on a
+    non-finite coordinate on either side.
     """
     import numpy as np
     import pandas as pd
 
-    cols = ["vec_id", *(f"c{s}" for s in range(PQ_M)), "err"]
-    if len(corpus_pdf) == 0:
-        return pd.DataFrame({c: [] for c in cols})
     ids = corpus_pdf["vec_id"].to_numpy()
     emb = np.stack(corpus_pdf["e"].to_numpy())
     cb_ids = cb_pdf["vec_id"].to_numpy()
     order = cb_ids.argsort(kind="stable")
     cb_lbl = cb_ids[order]
     cb = np.stack(cb_pdf["e"].to_numpy())[order]
-    out = {"vec_id": ids, "err": np.zeros(len(ids), dtype=np.int64)}
+    bad = np.concatenate(
+        [ids[~np.isfinite(emb).all(axis=1)], cb_lbl[~np.isfinite(cb).all(axis=1)]]
+    )
+    if len(bad):
+        raise NonFiniteEmbeddingError(
+            f"PQ codes need finite embeddings; vec_id {sorted(set(bad.tolist()))}"
+        )
+    out = {"vec_id": ids}
+    err = np.zeros(len(ids), dtype=np.int64)
     for s in range(PQ_M):
         sl = slice(s * PQ_SUB_DIM, (s + 1) * PQ_SUB_DIM)
         diff = emb[:, None, sl] - cb[None, :, sl]
         d2 = _round8_int64(diff * diff).sum(axis=2)
         sel = d2.argmin(axis=1)  # first min == lowest code label
         out[f"c{s}"] = cb_lbl[sel].astype(np.int32)
-        out["err"] = out["err"] + d2[np.arange(len(ids)), sel]
+        err = err + d2[np.arange(len(ids)), sel]
     # int64-numerator domain guard: err/1e8 reconstructs the oracle's
     # CAST(SUM(DECIMAL(20,8)) AS DOUBLE) bit-identically only while
     # |err| < 2^52 (one exact long->double cast + one correctly-rounded
     # division); beyond that the cast itself rounds and the identity
     # argument breaks (r15 ADVICE). Unit-norm embeddings keep err tiny;
     # fail loudly rather than drift if the fixtures ever change.
-    assert int(np.abs(out["err"]).max()) < 2**52, "pq err numerator overflow"
-    return pd.DataFrame(out)[cols]
+    if int(np.abs(err).max()) >= 2**52:
+        raise OverflowError("pq err numerator overflow")
+    out["err"] = err
+    return pd.DataFrame(out)
+
+
+_PQ_SCHEMA = ", ".join(
+    ["vec_id long", *(f"c{s} int" for s in range(PQ_M)), "err long"]
+)
 
 
 def _pq_codes_wide(spark, vd, vd_cb):
     """(vec_id, c0..c3, err) for every corpus vector — the shared
     emb_pq / emb_ivfpq_search code-assignment build pass, vectorized
-    per corpus bucket (optimization guide §4.2): the former
+    per corpus bucket (:func:`_bucket_cogroup`): the former
     explode+broadcast-join+window form evaluated |corpus| x PQ_M x
     PQ_K interpreted :func:`_km_dist2` folds (~1M heavyweight
     Round+DECIMAL ops at sf0.1, 1.4-1.5 s of each query's wall); here
-    the same arithmetic runs as a handful of numpy ops per bucket.
-    The corpus crosses ONE exchange at fixed width; the codebook (the
-    PQ_K lowest vec_ids — kilobytes) is replicated per bucket through
-    a broadcast, the cogroup analog of the broadcast join it
-    replaces. ``err`` is the exact int64 DECIMAL(·,8) numerator of
+    the same arithmetic runs as a handful of numpy ops per bucket, with
+    the codebook (the PQ_K lowest vec_ids — kilobytes) replicated to
+    every bucket. ``err`` is the exact int64 DECIMAL(·,8) numerator of
     the oracle's SUM(d2). ``vd_cb`` must be an INDEPENDENTLY
     constructed read of the same relation (fresh scan attributes —
     the cogroup's two children may not share expression ids); its
     ``vec_id < PQ_K`` filter pushes to the scan, so the second "scan"
     reads 8 rows.
     """
-    width = _shuffle_width(spark)
-    buckets = spark.range(width).select(F.col("id").cast("int").alias("b"))
-    corpus_b = vd.select(
-        F.pmod(F.col("vec_id"), F.lit(width)).cast("int").alias("b"),
-        "vec_id",
-        "e",
-    )
-    cb_b = (
-        vd_cb.filter(F.col("vec_id") < PQ_K)
-        .select("vec_id", "e")
-        .crossJoin(F.broadcast(buckets))
-    )
-    schema = ", ".join(
-        ["vec_id long", *(f"c{s} int" for s in range(PQ_M)), "err long"]
-    )
-    return (
-        corpus_b.groupBy("b")
-        .cogroup(cb_b.groupBy("b"))
-        .applyInPandas(_pq_codes_group, schema)
+    return _bucket_cogroup(
+        spark,
+        vd.select("vec_id", "e"),
+        vd_cb.filter(F.col("vec_id") < PQ_K).select("vec_id", "e"),
+        _pq_codes_group,
+        _PQ_SCHEMA,
     )
 
 
@@ -1116,17 +1121,15 @@ def emb_pq(spark, sf_dir):
     (:func:`_round8_int64`), so codes, tie-breaks, and the error sum
     stay bit-identical to the oracle's relational derivation.
     """
-    def _vd():
-        return t(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-        )
-
-    wide = _pq_codes_wide(spark, _vd(), _vd())
+    wide = _pq_codes_wide(
+        spark,
+        _doubles(t(spark, sf_dir, "embeddings")),
+        _doubles(t(spark, sf_dir, "embeddings")),
+    )
     # CAST(SUM(DECIMAL(·,8)) AS DOUBLE) == exact-int64-numerator
     # divided by 1e8 in ONE correctly-rounded IEEE division (both are
     # the nearest double of the same rational) — valid while
-    # |err| < 2^52, which _pq_codes_group asserts per batch.
+    # |err| < 2^52, which _pq_codes_group checks per batch.
     return (
         wide.select(
             "vec_id",
@@ -1228,38 +1231,15 @@ def emb_ivfpq_search(spark, sf_dir):
     JVM (:func:`_km_dist2`), bit-identical to the oracle's
     relational derivation."""
     v = _vectors(spark, sf_dir)
-    vd = v.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
-    # coarse centroids + cell assignment (emb_ivf_search's build)
-    dims = v.select("label", F.posexplode("embedding").alias("pos", "x"))
-    cent = (
-        dims.groupBy("label", "pos")
-        .agg(F.round(F.avg(F.col("x").cast("double")), SIM_DECIMALS).alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.expr("transform(pc, p -> p.c)").alias("ce"),
-        )
-    )
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assign = (
-        _nearest_centroid(v, cent)
-        .select("vec_id", "c_label")
-        .repartition(width, "vec_id")
-    )
+    vd = _doubles(v)
+    assign, _, probes = _ivf_probe(spark, v)
 
     # PQ codes (emb_pq's build pass — the shared vectorized builder,
     # see _pq_codes_wide), melted back to (vec_id, sub, code) for the
     # LUT join. Codes are pure ints, so the Arrow boundary ships no
     # float state; the ADC distances themselves stay exact DECIMALS
     # summed in the JVM below.
-    vd_cb = t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
-    )
+    vd_cb = _doubles(t(spark, sf_dir, "embeddings"))
     codes = _pq_codes_wide(spark, vd, vd_cb).select(
         "vec_id",
         F.explode(
@@ -1290,23 +1270,7 @@ def emb_ivfpq_search(spark, sf_dir):
         vd.filter(F.col("vec_id") < PQ_K), "code"
     ).withColumnRenamed("sv", "cv")
 
-    # query-side: probe cells + ADC look-up tables
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    cos_qc = F.round(
-        _dot("qe", "ce") / F.sqrt(F.col("qn2") * _dot("ce", "ce")), SIM_DECIMALS
-    )
-    w_probe = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "c_label")
-    probes = (
-        q.join(F.broadcast(cent))
-        .select("q_id", "c_label", cos_qc.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= N_PROBE)
-        .select("q_id", "c_label")
-    )
+    # query-side ADC look-up tables
     lut = (
         explode_subs(vd.filter(F.col("vec_id") < N_QUERIES), "q_id")
         .withColumnRenamed("sv", "qv")
@@ -1633,14 +1597,14 @@ def emb_semdedup(spark, sf_dir):
         # zip_with/aggregate folds (O(n*s) route + O(n*k/s) a0 +
         # O(n*k/s) final, ~16 us each — assignment dominated the sf1
         # wall after the r15 pair-stage fix). Each pass is now one
-        # fixed-width exchange + a numpy cogroup kernel with the
-        # _pq_codes_wide replication shape; cosines, rounding, and
-        # tie-breaks stay bit-identical (see _argmax_centroid).
+        # fixed-width exchange + a numpy cogroup kernel
+        # (_bucket_cogroup); cosines, rounding, and tie-breaks stay
+        # bit-identical (see _argmax_centroid).
         # v_route feeds BOTH the a0 and final-assign passes, so it is
         # lazily checkpointed — previously the route fold computed
         # twice (r15 "Not yet optimized" #1; production: reliable
         # checkpoint per SCALE.md "Round-16: localCheckpoint").
-        width = _shuffle_width(spark)
+        width = shuffle_width(spark)
         v_route = _route_vec(spark, v, coarse, width).localCheckpoint(
             eager=False
         )
@@ -1667,20 +1631,7 @@ def emb_semdedup(spark, sf_dir):
         )
     else:
         a0 = _nearest_centroid(v, seeds)
-    cent = (
-        a0.select(
-            F.col("c_label").alias("s_label"),
-            F.posexplode("embedding").alias("pos", "x"),
-        )
-        .groupBy("s_label", "pos")
-        .agg(F.round(F.avg(F.col("x").cast("double")), SIM_DECIMALS).alias("c"))
-        .groupBy("s_label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            F.col("s_label").alias("c_label"),
-            F.expr("transform(pc, p -> p.c)").alias("ce"),
-        )
-    )
+    cent = _centroids(a0, "c_label")
     if routed:
         # refined centroids inherit their seed's routing group, so the
         # final assignment is grouped too (a vector's cell stays
@@ -1785,16 +1736,8 @@ def emb_hard_negatives(spark, sf_dir):
     exact-oracle form that grades those.
     """
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("qe"),
-        F.col("n2").alias("qn2"),
-    )
-    cos = F.round(
-        _dot("qe", "embedding") / F.sqrt(F.col("qn2") * F.col("n2")),
-        SIM_DECIMALS,
-    )
+    q = _queries(v, F.col("label").alias("q_label"))
+    cos = _cosine("qe", "embedding", "qn2", "n2")
     scored = (
         v.join(
             F.broadcast(q),
@@ -1803,9 +1746,4 @@ def emb_hard_negatives(spark, sf_dir):
         )
         .select("q_id", "vec_id", "label", cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= TOP_K)
-        .orderBy("q_id", "rk")
-    )
+    return _rank_top_k(scored)

@@ -333,6 +333,32 @@ def _band_rows(mh: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_verified(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact shingle-Jaccard verify of candidate pairs ``cand`` (d1, d2)
+    over the shingle relation ``sh`` (doc_id, s): the intersection is
+    counted by joining both docs' shingles on the shingle, the union
+    from the per-doc sizes. Returns (d1, d2, jaccard) with jaccard >=
+    JACCARD_THRESHOLD."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    left = sh.select(F.col("doc_id").alias("d1"), F.col("s").alias("ls"))
+    right = sh.select(F.col("doc_id").alias("d2"), F.col("s").alias("rs"))
+    inter = (
+        cand.join(left, "d1")
+        .join(right, (cand.d2 == right.d2) & (F.col("ls") == F.col("rs")))
+        .groupBy(cand.d1, cand.d2)
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+    n1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
+    n2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
+    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
+    return (
+        inter.join(n1, "d1")
+        .join(n2, "d2")
+        .select("d1", "d2", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
+
+
 def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified (jaccard >= threshold) near-dup pairs, unordered —
     the shared plan under doc_minhash_neardup and
@@ -375,22 +401,7 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    left = sh.select(F.col("doc_id").alias("d1"), F.col("s").alias("ls"))
-    right = sh.select(F.col("doc_id").alias("d2"), F.col("s").alias("rs"))
-    inter = (
-        cand.join(left, "d1")
-        .join(right, (cand.d2 == right.d2) & (F.col("ls") == F.col("rs")))
-        .groupBy(cand.d1, cand.d2)
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")), "d1")
-        .join(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")), "d2")
-        .select("d1", "d2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _jaccard_verified(sh, cand)
 
 
 #: Incremental split: docs with doc_id % DELTA_MOD == 0 play the role
@@ -485,24 +496,8 @@ def doc_incremental_dedup(spark, sf_dir):
         .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    left = sh.select(F.col("doc_id").alias("d1"), F.col("s").alias("ls"))
-    right = sh.select(F.col("doc_id").alias("d2"), F.col("s").alias("rs"))
-    inter = (
-        cand.join(left, "d1")
-        .join(right, (cand.d2 == right.d2) & (F.col("ls") == F.col("rs")))
-        .groupBy(cand.d1, cand.d2)
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
     matches = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")), "d1"
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")), "d2"
-        )
-        .filter(jac >= JACCARD_THRESHOLD)
+        _jaccard_verified(sh, cand)
         .groupBy("d1")
         .agg(F.count(F.lit(1)).alias("m"))
     )
@@ -730,23 +725,7 @@ def doc_ngram_jaccard(spark, sf_dir):
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    left = sh.select(F.col("doc_id").alias("d1"), F.col("s").alias("ls"))
-    right = sh.select(F.col("doc_id").alias("d2"), F.col("s").alias("rs"))
-    inter = (
-        cand.join(left, "d1")
-        .join(right, (cand.d2 == right.d2) & (F.col("ls") == F.col("rs")))
-        .groupBy(cand.d1, cand.d2)
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("n1") + F.col("n2") - F.col("i"))
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")), "d1")
-        .join(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")), "d2")
-        .select("d1", "d2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .orderBy("d1", "d2")
-    )
+    return _jaccard_verified(sh, cand).orderBy("d1", "d2")
 
 
 #: BPE-ish pre-tokenizer: word / number / punctuation-run pieces with

@@ -24,8 +24,10 @@ _SERIAL_PREFIXES = tuple(c.prefix for c in CORPORA)
 
 
 @pytest.fixture(scope="session")
-def spark_results(spark):
-    """Prewarm of every query's Spark-side result: the independent
+def spark_results(spark, request):
+    """Prewarm of the Spark-side result of every query whose
+    test_query_matches_oracle item was collected (all of them in an
+    unfiltered run, only the selected ones under ``-k``): the independent
     ones concurrently (guide 2.6 overlap-independent-jobs: per-query
     wall at sf0.01 is mostly plan/JVM latency, which threads hide),
     the view-re-registering text replays serially (see
@@ -35,7 +37,11 @@ def spark_results(spark):
     it is not the bottleneck."""
     from concurrent.futures import ThreadPoolExecutor
 
-    names = sorted(QUERIES)
+    names = sorted(
+        item.callspec.params["name"]
+        for item in request.session.items
+        if getattr(item, "function", None) is test_query_matches_oracle
+    )
     pooled = [n for n in names if not n.startswith(_SERIAL_PREFIXES)]
     serial = [n for n in names if n.startswith(_SERIAL_PREFIXES)]
 

@@ -691,61 +691,133 @@ def test_semdedup_group_dropped_fold_identity(spark):
     assert not bad, bad[:3]
 
 
-def test_routed_kernel_empty_group_serializes():
-    """r16 regression: a cogroup bucket holding only CANDIDATE rows
-    (reachable whenever the session's shuffle width exceeds the kernel
-    bucket width — vanilla's 200 partitions vs the engine's 32) calls
-    the routed kernels with an EMPTY rows frame. The empty output must
-    keep Arrow-convertible dtypes for the declared schema: the old
-    ``pd.DataFrame({col: []})`` construction made every column float64
-    and pyarrow cannot convert empty float64 to array<float>
-    (NumPyConverter error — crashed the sf1 vanilla bench run)."""
-    import numpy as np
-    import pandas as pd
+def test_routed_kernel_empty_group_serializes(spark):
+    """Property test for every numpy cogroup kernel, each run through
+    :func:`_bucket_cogroup` on a live session: an empty rows side
+    (buckets holding only replicated candidates — reachable whenever
+    the bucket width exceeds what the rows fill, as at vanilla's 200
+    partitions; r16 crashed the sf1 vanilla bench run there because a
+    bare ``pd.DataFrame({col: []})`` is float64 and pyarrow cannot
+    convert it to array<float>), a single row, and, for the grouped
+    assignment, an empty candidate side (its coalesce-to-own-group
+    fallback). The route and PQ kernels always see their full
+    broadcast candidate set. Every output column must arrive as its
+    declared Arrow type."""
     import pyarrow as pa
 
-    from gazelle_plugin_spark.plans.similarity_queries import (
-        _assign_group,
-        _route_group,
-    )
+    from gazelle_plugin_spark.plans import similarity_queries as simq
 
-    # the frames exactly as the Arrow serializer delivers an empty
-    # rows-side batch: typed scalars, object-dtype list column
-    empty_rows = pd.DataFrame(
-        {
-            "vec_id": pd.Series(dtype="int64"),
-            "g": pd.Series(dtype="int64"),
-            "embedding": pd.Series(dtype="object"),
-            "n2": pd.Series(dtype="float64"),
-        }
+    arrow = {
+        "long": pa.int64(),
+        "int": pa.int32(),
+        "double": pa.float64(),
+        "array<float>": pa.list_(pa.float32()),
+    }
+    rows_t = "vec_id long, g long, embedding array<float>, n2 double"
+    cand_t = "g long, c_label long, ce array<float>"
+    e4 = [1.0, 0.0, 0.0, 0.0]
+    rows = spark.createDataFrame([(5, 1, e4, 1.0), (6, 2, e4, 1.0)], rows_t)
+    # group 1 holds both candidates, group 2 none
+    cand = spark.createDataFrame(
+        [(1, 10, [0.0, 1.0, 0.0, 0.0]), (1, 11, e4)], cand_t
     )
-    cand = pd.DataFrame(
-        {"c_label": [3], "ce": [np.ones(4, dtype=np.float32)]}
+    d64 = "vec_id long, e array<double>"
+    pq_rows = spark.createDataFrame([(9, [1.0] * 64)], d64)
+    codebook = spark.createDataFrame([(0, [0.0] * 64), (1, [1.0] * 64)], d64)
+    cases = [
+        # (kernel, schema, rows, candidates, width, key, checked
+        # columns, expected values)
+        (
+            simq._route_group,
+            simq._ROUTE_SCHEMA,
+            rows.filter("vec_id = 5").select("vec_id", "embedding", "n2"),
+            cand.select("c_label", "ce"),
+            8,
+            (),
+            ("vec_id", "g"),
+            {(5, 11)},
+        ),
+        (
+            simq._assign_group,
+            simq._ASSIGN_SCHEMA,
+            rows,
+            cand,
+            3,
+            ("g",),
+            ("vec_id", "c_label"),
+            {(5, 11), (6, 2)},
+        ),
+        (
+            simq._pq_codes_group,
+            simq._PQ_SCHEMA,
+            pq_rows,
+            codebook,
+            8,
+            (),
+            # an exact codeword match: every code 1, error exactly 0
+            ("vec_id", "c0", "c1", "c2", "c3", "err"),
+            {(9, 1, 1, 1, 1, 0)},
+        ),
+    ]
+    for kernel, schema, rows_df, cand_df, width, key, cols, expected in cases:
+        table = simq._bucket_cogroup(
+            spark, rows_df, cand_df, kernel, schema, width, key
+        ).toArrow()
+        declared = [f.split(" ", 1) for f in schema.split(", ")]
+        assert table.schema.names == [n for n, _ in declared], kernel
+        for (name, typ), field in zip(declared, table.schema):
+            assert field.type == arrow[typ], (kernel, name, field.type)
+        got = set(zip(*(table.column(c).to_pylist() for c in cols)))
+        assert got == expected, (kernel, got)
+
+
+def test_pq_codes_reject_non_finite_embedding():
+    """A NaN or infinite coordinate has no int64 rounded-decimal
+    numerator (NaN casts to INT64_MIN, whose ``np.abs`` stays negative
+    and slips past the 2^52 guard), so the PQ kernel used to return
+    codes 0,0,0,0 with err 0 — a silently perfect reconstruction. It
+    must raise the named error instead, naming the vector."""
+    import numpy as np
+    import pandas as pd
+    import pytest
+
+    from gazelle_plugin_spark.plans import similarity_queries as simq
+
+    cb = pd.DataFrame(
+        {"vec_id": [0, 1], "e": [np.zeros(64), np.ones(64)]}
     )
-    route_schema = pa.schema(
-        [
-            ("vec_id", pa.int64()),
-            ("g", pa.int64()),
-            ("embedding", pa.list_(pa.float32())),
-            ("n2", pa.float64()),
-        ]
-    )
-    assign_schema = pa.schema(
-        [
-            ("vec_id", pa.int64()),
-            ("c_label", pa.int64()),
-            ("embedding", pa.list_(pa.float32())),
-            ("n2", pa.float64()),
-        ]
-    )
-    out_r = _route_group(empty_rows[["vec_id", "embedding", "n2"]], cand)
-    out_a = _assign_group(empty_rows, cand)
-    # empty CAND side must also serialize (the fallback branch)
-    out_a2 = _assign_group(empty_rows, cand.iloc[:0])
-    for out, schema in ((out_r, route_schema), (out_a, assign_schema), (out_a2, assign_schema)):
-        assert list(out.columns) == schema.names
-        for name, typ in zip(schema.names, schema.types):
-            pa.Array.from_pandas(out[name], type=typ)  # must not raise
+    ok = np.full(64, 0.5)
+    for bad in (np.full(64, np.nan), np.r_[np.ones(63), np.inf]):
+        corpus = pd.DataFrame({"vec_id": [7, 3], "e": [ok, bad]})
+        with pytest.raises(simq.NonFiniteEmbeddingError, match=r"vec_id \[3\]"):
+            simq._pq_codes_group(corpus, cb)
+    # a non-finite codeword poisons every distance to it
+    corpus = pd.DataFrame({"vec_id": [7], "e": [ok]})
+    cb_nan = cb.assign(e=[np.zeros(64), np.full(64, np.nan)])
+    with pytest.raises(simq.NonFiniteEmbeddingError, match=r"vec_id \[1\]"):
+        simq._pq_codes_group(corpus, cb_nan)
+
+
+def test_shuffle_width_reads_conf_with_fallback():
+    """:func:`shuffle_width` is the one reader of
+    ``spark.sql.shuffle.partitions`` for plan builders: a numeric conf
+    is used as is, clamped to at least 1, and a non-numeric one falls
+    back to ``defaultParallelism``. A stub session stands in because
+    Spark's ``conf.set`` rejects ``auto``."""
+    from types import SimpleNamespace
+
+    from gazelle_plugin_spark.plans._util import shuffle_width
+
+    def session(value):
+        confs = {"spark.sql.shuffle.partitions": value}
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=confs.__getitem__),
+            sparkContext=SimpleNamespace(defaultParallelism=6),
+        )
+
+    assert shuffle_width(session("16")) == 16
+    assert shuffle_width(session("0")) == 1
+    assert shuffle_width(session("auto")) == 6
 
 
 def test_round6_signed_matches_jvm(spark):
