@@ -197,31 +197,35 @@ DRIVER_MEM = os.environ.get("SPARK_GRAFT_BENCH_MEM", "4g")
 #: run. Both sides get the same enlarged cache.
 JVM_OPTS = "-XX:ReservedCodeCacheSize=512m"
 
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"  # static, in the engine profile
 
-def _check_jvm_opts(spark) -> None:
-    """Warn if the enlarged code cache did not take effect.
 
-    driver.extraJavaOptions only applies when this session launches the
-    process's FIRST JVM; if another JVM already started in-process (e.g.
-    the harness imported from pytest), the 512m setting is silently
+def _check_jvm_opts(spark, profile: dict[str, str] | None = None) -> None:
+    """Warn if the enlarged code cache or the ``profile``'s class cache is not live.
+
+    driver.extraJavaOptions and static confs only apply when this session
+    launches the process's FIRST JVM; if another JVM already started
+    in-process (e.g. the harness imported from pytest), they are silently
     ignored and the code-cache outlier problem returns undetected
     (ADVICE round 6). Verify against the live JVM, not just the conf."""
     try:
         beans = spark.sparkContext._jvm.java.lang.management.ManagementFactory
         args = beans.getRuntimeMXBean().getInputArguments()
         live = any("ReservedCodeCacheSize=512m" in str(a) for a in args)
+        cache = spark.conf.get(CODEGEN_CACHE)
     except Exception:  # noqa: BLE001 - introspection is best-effort
         return
     if not live:
-        print(
-            "WARNING: ReservedCodeCacheSize=512m not live in this JVM; "
-            "long-session timings may show code-cache outliers",
-            file=sys.stderr,
-        )
+        print("WARNING: ReservedCodeCacheSize=512m not live in this JVM; "
+              "long-session timings may show code-cache outliers", file=sys.stderr)
+    want = (profile or {}).get(CODEGEN_CACHE, cache)
+    if cache != want:
+        print(f"WARNING: {CODEGEN_CACHE}={cache} live, not the profile's {want}; "
+              "warm reps may recompile generated classes", file=sys.stderr)
 
 
 def _engine_session(cpus: str):
-    from gazelle_plugin_spark import get_spark
+    from gazelle_plugin_spark import get_spark, session_confs
 
     spark = get_spark(
         app_name="gazelle-bench",
@@ -232,7 +236,7 @@ def _engine_session(cpus: str):
             "spark.driver.extraJavaOptions": JVM_OPTS,
         },
     )
-    _check_jvm_opts(spark)
+    _check_jvm_opts(spark, session_confs())
     return spark
 
 

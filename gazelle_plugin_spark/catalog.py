@@ -10,8 +10,10 @@ pruning — verified by tests/test_sources.py.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TPCH_TABLES = (
     "region",
@@ -32,6 +34,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+#: Per session, the schema Spark inferred on its first read of each
+#: parquet path. Inference starts a Spark job per read; a known schema
+#: starts none. EXPECTED_SCHEMA cannot stand in: it admits alternatives.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read the engine's parquet table at ``path``: inferred on the
+    session's first read, with that schema passed on every later one."""
+    known = _SCHEMAS.setdefault(spark, {})
+    if path not in known:
+        known[path] = spark.read.parquet(path).schema
+    return spark.read.schema(known[path]).parquet(path)
 
 
 #: SQL conf required to read parquet TIMESTAMP(NANOS) columns (one of
@@ -68,8 +85,6 @@ def ts_us_expr(df: DataFrame, col: str = "ts"):
       ``nanosAsLong`` legacy conf): INTEGER-divide ns -> us (float
       division rounds at the 1.7e18 ns scale).
     """
-    from pyspark.sql import functions as F
-
     dtype = dict(df.dtypes).get(col)
     if dtype is None:
         raise KeyError(f"column {col!r} not found in events table")
@@ -83,11 +98,9 @@ def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # normalize ts to TIMESTAMP_LTZ micros whatever the file's
         # physical encoding (see ts_us_expr)
         ensure_nanos_as_long(spark)
-        from pyspark.sql import functions as F
-
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         return df.withColumn("ts", F.timestamp_micros(ts_us_expr(df)))
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 #: Expected raw-scan dtypes per table (tripwire against testdata
@@ -172,7 +185,8 @@ def assert_testdata_schema(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) ->
     The engine's loaders adapt where they can (events.ts), but silent
     drift elsewhere surfaces as cryptic mid-query analysis errors; this
     turns the next regeneration into a one-line diagnosis. Footer-only
-    reads — O(tables), no data scan.
+    reads — O(tables), no data scan — and always fresh: never
+    :func:`read_parquet`'s memo, which would repeat a stale schema.
     """
     ensure_nanos_as_long(spark)
     problems = []

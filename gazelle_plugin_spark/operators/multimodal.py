@@ -88,16 +88,25 @@ def extract_byte_features(
     crossing, and the body keeps the vectorization it paid for (the
     ColumnarArrowEvalPythonExec analog). Swap the body for an
     image/audio featurizer when codecs are available."""
+    featurize = _byte_featurizer(id_col, chunk_bytes)
+    return df.select(id_col, "blob").mapInPandas(featurize, BYTE_FEATURES_SCHEMA)
+
+
+def _byte_featurizer(id_col: str, chunk_bytes: int):
+    """The mapInPandas kernel of :func:`extract_byte_features`. An empty batch
+    yields a frame typed from BYTE_FEATURES_SCHEMA, not all-float64 columns."""
     import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     names = [f.name for f in BYTE_FEATURES_SCHEMA.fields]
+    empty = to_arrow_schema(BYTE_FEATURES_SCHEMA).empty_table().to_pandas()
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             col = list(pdf["blob"])
             n = len(col)
             if n == 0:
-                yield pd.DataFrame({k: [] for k in names})
+                yield empty
                 continue
             lengths = np.fromiter(map(len, col), dtype=np.int64, count=n)
             cum = np.cumsum(lengths)
@@ -133,7 +142,7 @@ def extract_byte_features(
                 }
             )
 
-    return df.select(id_col, "blob").mapInPandas(featurize, BYTE_FEATURES_SCHEMA)
+    return featurize
 
 
 #: Feature schema produced by extract_pixel_stats.

@@ -13,11 +13,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.catalog import table_path
+from gazelle_plugin_spark.catalog import read_parquet, table_path
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def shuffle_width(spark: SparkSession) -> int:

@@ -17,6 +17,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from gazelle_plugin_spark.catalog import read_parquet
 from gazelle_plugin_spark.plans import query
 from gazelle_plugin_spark.plans._util import (
     SQL_DISC_PRICE,
@@ -87,7 +88,7 @@ def rel_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     where row-group stats are selective on BOTH box columns; the
     oracle runs the same predicate over the raw table, proving the
     layout is row-identical."""
-    li = spark.read.parquet(_zorder_mirror(spark, sf_dir))
+    li = read_parquet(spark, _zorder_mirror(spark, sf_dir))
     return (
         li.filter(
             F.col("l_partkey").between(_PART_LO, _PART_HI)

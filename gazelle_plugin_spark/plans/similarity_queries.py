@@ -856,16 +856,6 @@ def _argmax_centroid(rows_pdf, cand_pdf):
     return lbl[num.argmax(axis=1)]
 
 
-#: pandas dtype of each type a kernel schema declares (the typed empty
-#: output of :func:`_bucket_cogroup`)
-_KERNEL_DTYPES = {
-    "long": "int64",
-    "int": "int32",
-    "double": "float64",
-    "array<float>": "object",
-}
-
-
 def _bucket_cogroup(spark, rows, cand, kernel, schema, width=None, key=()):
     """Run the numpy cogroup ``kernel(rows_pdf, cand_pdf)`` over every
     ``rows`` bucket: ``rows`` cross ONE fixed-width exchange bucketed by
@@ -885,14 +875,10 @@ def _bucket_cogroup(spark, rows, cand, kernel, schema, width=None, key=()):
     """
     import functools
 
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    empty = pd.DataFrame(
-        {
-            name: pd.Series(dtype=_KERNEL_DTYPES[typ])
-            for name, typ in (f.split(" ", 1) for f in schema.split(", "))
-        }
-    )
+    empty = to_arrow_schema(StructType.fromDDL(schema)).empty_table().to_pandas()
 
     @functools.wraps(kernel)  # the plan names the kernel, not the wrapper
     def run(rows_pdf, cand_pdf):

@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gazelle_plugin_spark.catalog import table_path
+from gazelle_plugin_spark.catalog import read_parquet, table_path
 from gazelle_plugin_spark.plans import query
 
 #: Where the reference's SQL text corpus lives (read-only checkout).
@@ -233,7 +233,7 @@ def register_views(spark: SparkSession, sf_dir: str, views: Views) -> None:
     def src(name: str) -> str:
         if name not in raws:
             view = f"sqltext_raw_{name}"
-            spark.read.parquet(table_path(sf_dir, name)).createOrReplaceTempView(view)
+            read_parquet(spark, table_path(sf_dir, name)).createOrReplaceTempView(view)
             raws[name] = view
         return raws[name]
 

@@ -245,10 +245,6 @@ def _minhash_sig_over(sh: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_sig_over(_shingles(spark, sf_dir))
-
-
 _SQL_MINHASH = (
     "SELECT doc_id, "
     + ", ".join(

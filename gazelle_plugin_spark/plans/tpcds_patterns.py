@@ -1978,25 +1978,6 @@ def ds_rev_histogram(spark, sf_dir):
 QTY_BANDS = ((1, 12), (13, 25), (26, 38), (39, 50))
 
 
-def _band_cols():
-    """Per-band (avg, count, count-distinct) aggregate columns over
-    l_extendedprice, guarded by a quantity-band condition. The price
-    goes through DECIMAL(12,2) so the distinct set and the average
-    are exact on both engines."""
-    cols = []
-    for lo, hi in QTY_BANDS:
-        cond = F.col("l_quantity").between(lo, hi)
-        price = F.when(cond, dec("l_extendedprice"))
-        cols += [
-            F.round(
-                F.sum(price).cast("double") / F.count(price).cast("double"), 6
-            ).alias(f"avg_price_{lo}_{hi}"),
-            F.count(price).alias(f"cnt_{lo}_{hi}"),
-            F.countDistinct(price).alias(f"cntd_{lo}_{hi}"),
-        ]
-    return cols
-
-
 def _band_sql():
     parts = []
     for lo, hi in QTY_BANDS:

@@ -75,6 +75,15 @@ ENGINE_CONFS: dict[str, str] = {
     # (the reference is a Spark 3.1/3.2 plugin, pre-ANSI-default) —
     # e.g. x/0 => NULL rather than error, lenient casts.
     "spark.sql.ansi.enabled": "false",
+    # Generated-class cache (the reference compiles each fused pipeline
+    # once, SURVEY.md §2.11), sized over the working set: distinct
+    # classes per pass 90 (perfbench star_queries), 378 (star_full),
+    # ~2,050 (all 186 builders, sf0.01); Spark's default 100 recompiled
+    # them every warm pass. Static: set only by the JVM's first session.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # The cache key is the class source; AQE numbers codegen stages as
+    # concurrent stages finish, so ids in class names made reruns miss.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -41,6 +41,36 @@ def test_byte_features_match_python(docs):
         assert got[row.doc_id] == expected
 
 
+@pytest.mark.parametrize("rows", [[], [(7, b"abca")]], ids=["empty", "one_row"])
+def test_byte_features_kernel_output_is_typed(rows):
+    """The kernel's frame converts to BYTE_FEATURES_SCHEMA's Arrow types
+    column for column, for an empty batch as for a non-empty one (an
+    untyped ``pd.DataFrame({col: []})`` comes out all float64)."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from gazelle_plugin_spark.operators.multimodal import (
+        BYTE_FEATURE_CHUNK,
+        BYTE_FEATURES_SCHEMA,
+        _byte_featurizer,
+    )
+
+    batch = pd.DataFrame(
+        {
+            "doc_id": pd.Series([r[0] for r in rows], dtype="int64"),
+            "blob": pd.Series([r[1] for r in rows], dtype=object),
+        }
+    )
+    [out] = _byte_featurizer("doc_id", BYTE_FEATURE_CHUNK)(iter([batch]))
+    declared = to_arrow_schema(BYTE_FEATURES_SCHEMA)
+    assert pa.Table.from_pandas(out, preserve_index=False).schema.equals(declared)
+    assert out.to_dict("records") == (
+        [{"doc_id": 7, "n_bytes": 4, "mean_byte": 97.75, "n_distinct_bytes": 3,
+          "head_byte": 97}] if rows else []
+    )
+
+
 def _bmp(w: int, h: int, bpp: int = 24) -> bytes:
     import struct
 

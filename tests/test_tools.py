@@ -68,6 +68,20 @@ def test_bench_rejects_unknown_flags(monkeypatch, capsys):
     assert exc.value.code == 2
 
 
+def test_bench_warns_when_profile_class_cache_not_live(spark, capsys):
+    """bench.py's JVM check reads the session's live class-cache size: it
+    is silent when that matches the engine profile (the suite session
+    starts the JVM with the profile) and names both values otherwise."""
+    import bench
+    from gazelle_plugin_spark import session_confs
+
+    bench._check_jvm_opts(spark, session_confs())
+    assert capsys.readouterr().err == ""
+    bench._check_jvm_opts(spark, {bench.CODEGEN_CACHE: "100"})
+    err = capsys.readouterr().err
+    assert f"{bench.CODEGEN_CACHE}=4096 live, not the profile's 100" in err
+
+
 _R16 = os.path.join(
     os.path.dirname(_TOOLS), "measurements", "bench_detail_r16_sf01.json"
 )

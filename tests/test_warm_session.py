@@ -1,0 +1,64 @@
+"""A warm session repeats no per-session work.
+
+Gazelle compiles each fused pipeline once and reads with known schemas
+(SURVEY.md §1.2, §2.11). The Spark analogs: the profile's
+generated-class cache holds the working set, so a repeated query
+compiles nothing, and ``catalog.read_parquet`` passes the schema it
+inferred on the session's first read, so a repeated builder starts no
+Spark job.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql.types import StringType, StructField, StructType
+
+from gazelle_plugin_spark import catalog
+from gazelle_plugin_spark.plans import all_queries
+from gazelle_plugin_spark.session import ENGINE_CONFS
+from tests.conftest import SF_MED, SF_SMALL
+
+CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def _jobs(spark, group, fn):
+    """(fn(), number of Spark jobs it started), counted over a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_session_repeats_no_per_session_work(spark):
+    assert spark.conf.get(CACHE) == ENGINE_CONFS[CACHE]
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = all_queries()
+    for name in ("q7", "ssb4_1"):
+        queries[name](spark, SF_MED).collect()  # first run: infer and compile
+        before = compiles.getCount()
+        df, build_jobs = _jobs(spark, f"warm:{name}", lambda: queries[name](spark, SF_MED))
+        df.collect()
+        assert build_jobs == 0, name
+        assert compiles.getCount() - before == 0, name
+
+    # the memo is per session: a new one infers again
+    path = catalog.table_path(SF_MED, "lineitem")
+    _, warm = _jobs(spark, "warm:read", lambda: catalog.read_parquet(spark, path))
+    _, fresh = _jobs(spark, "fresh:read", lambda: catalog.read_parquet(spark.newSession(), path))
+    assert (warm, fresh > 0) == (0, True)
+
+    # the tripwire reads footers, never the memo: a poisoned memo is used
+    # by read_parquet and ignored by assert_testdata_schema
+    poisoned = spark.newSession()
+    bogus = StructType([StructField("bogus", StringType())])
+    catalog._SCHEMAS[poisoned] = {
+        catalog.table_path(SF_SMALL, n): bogus for n in catalog.EXPECTED_SCHEMA
+    }
+    region = catalog.table_path(SF_SMALL, "region")
+    assert catalog.read_parquet(poisoned, region).columns == ["bogus"]
+    catalog.assert_testdata_schema(poisoned, SF_SMALL)
