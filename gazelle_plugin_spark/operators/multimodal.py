@@ -1,21 +1,20 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media assets are opaque ``binary`` columns plus a typed metadata
-struct; decode/feature-extract/resize run as Arrow-batched
-``mapInPandas`` pipelines (the ColumnarArrowEvalPythonExec analog —
-batches cross to Python once, vectorized inside). HEADER metadata
-(format, width, height, mode) parses natively for BMP, netpbm, PNG,
-JPEG, GIF, and WEBP — pure struct reads, no codec library — and is
-total (bad blobs yield None dims, never a mid-batch abort). PIXEL
-decode is native for netpbm, 24/32-bit BMP, PNG (stdlib zlib + numpy
-unfilter), GIF (pure-Python LZW), and Huffman-coded JPEG — baseline,
-extended sequential, AND progressive (SOF0/1/2 incl. spectral
-selection, successive approximation, restart intervals) — with no
-codec library anywhere; only WEBP and the non-Huffman-DCT JPEG
-variants (lossless/hierarchical/arithmetic, SOF3/5-7/9-15) raise a
-clearly-marked NotImplementedError. The Spark-side contract
-(schemas, batching, partitioning) is real and tested
-(tests/test_multimodal.py).
+struct; feature extraction runs as Arrow-batched ``mapInPandas``
+pipelines (the ColumnarArrowEvalPythonExec analog — batches cross to
+Python once, vectorized inside). PIXEL decode (:func:`decode_pixels`)
+handles the two formats the registered queries plant, with no codec
+library: PNG (stdlib zlib + numpy unfilter; every color type, palette,
+8/16-bit, Adam7) and Huffman-coded JPEG — baseline, extended
+sequential, AND progressive (SOF0/1/2 incl. spectral selection,
+successive approximation, restart intervals, chroma subsampling). Any
+other format, and the non-Huffman-DCT JPEG variants (lossless/
+hierarchical/arithmetic, SOF3/5-7/9-15), raise a named
+NotImplementedError. The fixture encoders (:func:`encode_png_gray16`,
+:func:`encode_jpeg_gray`) build the planted blobs of
+plans/multimodal.py's pixel-stats queries. Tested in
+tests/test_multimodal.py.
 
 Scale notes (100 TB of media): blobs should live in the lake as
 (metadata parquet + object-store URIs or inline binary <= a few MB);
@@ -34,7 +33,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -214,11 +212,6 @@ def encode_png_gray16(raster, interlace: int = 1, filters=(0, 1, 2, 3, 4)) -> by
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
         )
 
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-
     def encode_sub(sub: "np.ndarray") -> bytearray:
         stride = sub.shape[1] * 2
         out = bytearray()
@@ -231,19 +224,16 @@ def encode_png_gray16(raster, interlace: int = 1, filters=(0, 1, 2, 3, 4)) -> by
                 a = row[i - 2] if i >= 2 else 0
                 up = prev[i]
                 ul = prev[i - 2] if i >= 2 else 0
-                pred = {0: 0, 1: a, 2: up, 3: (a + up) >> 1, 4: paeth(a, up, ul)}[f]
+                pred = {0: 0, 1: a, 2: up, 3: (a + up) >> 1, 4: _paeth(a, up, ul)}[f]
                 out.append((row[i] - pred) & 0xFF)
             prev = row
         return out
 
     body = bytearray()
-    if interlace:
-        for x0, y0, dx, dy in _ADAM7:
-            sub = arr[y0::dy, x0::dx]
-            if sub.shape[0] and sub.shape[1]:
-                body += encode_sub(sub)
-    else:
-        body = encode_sub(arr)
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        sub = arr[y0::dy, x0::dx]
+        if sub.size or not interlace:  # an empty Adam7 pass has no scanlines
+            body += encode_sub(sub)
     ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 1 if interlace else 0)
     return (
         b"\x89PNG\r\n\x1a\n"
@@ -302,9 +292,7 @@ def encode_jpeg_gray(raster, progressive: bool = False) -> bytes:
     h, w = arr.shape
     nbx, nby = -(-w // 8), -(-h // 8)
     plane = np.pad(arr, ((0, nby * 8 - h), (0, nbx * 8 - w)), mode="edge")
-    u = np.arange(8)
-    A = 0.5 * np.cos((2 * u[None, :] + 1) * u[:, None] * np.pi / 16)
-    A[0] /= np.sqrt(2.0)
+    A = _dct_basis()
     zz = list(_JPEG_ZZ)
     coefs = np.zeros((nby, nbx, 64), np.int64)
     for by in range(nby):
@@ -347,182 +335,26 @@ def encode_jpeg_gray(raster, progressive: bool = False) -> bytes:
         b"\xff\xd8" + seg(0xDB, b"\x00" + bytes([1] * 64)) + seg(0xC4, dht)
         + seg(0xC2 if progressive else 0xC0, sof)
     )
-    order = [divmod(i, nbx) for i in range(nbx * nby)]
-    if progressive:
+    # spectral band (Ss, Se) per scan
+    for ss, se in ((0, 0), (1, 63)) if progressive else ((0, 63),):
         bw, pred = _JpegBitWriter(), 0
-        for by, bx in order:
-            dc = int(coefs[by, bx, 0])
-            put_dc(bw, dc - pred)
-            pred = dc
+        for i in range(nbx * nby):
+            vec = coefs[divmod(i, nbx)]
+            if ss == 0:
+                put_dc(bw, int(vec[0]) - pred)
+                pred = int(vec[0])
+            if se:
+                put_ac(bw, vec)
         bw.flush()
-        out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0])) + bytes(bw.buf)
-        bw = _JpegBitWriter()
-        for by, bx in order:
-            put_ac(bw, coefs[by, bx])
-        bw.flush()
-        out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0])) + bytes(bw.buf)
-    else:
-        bw, pred = _JpegBitWriter(), 0
-        for by, bx in order:
-            vec = coefs[by, bx]
-            dc = int(vec[0])
-            put_dc(bw, dc - pred)
-            pred = dc
-            put_ac(bw, vec)
-        bw.flush()
-        out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0])) + bytes(bw.buf)
+        out += seg(0xDA, bytes([1, 1, 0x00, ss, se, 0])) + bytes(bw.buf)
     return out + b"\xff\xd9"
 
 
-#: Output schema of decode_image.
-IMAGE_META_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("format", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("mode", StringType()),
-    ]
-)
-
-_BMP_MODES = {1: "P", 4: "P", 8: "P", 16: "RGB", 24: "RGB", 32: "RGBA"}
-
-_PNG_MODES = {0: "L", 2: "RGB", 3: "P", 4: "LA", 6: "RGBA"}
-
-_JPEG_MODES = {1: "L", 3: "RGB", 4: "CMYK"}
-
-#: JPEG markers that carry no length segment (standalone).
-_JPEG_STANDALONE = frozenset({0xD8, 0x01} | set(range(0xD0, 0xD8)))
-
-
-def _jpeg_sof(b: bytes) -> tuple[int, int, str | None] | None:
-    """Walk JPEG marker segments to the first SOFn frame header and
-    return (width, height, mode) — pure struct parsing, no codec. SOFn
-    layout: marker(2) length(2) precision(1) height(2) width(2)
-    ncomponents(1)."""
-    i, n = 2, len(b)
-    while i + 9 < n:
-        if b[i] != 0xFF:
-            return None  # desynced — not a marker stream
-        marker = b[i + 1]
-        if marker == 0xFF:  # fill byte
-            i += 1
-            continue
-        if marker in _JPEG_STANDALONE:
-            i += 2
-            continue
-        if marker == 0xDA:  # SOS: entropy data follows, no SOF found
-            return None
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h = int.from_bytes(b[i + 5 : i + 7], "big")
-            w = int.from_bytes(b[i + 7 : i + 9], "big")
-            return w, h, _JPEG_MODES.get(b[i + 9])
-        seglen = int.from_bytes(b[i + 2 : i + 4], "big")
-        if seglen < 2:
-            return None
-        i += 2 + seglen
-    return None
-
-
-def _webp_dims(b: bytes) -> tuple[int | None, int | None]:
-    """WEBP canvas dimensions from the first chunk after the RIFF/WEBP
-    container header — VP8X (extended), VP8 (lossy key frame), or VP8L
-    (lossless) all encode width/height in fixed header bits."""
-    four = b[12:16]
-    if four == b"VP8X" and len(b) >= 30:
-        w = int.from_bytes(b[24:27], "little") + 1
-        h = int.from_bytes(b[27:30], "little") + 1
-        return w, h
-    if four == b"VP8 " and len(b) >= 30 and b[23:26] == b"\x9d\x01\x2a":
-        w = int.from_bytes(b[26:28], "little") & 0x3FFF
-        h = int.from_bytes(b[28:30], "little") & 0x3FFF
-        return w, h
-    if four == b"VP8L" and len(b) >= 25 and b[20] == 0x2F:
-        bits = int.from_bytes(b[21:25], "little")
-        return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
-    return None, None
-
-
-def _ppm_header(b: bytes) -> tuple[int, int]:
-    """Parse the ASCII (width, height) of a P5/P6 netpbm header,
-    skipping '#' comment lines per the spec."""
-    i, vals = 2, []
-    while len(vals) < 2 and i < min(len(b), 512):
-        c = b[i : i + 1]
-        if c == b"#":
-            while i < len(b) and b[i : i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        elif c.isdigit():
-            j = i
-            while j < len(b) and b[j : j + 1].isdigit():
-                j += 1
-            vals.append(int(b[i:j]))
-            i = j
-        else:
-            raise ValueError("malformed netpbm header")
-    if len(vals) < 2:
-        raise ValueError("truncated netpbm header")
-    return vals[0], vals[1]
-
-
-def decode_header(b: bytes) -> tuple[str, int | None, int | None, str | None]:
-    """Decode one image blob's (format, width, height, mode) from its
-    header alone — pure struct parsing, O(header bytes), NO codec
-    library for any supported format: BMP (little-endian
-    BITMAPINFOHEADER), netpbm P5/P6 (ASCII), PNG (IHDR chunk), JPEG
-    (SOFn marker walk), GIF (logical screen descriptor), WEBP
-    (VP8/VP8L/VP8X chunk headers). Header decode is TOTAL — it never
-    raises on recognized-but-unparseable blobs (they come back with
-    None dimensions) so one bad blob cannot abort a whole mapInPandas
-    batch; non-image RIFF containers (WAV/AVI) and everything else
-    return their format tag with None dimensions. Only PIXEL decode of
-    WEBP and non-Huffman-DCT JPEG variants remains gated — see
-    :func:`decode_pixels`."""
-    import struct
-
-    if b.startswith(b"\x89PNG\r\n\x1a\n"):
-        if len(b) >= 26 and b[12:16] == b"IHDR":
-            w, h = struct.unpack_from(">II", b, 16)
-            return "PNG", w, h, _PNG_MODES.get(b[25])
-        return "PNG", None, None, None
-    if b.startswith(b"\xff\xd8"):
-        sof = _jpeg_sof(b)
-        if sof is not None:
-            return ("JPEG", *sof)
-        return "JPEG", None, None, None
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        if len(b) >= 10:
-            w, h = struct.unpack_from("<HH", b, 6)
-            return "GIF", w, h, "P"
-        return "GIF", None, None, None
-    if b.startswith(b"RIFF") and len(b) >= 12:
-        # disambiguate the RIFF container: only WEBP is an image
-        kind = b[8:12]
-        if kind == b"WEBP":
-            w, h = _webp_dims(b)
-            return "WEBP", w, h, None
-        if kind == b"WAVE":
-            return "WAV", None, None, None
-        if kind == b"AVI ":
-            return "AVI", None, None, None
-        return "unknown", None, None, None
-    if b.startswith(b"BM") and len(b) >= 30:
-        width, height = struct.unpack_from("<ii", b, 18)
-        bpp = struct.unpack_from("<H", b, 28)[0]
-        # negative height = top-down row order, same raster dimensions;
-        # negative WIDTH is invalid per the BMP spec — flag with None
-        return (
-            "BMP",
-            width if width > 0 else None,
-            abs(height),
-            _BMP_MODES.get(bpp, "P"),
-        )
-    if b[:2] in (b"P5", b"P6") and len(b) > 2 and b[2:3].isspace():
-        w, h = _ppm_header(b)
-        return "PPM", w, h, "L" if b[:2] == b"P5" else "RGB"
-    return "unknown", None, None, None
+def _paeth(a: int, b: int, c: int) -> int:
+    """PNG Paeth predictor (RFC 2083 §6.6) over left, up, upper-left."""
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
 
 
 #: Adam7 interlace pass grid (RFC 2083 §2.6): (x0, y0, dx, dy) per pass.
@@ -570,10 +402,7 @@ def _png_unfilter(raw: bytes, off: int, w: int, h: int, bpp: int):
                 if f == 3:
                     pr = (a + up) >> 1
                 else:
-                    ul = int(prev[i - bpp]) if i >= bpp else 0
-                    p = a + up - ul
-                    pa, pb, pc = abs(p - a), abs(p - up), abs(p - ul)
-                    pr = a if pa <= pb and pa <= pc else (up if pb <= pc else ul)
+                    pr = _paeth(a, up, int(prev[i - bpp]) if i >= bpp else 0)
                 rec[i] = (int(line[i]) + pr) & 0xFF
         else:
             raise ValueError(f"malformed PNG: filter type {f}")
@@ -619,28 +448,24 @@ def _png_pixels(b: bytes):
     if ctype == 3 and depth != 8:
         raise ValueError(f"malformed PNG: palette with depth {depth}")
     bpp = nch * (depth // 8)
-    raw = zlib.decompress(b"".join(idat))
-    if interlace == 0:
-        out, off = _png_unfilter(raw, 0, w, h, bpp)
-        if off != len(raw):
-            raise ValueError("malformed PNG: IDAT size mismatch")
-    elif interlace == 1:
-        out = np.zeros((h, w * bpp), np.uint8)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            wp = (w - x0 + dx - 1) // dx
-            hp = (h - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
-            sub, off = _png_unfilter(raw, off, wp, hp, bpp)
-            cols = (
-                (x0 + np.arange(wp) * dx)[:, None] * bpp + np.arange(bpp)
-            ).reshape(-1)
-            out[np.ix_(np.arange(y0, h, dy), cols)] = sub
-        if off != len(raw):
-            raise ValueError("malformed PNG: IDAT size mismatch")
-    else:
+    if interlace not in (0, 1):
         raise ValueError(f"malformed PNG: interlace method {interlace}")
+    raw = zlib.decompress(b"".join(idat))
+    out = np.zeros((h, w * bpp), np.uint8)
+    off = 0
+    # a non-interlaced image is one pass over the full grid
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        wp = (w - x0 + dx - 1) // dx
+        hp = (h - y0 + dy - 1) // dy
+        if interlace and (wp <= 0 or hp <= 0):
+            continue  # an empty Adam7 pass carries no scanlines
+        sub, off = _png_unfilter(raw, off, wp, hp, bpp)
+        cols = (
+            (x0 + np.arange(wp) * dx)[:, None] * bpp + np.arange(bpp)
+        ).reshape(-1)
+        out[np.ix_(np.arange(y0, h, dy), cols)] = sub
+    if off != len(raw):
+        raise ValueError("malformed PNG: IDAT size mismatch")
     if ctype == 3:  # palette indices -> RGB
         if plte is None:
             raise ValueError("malformed PNG: palette image without PLTE")
@@ -648,114 +473,8 @@ def _png_pixels(b: bytes):
         pal = pal[: (len(pal) // 3) * 3].reshape(-1, 3)
         return pal[out.reshape(h, w)]
     if depth == 16:  # big-endian sample pairs -> native uint16
-        px = np.frombuffer(out.tobytes(), np.dtype(">u2")).reshape(h, w, nch)
-        px = px.astype(np.uint16)
-        return px.reshape((h, w, nch) if nch > 1 else (h, w))
+        out = np.frombuffer(out.tobytes(), np.dtype(">u2")).astype(np.uint16)
     return out.reshape((h, w, nch) if nch > 1 else (h, w))
-
-
-def _gif_pixels(b: bytes):
-    """Codec-free GIF first-frame pixel decode: pure-Python GIF-LZW
-    (variable-width codes with clear/EOI, GIF89a spec appendix F) +
-    palette expansion to RGB. Handles local/global color tables and
-    Adam-style 4-pass interlacing."""
-    import struct
-
-    import numpy as np
-
-    if not (b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 13):
-        raise ValueError("malformed GIF: bad signature")
-    flags = b[10]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        gct = b[pos : pos + 3 * n]
-        pos += 3 * n
-    while pos < len(b):
-        block = b[pos]
-        if block == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(b) and b[pos] != 0:
-                pos += 1 + b[pos]
-            pos += 1
-        elif block == 0x2C:  # image descriptor
-            _left, _top, w, h = struct.unpack_from("<HHHH", b, pos + 1)
-            iflags = b[pos + 9]
-            pos += 10
-            pal = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                pal = b[pos : pos + 3 * n]
-                pos += 3 * n
-            if pal is None:
-                raise ValueError("malformed GIF: no color table")
-            min_code = b[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                ln = b[pos]
-                data += b[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            # ---- GIF-LZW: codes grow from min_code+1 up to 12 bits
-            clear, eoi = 1 << min_code, (1 << min_code) + 1
-            dict_init = [bytes([i]) for i in range(clear)] + [b"", b""]
-            table = list(dict_init)
-            width = min_code + 1
-            out = bytearray()
-            acc = nbits = 0
-            prev: bytes | None = None
-            done = False  # EOI ends the WHOLE stream: bytes after it
-            # (sub-block padding) must not be decoded as codes
-            for byte in data:
-                if done:
-                    break
-                acc |= byte << nbits
-                nbits += 8
-                while nbits >= width:
-                    code = acc & ((1 << width) - 1)
-                    acc >>= width
-                    nbits -= width
-                    if code == clear:
-                        table = list(dict_init)
-                        width = min_code + 1
-                        prev = None
-                        continue
-                    if code == eoi:
-                        done = True
-                        break
-                    if code < len(table):
-                        entry = table[code]
-                    elif code == len(table) and prev is not None:
-                        entry = prev + prev[:1]
-                    else:
-                        raise ValueError("malformed GIF: bad LZW code")
-                    out += entry
-                    if prev is not None and len(table) < 4096:
-                        table.append(prev + entry[:1])
-                        if len(table) == (1 << width) and width < 12:
-                            width += 1
-                    prev = entry
-            idx = np.frombuffer(bytes(out[: w * h]), np.uint8)
-            if idx.size < w * h:
-                raise ValueError("malformed GIF: truncated pixel data")
-            idx = idx.reshape(h, w)
-            if iflags & 0x40:  # 4-pass interlace row order
-                order = (
-                    list(range(0, h, 8)) + list(range(4, h, 8))
-                    + list(range(2, h, 4)) + list(range(1, h, 2))
-                )
-                de = np.empty_like(idx)
-                de[order] = idx
-                idx = de
-            p = np.frombuffer(pal, np.uint8)
-            p = p[: (len(p) // 3) * 3].reshape(-1, 3)
-            return p[idx]
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"malformed GIF: unknown block 0x{block:02x}")
-    raise ValueError("malformed GIF: no image descriptor")
 
 
 #: JPEG zigzag scan order: stream position k -> natural block index.
@@ -769,6 +488,21 @@ _JPEG_ZZ = (
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63,
 )
+
+
+def _dct_basis():
+    """8x8 DCT basis A[u, x] = C(u)/2 * cos((2x+1) u pi / 16): forward
+    F = A f A.T, inverse f = A.T F A."""
+    import numpy as np
+
+    u = np.arange(8)
+    A = 0.5 * np.cos((2 * u[None, :] + 1) * u[:, None] * np.pi / 16)
+    A[0] /= np.sqrt(2.0)
+    return A
+
+
+#: JPEG markers that carry no length segment (standalone).
+_JPEG_STANDALONE = frozenset({0xD8, 0x01} | set(range(0xD0, 0xD8)))
 
 
 def _jpeg_huff_table(counts: bytes, symbols: bytes) -> dict:
@@ -1112,10 +846,7 @@ def _jpeg_reconstruct(frame, coefs, qt):
     h, w, comps = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
-    # IDCT basis: A[u, x] = C(u)/2 * cos((2x+1) u pi / 16); f = A.T F A
-    u = np.arange(8)
-    A = 0.5 * np.cos((2 * u[None, :] + 1) * u[:, None] * np.pi / 16)
-    A[0] /= np.sqrt(2.0)
+    A = _dct_basis()
     zz = np.array(_JPEG_ZZ)
 
     full = []
@@ -1146,96 +877,24 @@ def _jpeg_reconstruct(frame, coefs, qt):
 
 
 def decode_pixels(b: bytes):
-    """Decode a blob to a raster numpy array. Codec-free formats decode
-    natively: netpbm P5/P6 (raw grayscale / RGB), uncompressed 24/
-    32-bit BMP, PNG (stdlib zlib + numpy unfilter — _png_pixels), GIF
-    (pure-Python LZW — _gif_pixels), and Huffman-coded JPEG — baseline,
+    """Decode a PNG or JPEG blob to a raster numpy array, picking the
+    decoder from the signature bytes. PNG decodes through stdlib zlib +
+    numpy unfilter (:func:`_png_pixels`); Huffman-coded JPEG — baseline,
     extended sequential, and progressive, incl. spectral selection /
-    successive approximation / restart intervals (pure-Python entropy
-    decode + numpy IDCT — _jpeg_pixels). Only WEBP and the
-    non-Huffman-DCT JPEG variants (lossless/hierarchical/arithmetic,
-    SOF3/5-7/9-15) require a codec library this environment does not
-    ship — that documented NotImplementedError lives HERE, at the
-    pixel grain, not in header metadata (decode_header is total)."""
-    import struct
-
-    import numpy as np
-
-    fmt, w, h, _mode = decode_header(b)
-    if fmt == "PNG":
+    successive approximation / restart intervals — through pure-Python
+    entropy decode + numpy IDCT (:func:`_jpeg_pixels`). Any other blob
+    raises NotImplementedError naming the two formats; inside them,
+    variants no decoder here handles (sub-byte PNG depths, lossless/
+    hierarchical/arithmetic JPEG) raise it too, and malformed streams
+    raise ValueError."""
+    if b.startswith(b"\x89PNG\r\n\x1a\n"):
         return _png_pixels(b)
-    if fmt == "GIF":
-        return _gif_pixels(b)
-    if fmt == "JPEG":
+    if b.startswith(b"\xff\xd8"):
         return _jpeg_pixels(b)
-    if fmt == "PPM" and w and h:
-        # pixel data starts after the maxval token + one whitespace;
-        # maxval > 255 means 2 bytes per sample, big-endian (netpbm spec)
-        depth = 1 if b[:2] == b"P5" else 3
-        i, vals, maxval = 2, 0, 0
-        while vals < 3 and i < min(len(b), 512):
-            c = b[i : i + 1]
-            if c == b"#":
-                while i < len(b) and b[i : i + 1] != b"\n":
-                    i += 1
-            elif c.isspace():
-                i += 1
-            elif c.isdigit():
-                j = i
-                while j < len(b) and b[j : j + 1].isdigit():
-                    j += 1
-                maxval, i, vals = int(b[i:j]), j, vals + 1
-            else:
-                break
-        i += 1  # single whitespace after maxval
-        dtype = np.dtype(">u2") if maxval > 255 else np.uint8
-        px = np.frombuffer(b, dtype=dtype, count=w * h * depth, offset=i)
-        return px.reshape((h, w, depth) if depth > 1 else (h, w)).astype(px.dtype.newbyteorder("="))
-    if fmt == "BMP" and w and h:
-        off = struct.unpack_from("<I", b, 10)[0]
-        bpp = struct.unpack_from("<H", b, 28)[0]
-        compression = struct.unpack_from("<I", b, 30)[0] if len(b) >= 34 else 0
-        if bpp in (24, 32) and compression == 0:
-            nch = bpp // 8
-            stride = (w * nch + 3) & ~3  # rows pad to 4-byte boundary
-            rows = np.frombuffer(b, dtype=np.uint8, count=stride * h, offset=off)
-            raster = rows.reshape(h, stride)[:, : w * nch].reshape(h, w, nch)
-            raw_h = struct.unpack_from("<i", b, 22)[0]
-            if raw_h > 0:  # bottom-up row order
-                raster = raster[::-1]
-            return raster[:, :, ::-1].copy()  # BGR(A) -> RGB(A)
-        raise NotImplementedError(
-            f"decode_pixels: BMP bpp={bpp} compression={compression} "
-            "needs a codec library; this environment ships none"
-        )
     raise NotImplementedError(
-        f"decode_pixels: {fmt} pixel decode needs a codec library (WEBP "
-        "VP8/VP8L entropy coding); this environment ships none (header "
-        "metadata decodes natively for all formats — see decode_header; "
-        "PNG/GIF/BMP/netpbm and all Huffman-coded JPEG variants decode "
-        "codec-free)"
+        "decode_pixels: only PNG and JPEG blobs decode; this blob starts "
+        f"with {bytes(b[:8])!r}"
     )
-
-
-def decode_image(df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob") -> DataFrame:
-    """Decode image blobs to (format, width, height, mode) metadata
-    via Arrow-batched mapInPandas — the decode stage of the multimodal
-    pipeline. All six supported formats (BMP, netpbm, PNG, JPEG, GIF,
-    WEBP) parse natively from their headers (no codec library needed;
-    O(header) per blob, not O(bytes)), and the parse is total — a
-    malformed or unknown blob yields a row with None dimensions
-    instead of aborting the batch. tests/test_multimodal.py feeds
-    generated fixtures for every format through this end-to-end."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = [f.name for f in IMAGE_META_SCHEMA.fields]
-        for pdf in batches:
-            metas = [decode_header(bytes(b)) for b in pdf[blob_col]]
-            out = pd.DataFrame(metas, columns=names[1:])
-            out.insert(0, names[0], pdf[id_col].to_numpy())
-            yield out
-
-    return df.select(id_col, blob_col).mapInPandas(decode, IMAGE_META_SCHEMA)
 
 
 def sample_frames(df: DataFrame, blob_col: str = "blob", every_n: int = 1000) -> DataFrame:

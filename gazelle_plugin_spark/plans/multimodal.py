@@ -1,11 +1,13 @@
-"""Multimodal pipeline queries over synthesized binary columns.
+"""Multimodal pipeline queries over binary columns.
 
-The testdata has no real media table, so blobs are synthesized from
-``documents.text`` (utf-8 bytes) via operators.multimodal.attach_blob
-— the pipeline shapes (binary columns + typed metadata, mapInPandas
-feature extraction, frame-sample explosion) are the real thing; only
-the codec is fake. See operators/multimodal.py for the decode stub
-contract.
+The testdata has no real media table. Three queries synthesize blobs
+from ``documents.text`` (utf-8 bytes) via operators.multimodal.attach_blob
+and exercise the pipeline shapes (binary columns + typed metadata,
+mapInPandas feature extraction, frame-sample explosion). The two
+pixel-stats queries plant real PNG and JPEG blobs built by the fixture
+encoders and decode them with the package's own codec-free decoders
+(operators/multimodal.py decode_pixels); their DuckDB oracles re-derive
+the pixel statistics from the planting formula.
 """
 
 from __future__ import annotations

@@ -87,6 +87,11 @@ ENGINE_CONFS: dict[str, str] = {
 }
 
 
+#: The checkout root: the directory holding the ``gazelle_plugin_spark``
+#: package, put on the Python workers' path by :func:`get_spark`.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def session_confs() -> dict[str, str]:
     """The engine's session config profile (copy)."""
     return dict(ENGINE_CONFS)
@@ -102,6 +107,13 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
     real cluster leave it None and let spark-submit provide it.
+
+    Python workers unpickle module-level kernels by reference, so they
+    must import the package from any working directory: the checkout
+    root leads ``spark.executorEnv.PYTHONPATH``, ahead of any value the
+    caller passes in ``extra_confs``. On a cluster that path must also
+    exist on the executors; otherwise ship the package with
+    ``--py-files``.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
@@ -114,6 +126,8 @@ def get_spark(
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_confs:
         confs.update(extra_confs)
+    path = "spark.executorEnv.PYTHONPATH"
+    confs[path] = os.pathsep.join(p for p in (_PACKAGE_ROOT, confs.get(path)) if p)
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1,6 +1,8 @@
 """Multimodal plumbing tests: blob attachment schema, mapInPandas
-feature extraction verified against a plain-Python oracle, the decode
-stub contract, and the frame-sample explosion."""
+feature extraction verified against a plain-Python oracle, PNG and
+Huffman-JPEG pixel decode round-tripped through test-side encoders (and
+the NotImplementedError every other format raises), and the
+frame-sample explosion."""
 
 from __future__ import annotations
 
@@ -10,7 +12,6 @@ from pyspark.sql import functions as F
 
 from gazelle_plugin_spark.operators.multimodal import (
     attach_blob,
-    decode_image,
     extract_byte_features,
     sample_frames,
 )
@@ -71,36 +72,6 @@ def test_byte_features_kernel_output_is_typed(rows):
     )
 
 
-def _bmp(w: int, h: int, bpp: int = 24) -> bytes:
-    import struct
-
-    return (
-        b"BM"
-        + struct.pack("<IHHI", 54, 0, 0, 54)      # size, reserved, offset
-        + struct.pack("<IiiHH", 40, w, h, 1, bpp)  # BITMAPINFOHEADER head
-        + b"\x00" * 24                             # rest of DIB + stub pixels
-    )
-
-
-def test_decode_image_bmp_ppm(spark):
-    """Generated BMP / netpbm fixtures decode end-to-end through the
-    mapInPandas pipeline (real header parse, no codec library)."""
-    rows = [
-        (0, _bmp(640, 480)),
-        (1, _bmp(32, -16, bpp=32)),             # top-down BMP
-        (2, b"P6\n# a comment\n123 77\n255\n" + b"\x01" * 8),
-        (3, b"P5 12 34 255 " + b"\x02" * 8),
-        (4, b"not an image at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, blob binary")
-    got = {r.doc_id: r for r in decode_image(df).collect()}
-    assert (got[0].format, got[0].width, got[0].height, got[0].mode) == ("BMP", 640, 480, "RGB")
-    assert (got[1].format, got[1].width, got[1].height, got[1].mode) == ("BMP", 32, 16, "RGBA")
-    assert (got[2].format, got[2].width, got[2].height, got[2].mode) == ("PPM", 123, 77, "RGB")
-    assert (got[3].format, got[3].width, got[3].height, got[3].mode) == ("PPM", 12, 34, "L")
-    assert got[4].format == "unknown" and got[4].width is None and got[4].mode is None
-
-
 def _png(w: int, h: int, color_type: int = 6) -> bytes:
     import struct
 
@@ -128,12 +99,6 @@ def _jpeg(w: int, h: int, ncomp: int = 3) -> bytes:
     return b"\xff\xd8" + app0 + sof0 + b"\xff\xda\x00\x02"
 
 
-def _gif(w: int, h: int) -> bytes:
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00" * 5
-
-
 def _webp_vp8l(w: int, h: int) -> bytes:
     import struct
 
@@ -144,74 +109,17 @@ def _webp_vp8l(w: int, h: int) -> bytes:
     )
 
 
-def test_decode_header_compressed_formats(spark):
-    """PNG/JPEG/GIF/WEBP dimensions parse from pure struct reads — no
-    codec library — through the full mapInPandas pipeline; non-image
-    RIFF (WAV) is distinguished from WEBP instead of misflagged."""
-    rows = [
-        (0, _png(800, 600)),
-        (1, _jpeg(640, 480)),
-        (2, _gif(320, 200)),
-        (3, _webp_vp8l(100, 50)),
-        (4, b"RIFF\x00\x00\x00\x00WAVEfmt "),   # audio container
-        (5, _png(1, 1)[:10]),                    # truncated PNG
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, blob binary")
-    got = {r.doc_id: r for r in decode_image(df).collect()}
-    assert (got[0].format, got[0].width, got[0].height, got[0].mode) == ("PNG", 800, 600, "RGBA")
-    assert (got[1].format, got[1].width, got[1].height, got[1].mode) == ("JPEG", 640, 480, "RGB")
-    assert (got[2].format, got[2].width, got[2].height, got[2].mode) == ("GIF", 320, 200, "P")
-    assert (got[3].format, got[3].width, got[3].height) == ("WEBP", 100, 50)
-    assert got[4].format == "WAV" and got[4].width is None
-    # total parse: a truncated blob yields a row, never a batch abort
-    assert got[5].format == "PNG" and got[5].width is None
-
-
-def test_decode_header_bmp_negative_width_flagged():
-    """Negative BMP width is invalid per spec — flagged as None, not
-    passed through as a nonsense dimension."""
-    import struct
-
-    from gazelle_plugin_spark.operators.multimodal import decode_header
-
-    bad = (
-        b"BM" + struct.pack("<IHHI", 54, 0, 0, 54)
-        + struct.pack("<IiiHH", 40, -12, 34, 1, 24) + b"\x00" * 24
-    )
-    assert decode_header(bad) == ("BMP", None, 34, "RGB")
-
-
 def test_decode_pixels_native_and_gated():
-    """Pixel decode is native for netpbm and uncompressed 24-bit BMP;
-    compressed formats keep the documented env-gated
-    NotImplementedError (the codec gate lives at the PIXEL grain)."""
-    import struct
-
+    """Only PNG and JPEG decode: a GIF, BMP or WEBP blob raises the
+    NotImplementedError naming the two formats. Inside JPEG,
+    arithmetic-coded frames (SOF10) keep the codec gate, and a
+    header-only stub (no tables, no scan) is MALFORMED — fail-loud,
+    never a silently-wrong raster."""
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
-    p5 = b"P5\n2 2\n255\n" + bytes([1, 2, 3, 4])
-    assert decode_pixels(p5).tolist() == [[1, 2], [3, 4]]
-    # 2x2 24-bit bottom-up BMP: rows stored bottom-first, BGR, 4-byte
-    # padded stride (2*3 -> 8). Image: top = red,green; bottom = blue,white.
-    pix = (
-        bytes([255, 0, 0]) + bytes([255, 255, 255]) + b"\x00\x00"  # bottom row BGR
-        + bytes([0, 0, 255]) + bytes([0, 255, 0]) + b"\x00\x00"    # top row BGR
-    )
-    bmp = (
-        b"BM" + struct.pack("<IHHI", 54 + len(pix), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(pix), 0, 0, 0, 0)
-        + pix
-    )
-    raster = decode_pixels(bmp)
-    assert raster.shape == (2, 2, 3)
-    assert raster[0].tolist() == [[255, 0, 0], [0, 255, 0]]   # red, green
-    assert raster[1].tolist() == [[0, 0, 255], [255, 255, 255]]  # blue, white
-    with pytest.raises(NotImplementedError, match="codec"):
-        decode_pixels(_webp_vp8l(4, 4))
-    # arithmetic-coded JPEG (SOF10) keeps the honest codec gate; the
-    # old header-only baseline stub is now MALFORMED (it has no
-    # tables/scan), not gated — fail-loud, never a silently-wrong
-    # raster
+    for blob in (b"GIF89a" + bytes(7), b"BM" + bytes(52), _webp_vp8l(4, 4)):
+        with pytest.raises(NotImplementedError, match="only PNG and JPEG"):
+            decode_pixels(blob)
     with pytest.raises(NotImplementedError, match="codec"):
         decode_pixels(_jpeg(4, 4).replace(b"\xff\xc0", b"\xff\xca"))
     with pytest.raises(ValueError, match="malformed JPEG"):
@@ -333,140 +241,6 @@ def test_decode_pixels_png_all_filters_and_color_types():
     got = decode_pixels(_encode_png(idx, 3, [0, 1, 2], palette=pal))
     expect = np.frombuffer(pal, np.uint8).reshape(-1, 3)[idx]
     assert got.shape == (3, 4, 3) and (got == expect).all()
-
-
-def test_decode_pixels_netpbm_16bit():
-    """P5/P6 with maxval > 255 decode as big-endian 2-byte samples per
-    the netpbm spec (previously misread as uint8 — round-9 advice)."""
-    import numpy as np
-
-    from gazelle_plugin_spark.operators.multimodal import decode_pixels
-
-    vals = [0, 300, 65535, 1234]
-    p5 = b"P5\n2 2\n65535\n" + b"".join(v.to_bytes(2, "big") for v in vals)
-    got = decode_pixels(p5)
-    assert got.dtype == np.uint16 and got.tolist() == [[0, 300], [65535, 1234]]
-    rgb = list(range(0, 1200, 100))  # 2x2x3 samples
-    p6 = b"P6\n2 2\n1023\n" + b"".join(v.to_bytes(2, "big") for v in rgb)
-    got = decode_pixels(p6)
-    assert got.shape == (2, 2, 3) and got.reshape(-1).tolist() == rgb
-
-
-def _gif_lzw_encode(indices, min_code: int) -> bytes:
-    """Reference GIF-LZW encoder for the decode tests (GIF89a appendix
-    F semantics: clear/EOI codes, LSB-first variable-width packing,
-    width grows when the next assignable code would overflow it)."""
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    width = min_code + 1
-    bits: list[tuple[int, int]] = [(clear, width)]
-    prev = b""
-    for px in indices:
-        cur = prev + bytes([px])
-        if cur in table:
-            prev = cur
-            continue
-        bits.append((table[prev], width))
-        if next_code < 4096:
-            table[cur] = next_code
-            next_code += 1
-            if next_code - 1 == (1 << width) and width < 12:
-                width += 1
-        prev = bytes([px])
-    if prev:
-        bits.append((table[prev], width))
-    bits.append((eoi, width))
-    out = bytearray()
-    acc = nbits = 0
-    for code, w in bits:
-        acc |= code << nbits
-        nbits += w
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _encode_gif(idx, palette: bytes, min_code: int = 2, interlace: bool = False) -> bytes:
-    """Minimal single-frame GIF encoder (global color table) for the
-    decode tests."""
-    import struct
-
-    import numpy as np
-
-    arr = np.asarray(idx, dtype=np.uint8)
-    h, w = arr.shape
-    n = max(2, (len(palette) // 3))
-    # color table size field: smallest k with 2^(k+1) >= n
-    k = max(0, (n - 1).bit_length() - 1)
-    table = palette + b"\x00" * (3 * ((2 << k) - len(palette) // 3))
-    rows = arr
-    if interlace:
-        order = (
-            list(range(0, h, 8)) + list(range(4, h, 8))
-            + list(range(2, h, 4)) + list(range(1, h, 2))
-        )
-        rows = arr[order]
-    lzw = _gif_lzw_encode(rows.reshape(-1).tolist(), min_code)
-    sub = b"".join(
-        bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
-        for i in range(0, len(lzw), 255)
-    )
-    return (
-        b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | k, 0, 0) + table
-        + b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
-        + bytes([0x40 if interlace else 0])
-        + bytes([min_code]) + sub + b"\x00" + b"\x3b"
-    )
-
-
-def test_decode_pixels_gif_lzw():
-    """GIF pixels decode codec-free (pure-Python LZW): repetitive data
-    (dictionary growth + width growth + KwKwK patterns), random data,
-    and 4-pass interlacing all round-trip through the palette."""
-    import numpy as np
-
-    from gazelle_plugin_spark.operators.multimodal import decode_pixels
-
-    pal = bytes(range(12))  # 4 RGB entries
-    # repetitive pattern: exercises dictionary hits and code-width growth
-    idx = np.tile(np.array([[0, 0, 1, 1], [2, 2, 3, 3]], np.uint8), (4, 3))
-    got = decode_pixels(_encode_gif(idx, pal, min_code=2))
-    expect = np.frombuffer(pal, np.uint8).reshape(-1, 3)[idx]
-    assert got.shape == (8, 12, 3) and (got == expect).all()
-    # random indices over a 16-color palette
-    rng = np.random.RandomState(11)
-    pal16 = bytes(rng.randint(0, 256, 48, dtype=np.uint8))
-    idx = rng.randint(0, 16, (9, 7), dtype=np.uint8)
-    got = decode_pixels(_encode_gif(idx, pal16, min_code=4))
-    assert (got == np.frombuffer(pal16, np.uint8).reshape(-1, 3)[idx]).all()
-    # interlaced variant restores scanline order
-    got = decode_pixels(_encode_gif(idx, pal16, min_code=4, interlace=True))
-    assert (got == np.frombuffer(pal16, np.uint8).reshape(-1, 3)[idx]).all()
-
-
-def test_decode_pixels_gif_padding_after_eoi():
-    """Bytes after the EOI code (legal sub-block padding) must be
-    ignored, not decoded as further LZW codes — the decoder stops
-    consuming the byte stream entirely at EOI (advisory r10 item)."""
-    import numpy as np
-
-    from gazelle_plugin_spark.operators.multimodal import decode_pixels
-
-    pal = bytes(range(12))
-    idx = np.tile(np.array([[0, 1], [2, 3]], np.uint8), (3, 4))
-    blob = _encode_gif(idx, pal, min_code=2)
-    # splice an extra data sub-block of junk between the final LZW
-    # sub-block and the 0x00 terminator: 0xFF bytes are NOT valid
-    # codes for the tiny post-EOI table, so decoding them would raise
-    assert blob.endswith(b"\x00\x3b")
-    padded = blob[:-2] + bytes([4]) + b"\xff\xff\xff\xff" + b"\x00\x3b"
-    got = decode_pixels(padded)
-    assert (got == np.frombuffer(pal, np.uint8).reshape(-1, 3)[idx]).all()
 
 
 def test_decode_pixels_png_16bit():

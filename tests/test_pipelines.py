@@ -701,9 +701,13 @@ def test_routed_kernel_empty_group_serializes(spark):
     convert it to array<float>), a single row, and, for the grouped
     assignment, an empty candidate side (its coalesce-to-own-group
     fallback). The route and PQ kernels always see their full
-    broadcast candidate set. Every output column must arrive as its
-    declared Arrow type."""
+    broadcast candidate set. Every case also runs at bucket widths 32
+    (the engine profile) and 200 (vanilla's default), where most
+    buckets hold no rows. Every output column must arrive as its
+    declared Arrow type. An all-NaN PQ row must surface the kernel's
+    ``NonFiniteEmbeddingError`` by name through the Python worker."""
     import pyarrow as pa
+    import pytest
 
     from gazelle_plugin_spark.plans import similarity_queries as simq
 
@@ -723,6 +727,7 @@ def test_routed_kernel_empty_group_serializes(spark):
     )
     d64 = "vec_id long, e array<double>"
     pq_rows = spark.createDataFrame([(9, [1.0] * 64)], d64)
+    pq_nan = spark.createDataFrame([(9, [float("nan")] * 64)], d64)
     codebook = spark.createDataFrame([(0, [0.0] * 64), (1, [1.0] * 64)], d64)
     cases = [
         # (kernel, schema, rows, candidates, width, key, checked
@@ -760,15 +765,22 @@ def test_routed_kernel_empty_group_serializes(spark):
         ),
     ]
     for kernel, schema, rows_df, cand_df, width, key, cols, expected in cases:
-        table = simq._bucket_cogroup(
-            spark, rows_df, cand_df, kernel, schema, width, key
-        ).toArrow()
-        declared = [f.split(" ", 1) for f in schema.split(", ")]
-        assert table.schema.names == [n for n, _ in declared], kernel
-        for (name, typ), field in zip(declared, table.schema):
-            assert field.type == arrow[typ], (kernel, name, field.type)
-        got = set(zip(*(table.column(c).to_pylist() for c in cols)))
-        assert got == expected, (kernel, got)
+        for w in (width, 32, 200):
+            table = simq._bucket_cogroup(
+                spark, rows_df, cand_df, kernel, schema, w, key
+            ).toArrow()
+            declared = [f.split(" ", 1) for f in schema.split(", ")]
+            assert table.schema.names == [n for n, _ in declared], (kernel, w)
+            for (name, typ), field in zip(declared, table.schema):
+                assert field.type == arrow[typ], (kernel, w, name, field.type)
+            got = set(zip(*(table.column(c).to_pylist() for c in cols)))
+            assert got == expected, (kernel, w, got)
+    for w in (8, 32, 200):
+        pq = simq._bucket_cogroup(
+            spark, pq_nan, codebook, simq._pq_codes_group, simq._PQ_SCHEMA, w
+        )
+        with pytest.raises(Exception, match=r"NonFiniteEmbeddingError.*vec_id \[9\]"):
+            pq.collect()
 
 
 def test_pq_codes_reject_non_finite_embedding():
