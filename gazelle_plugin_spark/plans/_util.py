@@ -10,14 +10,46 @@ the same convention.
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gazelle_plugin_spark.catalog import read_parquet, table_path
+from gazelle_plugin_spark.session import _PACKAGE_ROOT
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, table_path(sf_dir, name))
+
+
+def materialize_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
+    """The directory of mirror ``name`` (an at-rest copy of ``sf_dir``'s
+    tables), ``.mirror_cache/<sf>/<name>`` in the checkout (gitignored),
+    written by ``write(path)`` only if no earlier run left it complete.
+
+    Complete means it holds the ``_SUCCESS`` marker every Spark file
+    commit leaves; a directory without it is a crashed run's and is
+    removed. ``write`` targets a pid-suffixed sibling that is renamed
+    into place atomically, so concurrent first-time builders never see a
+    partial mirror: the loser of the rename race discards its copy."""
+    dst = os.path.join(_PACKAGE_ROOT, ".mirror_cache", os.path.basename(sf_dir.rstrip("/")), name)
+    marker = os.path.join(dst, "_SUCCESS")
+    if not os.path.exists(marker):
+        shutil.rmtree(dst, ignore_errors=True)
+        tmp = f"{dst}.tmp.{os.getpid()}"
+        write(tmp)
+        if not os.path.exists(marker):
+            try:
+                os.rename(tmp, dst)
+            except OSError:  # a concurrent winner renamed first
+                pass
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(marker):
+            raise RuntimeError(f"mirror {name!r} of {sf_dir} failed to materialize")
+    return dst
 
 
 def shuffle_width(spark: SparkSession) -> int:

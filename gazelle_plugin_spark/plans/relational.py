@@ -18,7 +18,14 @@ from pyspark.sql import functions as F
 
 from gazelle_plugin_spark.operators import aggregates, joins, setops
 from gazelle_plugin_spark.plans import query
-from gazelle_plugin_spark.plans._util import dec, disc_price, sql_dsum, t, SQL_DISC_PRICE
+from gazelle_plugin_spark.plans._util import (
+    SQL_DISC_PRICE,
+    dec,
+    disc_price,
+    materialize_once,
+    sql_dsum,
+    t,
+)
 
 
 @query(
@@ -1232,7 +1239,7 @@ def bkt_colocated_join(spark, sf_dir):
     equivalent is bucketing both join sides on the join key at rest,
     which this query exercises END-TO-END with a value oracle (the
     plain-parquet SQL form): lineitem and orders are mirrored once
-    into 8-bucket, per-bucket-sorted managed tables, and the
+    into 8-bucket, per-bucket-sorted parquet files, and the
     orderkey join then plans with ZERO exchange before the join
     (plan-golden: two shuffles total — the year rollup and the final
     ORDER BY; an unbucketed orderkey join shuffles BOTH fact sides
@@ -1244,75 +1251,47 @@ def bkt_colocated_join(spark, sf_dir):
 
     Scale shape: THE 100 TB lever (SCALE.md) — a nightly-bucketed
     fact turns every orderkey join from a full shuffle of the fact
-    into a local zip of bucket files. The mirror is built per
-    session+process (pid-suffixed table names), so concurrent bench
-    JVMs never write the same warehouse path; repeated calls in one
-    session reuse the catalog entry, and mirrors left by DEAD
-    processes are dropped on entry so the warehouse stays bounded.
+    into a local zip of bucket files. The bucket files are written
+    once per checkout (``_util.materialize_once``; ``bucketBy`` only
+    writes through ``saveAsTable``, so through a staging external
+    table whose catalog entry is dropped after the write). Each
+    session registers them as external tables in the ``bktdb``
+    database, which starts no Spark job.
     """
     import os
 
     from gazelle_plugin_spark.sources.bucketing import write_bucketed
 
+    spark.sql("CREATE DATABASE IF NOT EXISTS bktdb")
     slug = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    pid = os.getpid()
 
-    # pin the mirror's files INSIDE the repo regardless of the calling
-    # process's cwd (the default warehouse is $PWD/spark-warehouse):
-    # a database created with an explicit LOCATION overrides the
-    # session warehouse for every table created in it
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    spark.sql(
-        "CREATE DATABASE IF NOT EXISTS bktdb "
-        f"LOCATION '{os.path.join(repo_root, '.bkt_warehouse')}'"
-    )
+    def bucketed(name: str, key: str):
+        src = t(spark, sf_dir, name)
 
-    def drop_stale() -> None:
-        # pid-suffixed mirrors of processes that no longer exist are
-        # garbage — remove them so .bkt_warehouse stays bounded by the
-        # number of LIVE processes (each recycled bench worker used to
-        # leave one behind forever). Filesystem-level on purpose: a
-        # fresh process's metastore does not know the old tables, so
-        # SHOW TABLES cannot see them. A live process's directory is
-        # never touched (os.kill(pid, 0) liveness probe).
-        import shutil
-
-        wh = os.path.join(repo_root, ".bkt_warehouse")
-        for d in os.listdir(wh) if os.path.isdir(wh) else []:
-            tail = d.rsplit("_", 1)[-1]
-            if d.startswith("bkt_") and tail.isdigit() and int(tail) != pid:
-                try:
-                    os.kill(int(tail), 0)
-                except ProcessLookupError:
-                    # ESRCH only: EPERM (PermissionError) means the pid
-                    # EXISTS under another user — leave its mirror alone
-                    shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
-                except OSError:
-                    pass
-
-    drop_stale()
-
-    def mirror(name: str, key: str) -> str:
-        tbl = f"bktdb.bkt_{name}_{slug}_{pid}"
-        if not spark.catalog.tableExists(tbl):
-            # one FILE per bucket (repartition on the key into the
-            # bucket count): Spark only trusts per-bucket sort order
-            # when a bucket is a single file, and that trust is what
-            # lets the SMJ skip its sorts
+        def write(path: str) -> None:
+            # one file per bucket: repartition on the key into the
+            # bucket count
             write_bucketed(
-                t(spark, sf_dir, name).repartition(8, F.col(key)),
-                tbl, [key], num_buckets=8, sort_cols=[key],
+                src.repartition(8, F.col(key)), "bktdb.staging", [key],
+                num_buckets=8, sort_cols=[key], path=path,
             )
-        return tbl
+            spark.sql("DROP TABLE bktdb.staging")  # external: the files stay
 
-    li = spark.table(mirror("lineitem", "l_orderkey"))
+        loc = materialize_once(sf_dir, f"bucketed/{name}", write)
+        cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema)
+        tbl = f"bktdb.{name}_{slug}"
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {tbl} ({cols}) USING parquet CLUSTERED BY ({key}) "
+            f"SORTED BY ({key}) INTO 8 BUCKETS LOCATION '{loc}'"
+        )
+        return spark.table(tbl)
+
+    li = bucketed("lineitem", "l_orderkey")
     # the merge hint pins the fact-x-fact plan shape: at test scale
     # orders fits the broadcast threshold and Catalyst would broadcast
     # it (hiding the bucket co-location this query exists to prove);
     # at 100 TB both sides are facts and SMJ is the plan regardless
-    o = spark.table(mirror("orders", "o_orderkey")).hint("merge")
+    o = bucketed("orders", "o_orderkey").hint("merge")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(F.year("o_orderdate").cast("int").alias("d_year"))

@@ -1038,10 +1038,10 @@ def run_file(spark, rel: str, skips: dict[str, str]) -> list[CaseResult]:
     saved_confs: dict[str, str | None] = {"spark.sql.session.timeZone": spark.conf.get("spark.sql.session.timeZone", None)}
     start_db = spark.catalog.currentDatabase()
     # Snapshot pre-existing databases: the session-scoped SparkSession
-    # also hosts databases owned by OTHER components (e.g. bktdb, whose
-    # LOCATION is the shared .bkt_warehouse of bucketed-table mirrors —
-    # plans/relational.py), so cleanup may only drop databases this
-    # file itself created, never a blanket everything-but-default.
+    # also hosts databases owned by OTHER components (e.g. bktdb, which
+    # registers the bucketed-table mirrors — plans/relational.py), so
+    # cleanup may only drop databases this file itself created, never a
+    # blanket everything-but-default.
     start_dbs = {db.name for db in spark.catalog.listDatabases()}
     pre_temps: frozenset = frozenset()
     if rel in DDL_FILES:

@@ -25,7 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gazelle_plugin_spark.plans import query
-from gazelle_plugin_spark.plans._util import SQL_DISC_PRICE, dec, disc_price, sql_dsum, t
+from gazelle_plugin_spark.plans._util import (
+    SQL_DISC_PRICE,
+    dec,
+    disc_price,
+    materialize_once,
+    sql_dsum,
+    t,
+)
 
 #: synthetic per-unit supply cost (the schema has no lo_supplycost)
 SUPPLY_COST = 100
@@ -459,71 +466,22 @@ def ssb4_3(spark, sf_dir):
 
 # --------------------------------------------------- ORC query path
 
-#: Tables flight 2 touches; mirrored to ORC once per sf_dir.
-_ORC_TABLES = ("lineitem", "orders", "part", "supplier", "nation", "region")
-
-
-def _orc_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once) an ORC copy of flight 2's tables and return
-    the mirror directory. Reference parity: the reference runs its
-    TPC-DS corpus over ORC through the same Arrow scan
-    (arrow-data-source Orc_TPCDSSuite.scala, ArrowUtils.scala:212-218
-    format list); here the ORC path is Spark's native vectorized ORC
-    reader, exercised end-to-end by a query with a full value-hash
-    oracle rather than a round-trip-only unit test.
-
-    The mirror lives under the repo's .orc_cache/<sf>/ (gitignored)
-    and is keyed by a _SUCCESS marker per table. Concurrent first-time
-    runs are safe: each writer stages into a pid-suffixed temp dir and
-    atomically renames it into place; whoever loses the rename race
-    discards its staging copy and uses the winner's.
-    """
-    import os
-    import shutil
-
-    from gazelle_plugin_spark.sources import io
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.join(
-        repo_root, ".orc_cache", os.path.basename(sf_dir.rstrip("/"))
-    )
-    for name in _ORC_TABLES:
-        dst = os.path.join(base, name)
-        marker = os.path.join(dst, "_SUCCESS")
-        if os.path.exists(marker):
-            continue
-        # a dir without its marker is a corpse from a crashed run
-        shutil.rmtree(dst, ignore_errors=True)
-        tmp = f"{dst}.tmp.{os.getpid()}"
-        io.write(t(spark, sf_dir, name), tmp, fmt="orc")
-        if os.path.exists(marker):
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        else:
-            try:
-                os.rename(tmp, dst)
-            except OSError:  # concurrent winner appeared mid-write
-                shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise RuntimeError(f"ORC mirror for {name} failed to materialize")
-    return base
-
-
 @query("orc_ssb2_1", oracle=_flight2_sql("p_type = 'MEDIUM'", "AMERICA"))
 def orc_ssb2_1(spark, sf_dir):
     """SSB 2.1 read from ORC (reference Orc_TPCDSSuite.scala parity):
     the identical flight-2 plan over an ORC mirror of the tables,
     checked against the SAME parquet-side DuckDB oracle — proving the
     ORC scan path (pushdown, pruning, vectorized decode) produces
-    value-identical results to the parquet path."""
+    value-identical results to the parquet path. The reference runs its
+    TPC-DS corpus over ORC through the same Arrow scan
+    (arrow-data-source ArrowUtils.scala:212-218 format list); here it is
+    Spark's native vectorized ORC reader."""
     from gazelle_plugin_spark.sources import io
 
-    base = _orc_mirror(spark, sf_dir)
-    return _flight2(
-        spark,
-        sf_dir,
-        F.col("p_type") == "MEDIUM",
-        "AMERICA",
-        load=lambda name: io.read(spark, f"{base}/{name}", fmt="orc"),
-    )
+    def orc(name):
+        path = materialize_once(
+            sf_dir, f"orc/{name}", lambda tmp: io.write(t(spark, sf_dir, name), tmp, fmt="orc")
+        )
+        return io.read(spark, path, fmt="orc")
+
+    return _flight2(spark, sf_dir, F.col("p_type") == "MEDIUM", "AMERICA", load=orc)

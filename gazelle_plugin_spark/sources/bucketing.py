@@ -27,13 +27,17 @@ def write_bucketed(
     num_buckets: int,
     sort_cols: Sequence[str] | None = None,
     mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally per-bucket sorted)
-    managed parquet table. Sorting by the join key additionally lets
-    sort-merge joins skip their sort."""
+    parquet table: managed, or external at ``path`` (its files stay
+    when the table is dropped). Sorting by the join key additionally
+    lets sort-merge joins skip their sort."""
     writer = df.write.format("parquet").mode(mode).bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
+    if path:
+        writer = writer.option("path", path)
     writer.saveAsTable(table)
 
 

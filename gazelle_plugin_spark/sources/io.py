@@ -221,5 +221,5 @@ def write_arrow_ipc(df: DataFrame, path: str) -> int:
             os.replace(tmp, final)
         yield pa.RecordBatch.from_pylist([{"n": n}], schema=pa.schema([("n", pa.int64())]))
 
-    counts = df.mapInArrow(write_part, "n long").agg({"n": "sum"}).collect()
-    return int(counts[0][0] or 0)
+    # one row per partition: summed on the driver, not by a second job
+    return sum(r.n for r in df.mapInArrow(write_part, "n long").collect())

@@ -50,10 +50,11 @@ def z_value(a: Column, b: Column, bits: int = Z_BITS) -> Column:
     return z
 
 
-def _scaled(col: Column, lo: float, hi: float, bits: int) -> Column:
-    """Min/max-scale a numeric column to an int in [0, 2^bits)."""
+def _scaled(col: Column, lo, hi, bits: int) -> Column:
+    """Min/max-scale a numeric column to an int in [0, 2^bits); 0 when
+    the column has no range (one value, or no non-null value)."""
     mask = (1 << bits) - 1
-    span = hi - lo
+    span = 0.0 if lo is None or hi is None else float(hi) - float(lo)
     if span <= 0:
         return F.lit(0)
     scaled = F.floor((col.cast("double") - F.lit(float(lo))) * F.lit(float(mask)) / F.lit(float(span)))
@@ -64,12 +65,12 @@ def zorder_curve(
     df: DataFrame, cols: Sequence[str], bits: int = Z_BITS
 ) -> Column:
     """The z-curve Column for two columns of ``df``, min/max-scaled
-    from one stats probe (a 1-row aggregate — metadata, not data)."""
+    from one stats probe: an aggregate that scans the whole input (2 of
+    ``zorder_write``'s 5 Spark jobs)."""
     c0, c1 = cols
-    stats = df.agg(
+    lo0, hi0, lo1, hi1 = df.agg(
         F.min(c0), F.max(c0), F.min(c1), F.max(c1)
     ).first()
-    lo0, hi0, lo1, hi1 = (float(v) for v in stats)
     return z_value(
         _scaled(F.col(c0), lo0, hi0, bits),
         _scaled(F.col(c1), lo1, hi1, bits),
@@ -138,6 +139,8 @@ def compact(
     import os
     import shutil
 
+    from gazelle_plugin_spark.sources import io
+
     base = path.rstrip("/")
     # Crash cleanup runs on EVERY entry: a previous compact() that died
     # before its first rename leaks <path>.compact.<pid>; one that died
@@ -163,7 +166,7 @@ def compact(
     n = max(1, math.ceil(total / target_bytes))
     tmp = f"{base}.compact.{os.getpid()}"
     old = f"{base}.old.{os.getpid()}"
-    spark.read.format(fmt).load(path).coalesce(n).write.format(fmt).save(tmp)
+    io.write(io.read(spark, path, fmt=fmt).coalesce(n), tmp, fmt=fmt)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)

@@ -85,27 +85,38 @@ def test_zorder_layout_is_row_identical(spark, layouts):
 
 
 def test_compact_small_files(spark, tmp_path):
-    """64 tiny files -> a handful of ~target-size files, row-identical,
-    no stray staging dirs left behind."""
+    """64 tiny files -> a handful of ~target-size files with the same
+    rows, no stray staging dirs left behind; in CSV each file's header
+    line stays a header, never a data row."""
     import os
 
-    path = str(tmp_path / "frag")
-    li = t(spark, SF_MED, "lineitem").select("l_orderkey", "l_quantity")
-    li.repartition(64).write.parquet(path)
-    files_before = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files_before) == 64
-    before = li.groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("s")
-    ).collect()[0]
+    from gazelle_plugin_spark.sources import io
 
-    n_out = layout.compact(spark, path, target_bytes=512 * 1024)
-    files_after = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files_after) == n_out < 16
-    assert not [d for d in os.listdir(tmp_path) if ".old." in d or ".compact." in d]
-    after = spark.read.parquet(path).groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("s")
-    ).collect()[0]
-    assert (before.n, before.s) == (after.n, after.s)
+    li = t(spark, SF_MED, "lineitem").select("l_orderkey", "l_quantity")
+    for fmt in ("parquet", "csv"):
+        path = str(tmp_path / fmt)
+        io.write(li.repartition(64), path, fmt=fmt)
+        files_before = [f for f in os.listdir(path) if f.startswith("part-")]
+        assert len(files_before) == 64
+        before = sorted(io.read(spark, path, fmt=fmt).collect())
+
+        n_out = layout.compact(spark, path, target_bytes=512 * 1024, fmt=fmt)
+        files_after = [f for f in os.listdir(path) if f.startswith("part-")]
+        assert len(files_after) == n_out < 16, fmt
+        assert not [d for d in os.listdir(tmp_path) if ".old." in d or ".compact." in d]
+        assert sorted(io.read(spark, path, fmt=fmt).collect()) == before, fmt
+
+
+@pytest.mark.parametrize(
+    "rows", [[], [(None, 1.0), (None, 2.5), (None, None)]], ids=["empty", "all_null_key"]
+)
+def test_zorder_write_without_key_range(spark, tmp_path, rows):
+    """A key with no min/max (no rows, or only nulls) contributes 0 to
+    the curve instead of failing the stats probe."""
+    df = spark.createDataFrame(rows, "a int, b double")
+    path = str(tmp_path / "z")
+    layout.zorder_write(df, path, ("a", "b"), 2)
+    assert sorted(spark.read.parquet(path).collect(), key=str) == sorted(df.collect(), key=str)
 
 
 def test_compact_recovers_stranded_swap(spark, tmp_path):

@@ -62,3 +62,18 @@ def test_warm_session_repeats_no_per_session_work(spark):
     region = catalog.table_path(SF_SMALL, "region")
     assert catalog.read_parquet(poisoned, region).columns == ["bogus"]
     catalog.assert_testdata_schema(poisoned, SF_SMALL)
+
+
+def test_bucketed_mirror_registers_without_jobs(spark):
+    """The bucketed mirror is written once per checkout: a session that
+    finds its files on disk registers the tables and starts no job."""
+    from gazelle_plugin_spark.plans.relational import bkt_colocated_join
+
+    want = sorted(bkt_colocated_join(spark, SF_SMALL).collect())
+    for table in spark.catalog.listTables("bktdb"):
+        if not table.isTemporary:  # the session's temp views list here too
+            spark.sql(f"DROP TABLE bktdb.{table.name}")  # external: the files stay
+    df, jobs = _jobs(spark, "bkt:register", lambda: bkt_colocated_join(spark, SF_SMALL))
+    assert jobs == 0
+    assert sorted(df.collect()) == want
+    assert "Bucketed: true" in df._jdf.queryExecution().executedPlan().toString()
