@@ -8,11 +8,13 @@ native C++/Gandiva execution layer.
 Design stance (SURVEY.md §7):
 - Declarative plans: every operator is a DataFrame composition so
   Catalyst does pushdown/pruning/join-selection and Tungsten does the
-  vectorized execution the reference implemented natively.
-- The reference's operator inventory (SURVEY.md §2) maps onto
-  ``operators/`` ``functions/`` ``sources/``; beyond-parity
-  LLM-data-pipeline ops live in ``pipeline/`` and streaming in
-  ``streaming/``.
+  vectorized execution the reference implemented natively. The plan
+  builders in ``plans/`` call the DataFrame API directly.
+- Of the reference's operator inventory (SURVEY.md §2), what the
+  DataFrame API lacks lives in ``operators/``, ``functions/`` and
+  ``sources/``; beyond-parity LLM-data-pipeline queries live in
+  ``plans/`` (text_pipeline, similarity_queries, multimodal) and
+  streaming in ``streaming/``.
 """
 
 from gazelle_plugin_spark.session import get_spark, session_confs

@@ -1,76 +1,15 @@
-"""Operator surface of the engine (SURVEY.md §2).
+"""Operators that Spark's DataFrame API does not already provide.
 
-Each module re-expresses one family of the reference's Columnar*Exec
-operators as composable DataFrame transformations. The reference's
-fallback discipline (ColumnarGuardRule wrapping unsupported nodes in
-RowGuard) becomes: helpers validate inputs and raise
-``UnsupportedOperationError`` naming the vanilla-Spark escape hatch —
-never silent wrong answers.
+The reference replaces each physical operator with a Columnar*Exec
+(SURVEY.md §2). Here most of those are one DataFrame call that
+Catalyst plans — ``join`` with a strategy hint, ``groupBy``/
+``rollup``/``cube``/``groupingSets``, ``union``/``intersect``/
+``subtract``, ``orderBy().limit()``, ``repartition`` — and builders
+call them directly. The modules below hold only what hides an
+algorithm or a rule: null-aware anti and existence joins, two-phase
+skew-safe aggregation, the skew join rule and salting, the hot-bucket
+guard, as-of and range joins, connected components, and the image
+decoders. ``errors.UnsupportedOperationError`` is the typed refusal
+(raised by ``sources.io``) that names the vanilla-Spark escape hatch
+instead of returning a silent wrong answer.
 """
-
-from gazelle_plugin_spark.operators.errors import UnsupportedOperationError
-from gazelle_plugin_spark.operators.projection import condition_project, coalesce_partitions
-from gazelle_plugin_spark.operators.joins import (
-    hash_join,
-    broadcast_hash_join,
-    shuffled_hash_join,
-    sort_merge_join,
-    null_aware_anti_join,
-    existence_join,
-    cross_join,
-)
-from gazelle_plugin_spark.operators.aggregates import (
-    hash_aggregate,
-    rollup_aggregate,
-    cube_aggregate,
-    grouping_sets_aggregate,
-)
-from gazelle_plugin_spark.operators.window import window_agg, window_topk
-from gazelle_plugin_spark.operators.sort import sort, sort_within_partitions, limit, top_k
-from gazelle_plugin_spark.operators.setops import (
-    union_all,
-    union_distinct,
-    intersect,
-    intersect_all,
-    except_,
-    except_all,
-)
-from gazelle_plugin_spark.operators.exchange import (
-    repartition_hash,
-    repartition_range,
-    repartition_round_robin,
-    single_partition,
-)
-
-__all__ = [
-    "UnsupportedOperationError",
-    "condition_project",
-    "coalesce_partitions",
-    "hash_join",
-    "broadcast_hash_join",
-    "shuffled_hash_join",
-    "sort_merge_join",
-    "null_aware_anti_join",
-    "existence_join",
-    "cross_join",
-    "hash_aggregate",
-    "rollup_aggregate",
-    "cube_aggregate",
-    "grouping_sets_aggregate",
-    "window_agg",
-    "window_topk",
-    "sort",
-    "sort_within_partitions",
-    "limit",
-    "top_k",
-    "union_all",
-    "union_distinct",
-    "intersect",
-    "intersect_all",
-    "except_",
-    "except_all",
-    "repartition_hash",
-    "repartition_range",
-    "repartition_round_robin",
-    "single_partition",
-]

@@ -1,23 +1,13 @@
-"""Aggregation operators.
+"""Two-phase aggregation for skewed low-cardinality keys.
 
 Analog of ColumnarHashAggregateExec (reference:
-com/intel/oap/execution/ColumnarHashAggregateExec.scala:62,309-445)
-and its native action set — Sum/Avg/Count/CountDistinct/Max/Min/
-StddevSamp/First (cpp/codegen/arrow_compute/ext/actions_impl.cc,
-mapped from Catalyst in expression/ColumnarHashAggregation.scala:
-103-246). Spark's HashAggregateExec already executes partial/final
-two-phase hash aggregation with map-side combine, so each helper is a
-thin, validated wrapper; grouping-set expansion mirrors
-ColumnarExpandExec (com/intel/oap/execution/ColumnarExpandExec.scala:37).
-
-Beyond-reference: collect_list/set, approx_count_distinct (HLL),
-percentile_approx, covariance/correlation had no native actions and
-fell back to rows — in Spark they are built-in and exposed through
-the same ``agg`` path here (SURVEY.md §2.4 'free coverage').
-
-Scale notes: groupBy shuffles on the keys — high-cardinality keys are
-fine (partial agg shrinks the shuffle), low-cardinality + skewed keys
-benefit from two-level aggregation; see ``skew_safe_aggregate``.
+com/intel/oap/execution/ColumnarHashAggregateExec.scala:62,309-445).
+Spark's HashAggregateExec already executes partial/final two-phase
+hash aggregation with map-side combine, and ``groupBy``/``rollup``/
+``cube``/``groupingSets`` cover the grouping-set expansion of
+ColumnarExpandExec, so builders call those directly. The one helper
+left here salts the keys when a few hot keys would funnel the shuffle
+into a few reducers.
 """
 
 from __future__ import annotations
@@ -26,40 +16,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def hash_aggregate(
-    df: DataFrame, keys: Sequence[str | Column], aggs: Sequence[Column]
-) -> DataFrame:
-    """groupBy(keys).agg(aggs); keys may be empty for a global agg
-    (the reference special-cases grouping w/ and w/o keys —
-    ColumnarHashAggregateExec.scala:503-617 — Spark does not)."""
-    if not keys:
-        return df.agg(*aggs)
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def rollup_aggregate(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """GROUP BY ROLLUP — Spark lowers to Expand + Aggregate, the
-    ColumnarExpandExec pattern."""
-    return df.rollup(*keys).agg(*aggs)
-
-
-def cube_aggregate(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    return df.cube(*keys).agg(*aggs)
-
-
-def grouping_sets_aggregate(
-    df: DataFrame,
-    grouping_sets: Sequence[Sequence[str]],
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """GROUP BY GROUPING SETS with an explicit set list."""
-    sets = [[F.col(c) for c in s] for s in grouping_sets]
-    return df.groupingSets(sets, *[F.col(k) for k in keys]).agg(*aggs)
 
 
 def skew_safe_aggregate(

@@ -1,47 +1,25 @@
-"""Exchange / shuffle / broadcast operators.
+"""Exchange and the skewed-join rule.
 
-Analog of ColumnarShuffleExchangeExec's partitioning modes —
-SinglePartition, RoundRobin, Hash, Range (reference:
+ColumnarShuffleExchangeExec's partitioning modes — SinglePartition,
+RoundRobin, Hash, Range (reference:
 org/apache/spark/sql/execution/ColumnarShuffleExchangeExec.scala:
-114,247,304-344; native splitters cpp/shuffle/splitter.h:297-344).
-The reference's custom shuffle manager, Arrow IPC serialization and
-per-column lz4/fastpfor compression are replaced wholesale by Spark's
-sort shuffle + `spark.io.compression.codec` (SURVEY.md §2.8).
+114,247,304-344; native splitters cpp/shuffle/splitter.h:297-344) —
+are ``coalesce(1)``, ``repartition(n)``, ``repartition(n, *keys)`` and
+``repartitionByRange(n, *keys)`` here, and builders call them
+directly. The reference's custom shuffle manager, Arrow IPC
+serialization and per-column lz4/fastpfor compression are replaced
+wholesale by Spark's sort shuffle + `spark.io.compression.codec`
+(SURVEY.md §2.8).
 
-Scale notes: every call below is a full shuffle of the input — at
-100 TB use them to SET UP co-location (repartition on join/agg keys
-once, reuse across stages), not casually. AQE's coalescing fixes
-over-partitioning on the way out.
+What this module holds is the measured rule for an equi-join whose
+fact side has a hot key (:func:`choose_join_strategy`), its live
+caller (:func:`skew_aware_join`) and the salted shape it can pick
+(:func:`salted_join`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
-
-
-def repartition_hash(df: DataFrame, num_partitions: int, keys: Sequence[str | Column]) -> DataFrame:
-    """HashPartitioning — co-locates equal keys; pre-shuffling both
-    join sides on the same keys lets the join reuse the exchange."""
-    return df.repartition(num_partitions, *keys)
-
-
-def repartition_range(df: DataFrame, num_partitions: int, keys: Sequence[str | Column]) -> DataFrame:
-    """RangePartitioning (the reference falls back to a row-computed
-    partition-id column for this — FallbackRangeSplitter); Spark
-    samples ranges natively."""
-    return df.repartitionByRange(num_partitions, *keys)
-
-
-def repartition_round_robin(df: DataFrame, num_partitions: int) -> DataFrame:
-    """RoundRobinPartitioning — rebalance without keys."""
-    return df.repartition(num_partitions)
-
-
-def single_partition(df: DataFrame) -> DataFrame:
-    """SinglePartition — everything to one task; only for tiny finals."""
-    return df.coalesce(1)
+from pyspark.sql import DataFrame
 
 
 def choose_join_strategy(

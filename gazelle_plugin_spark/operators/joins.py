@@ -1,99 +1,25 @@
-"""Join operators.
+"""Join operators Spark has no single call for.
 
 The reference implements three equi-join families — broadcast hash,
 shuffled hash, sort-merge (reference:
 com/intel/oap/execution/ColumnarBroadcastHashJoinExec.scala:102-104,
 ColumnarShuffledHashJoinExec.scala:141-143,
-ColumnarSortMergeJoinExec.scala:124-131) with inner / left+right
-outer / semi / anti / existence types, plus null-aware anti
-(ColumnarOverrides.scala:260) and residual non-equi conditions via
-codegen (cpp/codegen/arrow_compute/ext/conditioned_probe_kernel.cc).
-BroadcastNestedLoopJoin and CartesianProduct stay row-based
-(docs/operators.md:22-23).
+ColumnarSortMergeJoinExec.scala:124-131). Each is one
+``DataFrame.join`` here, with ``F.broadcast`` or a ``SHUFFLE_HASH`` /
+``MERGE`` hint when a builder pins the strategy, so Catalyst/AQE keep
+runtime re-planning (skew split, broadcast demotion). Cross joins are
+``crossJoin`` plus a filter.
 
-Here every family maps to ``DataFrame.join`` with a strategy hint, so
-Catalyst/AQE keep runtime re-planning (skew split, broadcast demotion)
-— behavior the reference had to hand-roll with ShufflePartitionUtils.
-
-Scale notes (100 TB): broadcast only bounded dims (the helper takes
-an explicit build side, mirroring JoinSelectionOverrides.getSmallerSide,
-reference: extension/StrategyOverrides.scala:39-78); shuffled-hash
-avoids SMJ's sort at the cost of an in-memory build per partition —
-prefer it when the build side fits per-partition after AQE
-coalescing, else sort-merge.
+What stays in this module are the two join types the reference
+flagged specially and the DataFrame API cannot express directly:
+null-aware anti (ColumnarOverrides.scala:260 ``nullAware``) and
+existence (ColumnarSortMergeJoinExec.scala:208-213).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from gazelle_plugin_spark.operators.errors import UnsupportedOperationError
-
-_EQUI_JOIN_TYPES = frozenset(
-    {"inner", "left_outer", "right_outer", "full_outer", "left_semi", "left_anti"}
-)
-
-JoinOn = str | Sequence[str] | Column
-
-
-def _check_how(how: str, allowed: frozenset[str] = _EQUI_JOIN_TYPES) -> str:
-    norm = how.lower().replace("leftouter", "left_outer").replace("rightouter", "right_outer")
-    if norm not in allowed:
-        raise UnsupportedOperationError(
-            f"join type {how!r} not in {sorted(allowed)}",
-            "df.join(other, on, how) for Spark's full join-type list",
-        )
-    return norm
-
-
-def hash_join(left: DataFrame, right: DataFrame, on: JoinOn, how: str = "inner") -> DataFrame:
-    """Equi-join letting Catalyst pick the physical strategy.
-
-    With the session profile (preferSortMergeJoin=false, 64 MB
-    broadcast threshold, AQE on) Catalyst resolves this to broadcast
-    or shuffled-hash exactly like the reference's strategy override."""
-    return left.join(right, on, _check_how(how))
-
-
-def broadcast_hash_join(
-    left: DataFrame, right: DataFrame, on: JoinOn, how: str = "inner", build: str = "right"
-) -> DataFrame:
-    """ColumnarBroadcastHashJoinExec analog: explicit broadcast of the
-    build side (`F.broadcast`), for dims known to be small."""
-    if build == "right":
-        return left.join(F.broadcast(right), on, _check_how(how))
-    if build == "left":
-        return F.broadcast(left).join(right, on, _check_how(how))
-    raise UnsupportedOperationError(f"build side {build!r}", "build='left'|'right'")
-
-
-def shuffled_hash_join(
-    left: DataFrame, right: DataFrame, on: JoinOn, how: str = "inner"
-) -> DataFrame:
-    """ColumnarShuffledHashJoinExec analog via the SHUFFLE_HASH hint:
-    partition both sides on the keys, hash-build the smaller."""
-    return left.join(right.hint("SHUFFLE_HASH"), on, _check_how(how))
-
-
-def sort_merge_join(
-    left: DataFrame, right: DataFrame, on: JoinOn, how: str = "inner"
-) -> DataFrame:
-    """ColumnarSortMergeJoinExec analog via the MERGE hint. SMJ is
-    the scale path; unlike the reference (ColumnarGuardRule.scala:208
-    excludes FullOuter from columnar SMJ) full-outer IS supported —
-    exercised by the rel_full_outer oracle query and
-    tests/test_operators.py::test_full_outer_join_extends_both_sides."""
-    return left.join(right.hint("MERGE"), on, _check_how(how))
-
-
-def cross_join(left: DataFrame, right: DataFrame, condition: Column | None = None) -> DataFrame:
-    """CartesianProduct / BroadcastNestedLoopJoin analog — row-fallback
-    in the reference (docs/operators.md:22-23), built-in here."""
-    out = left.crossJoin(right)
-    return out.filter(condition) if condition is not None else out
 
 
 def null_aware_anti_join(

@@ -31,8 +31,35 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _nsub():
+    """Sub-bucket count of a row after the hot-bucket join: 1 outside
+    the hot relation."""
+    return F.coalesce(F.col("_nsub"), F.lit(1))
+
+
+def _salt_hot(
+    df: DataFrame, keys: list[str], id_col: str, cap: int, out: str
+) -> tuple[DataFrame, DataFrame]:
+    """The hot-bucket relation (keys..., _nsub) of ``df``'s over-cap
+    buckets, and ``df`` with the ``out`` salt ``xxhash64(id_col) mod
+    _nsub`` (0 in every bucket at or under ``cap``)."""
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .filter(F.col("_cnt") > cap)
+        .withColumn("_nsub", F.ceil(F.col("_cnt") / F.lit(cap)).cast("int"))
+        .drop("_cnt")
+    )
+    salted = (
+        df.join(F.broadcast(hot), keys, "left")
+        .withColumn(out, F.pmod(F.xxhash64(F.col(id_col)), _nsub()).cast("int"))
+        .drop("_nsub")
+    )
+    return salted, hot
 
 
 def cap_bucket(
@@ -47,21 +74,7 @@ def cap_bucket(
     ``cap`` keep salt 0 (bit-identical join behavior); larger buckets
     split into ``ceil(count / cap)`` sub-buckets by ``xxhash64(id)``.
     """
-    keys = list(key_cols)
-    hot = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .filter(F.col("_cnt") > cap)
-        .withColumn("_nsub", F.ceil(F.col("_cnt") / F.lit(cap)).cast("int"))
-        .drop("_cnt")
-    )
-    nsub = F.coalesce(F.col("_nsub"), F.lit(1))
-    salt: Column = F.pmod(F.xxhash64(F.col(id_col)), nsub).cast("int")
-    return (
-        df.join(F.broadcast(hot), keys, "left")
-        .withColumn(out, salt)
-        .drop("_nsub")
-    )
+    return _salt_hot(df, list(key_cols), id_col, cap, out)[0]
 
 
 def cap_bucket_probe(
@@ -88,22 +101,10 @@ def cap_bucket_probe(
 
     Join the returned frames on (key_cols..., out)."""
     keys = list(key_cols)
-    hot = (
-        build.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .filter(F.col("_cnt") > cap)
-        .withColumn("_nsub", F.ceil(F.col("_cnt") / F.lit(cap)).cast("int"))
-        .drop("_cnt")
-    )
-    nsub = F.coalesce(F.col("_nsub"), F.lit(1))
-    salted = (
-        build.join(F.broadcast(hot), keys, "left")
-        .withColumn(out, F.pmod(F.xxhash64(F.col(build_id)), nsub).cast("int"))
-        .drop("_nsub")
-    )
+    salted, hot = _salt_hot(build, keys, build_id, cap, out)
     exploded = (
         probe.join(F.broadcast(hot), keys, "left")
-        .withColumn(out, F.explode(F.sequence(F.lit(0), nsub - F.lit(1))))
+        .withColumn(out, F.explode(F.sequence(F.lit(0), _nsub() - F.lit(1))))
         .drop("_nsub")
     )
     return salted, exploded

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -32,10 +32,9 @@ def asof_join(
     left_time: str,
     right_time: str,
     value_cols: Sequence[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach ``value_cols`` from the latest right
-    row with ``right_time <= left_time`` (direction='backward'), per
+    row with ``right_time <= left_time`` (a backward as-of join), per
     ``key``. Left rows with no prior right row get NULLs.
 
     Ties (equal timestamps) resolve right-row-first, so a right row at
@@ -48,8 +47,6 @@ def asof_join(
     final orderBy key so ties among right rows at the same timestamp
     resolve deterministically (greatest value-tuple wins).
     """
-    if direction != "backward":
-        raise ValueError("only direction='backward' is implemented")
     l_tagged = left.withColumn("__t", F.col(left_time)).withColumn(
         "__is_left", F.lit(1)
     )
@@ -91,7 +88,6 @@ def range_join_buckets(
     left_time: str,
     right_time: str,
     max_delta: int,
-    time_unit_expr: Column | None = None,
 ) -> DataFrame:
     """Join left and right rows sharing ``key`` whose times differ by
     at most ``max_delta`` (same units as the time columns, e.g. epoch

@@ -211,17 +211,15 @@ def events_user_topk(spark, sf_dir):
     """Top-3 events per user by value — the rank-limit pushdown query
     (reference: LocalWindowExec + OptimizerOverrides.scala:39-218).
     Spark plans WindowGroupLimit: the top-k filter runs partially
-    before the shuffle (asserted in tests/test_operators.py)."""
-    from gazelle_plugin_spark.operators.window import window_topk
-
+    before the shuffle (pinned in tests/plan_goldens.json)."""
     e = events(spark, sf_dir)
-    return window_topk(
-        e.select("user_id", "event_id", "value"),
-        partition_by=["user_id"],
-        order_by=[F.desc("value"), F.asc("event_id")],
-        k=3,
-        rank_function="row_number",
-    ).orderBy("user_id", "rk")
+    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
+    return (
+        e.select("user_id", "event_id", "value")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .orderBy("user_id", "rk")
+    )
 
 
 @query(

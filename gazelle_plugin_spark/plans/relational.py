@@ -1,10 +1,11 @@
 """Relational operator queries: set operations, grouping-set
 expansion, join variants, and the aggregate-function sweep.
 
-These exercise the ``operators/`` package against DuckDB oracles:
-set-ops (ColumnarUnionExec, ColumnarBasicPhysicalOperators.scala:296 +
-Spark's lowering of INTERSECT/EXCEPT to semi/anti joins), rollup/cube/
-grouping sets (ColumnarExpandExec.scala:37), null-aware anti join
+These exercise the DataFrame API (and ``operators/joins.py``) against
+DuckDB oracles: set-ops (ColumnarUnionExec,
+ColumnarBasicPhysicalOperators.scala:296 + Spark's lowering of
+INTERSECT/EXCEPT to semi/anti joins), rollup/cube/grouping sets
+(ColumnarExpandExec.scala:37), null-aware anti join
 (ColumnarOverrides.scala:260 ``nullAware``), existence join
 (ColumnarSortMergeJoinExec.scala:208-213), explicit SMJ/SHJ strategy
 selection (StrategyOverrides.scala:39-78), cross join (row-fallback in
@@ -16,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.operators import aggregates, joins, setops
+from gazelle_plugin_spark.operators import joins
 from gazelle_plugin_spark.plans import query
 from gazelle_plugin_spark.plans._util import (
     SQL_DISC_PRICE,
@@ -44,14 +45,10 @@ def rel_rollup(spark, sf_dir):
     """ROLLUP (flag, status) with grouping_id — the Expand+Aggregate
     lowering (ColumnarExpandExec parity)."""
     li = t(spark, sf_dir, "lineitem")
-    out = aggregates.rollup_aggregate(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.grouping_id().alias("gid"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(disc_price()).cast("double").alias("revenue"),
-        ],
+    out = li.rollup("l_returnflag", "l_linestatus").agg(
+        F.grouping_id().alias("gid"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(disc_price()).cast("double").alias("revenue"),
     )
     return out.select(
         "l_returnflag", "l_linestatus", "gid", "n", "revenue"
@@ -73,14 +70,10 @@ ORDER BY gid, o_orderpriority, o_orderstatus
 def rel_cube(spark, sf_dir):
     """CUBE (priority, status) — all four grouping combinations."""
     o = t(spark, sf_dir, "orders")
-    out = aggregates.cube_aggregate(
-        o,
-        ["o_orderpriority", "o_orderstatus"],
-        [
-            F.grouping_id().alias("gid"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("o_totalprice")).cast("double").alias("total"),
-        ],
+    out = o.cube("o_orderpriority", "o_orderstatus").agg(
+        F.grouping_id().alias("gid"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dec("o_totalprice")).cast("double").alias("total"),
     )
     return out.select(
         "o_orderpriority", "o_orderstatus", "gid", "n", "total"
@@ -101,14 +94,11 @@ ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 def rel_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS ((flag), (status))."""
     li = t(spark, sf_dir, "lineitem")
-    out = aggregates.grouping_sets_aggregate(
-        li,
-        [["l_returnflag"], ["l_linestatus"]],
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("l_quantity")).cast("double").alias("qty"),
-        ],
+    out = li.groupingSets(
+        [["l_returnflag"], ["l_linestatus"]], "l_returnflag", "l_linestatus"
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dec("l_quantity")).cast("double").alias("qty"),
     )
     return out.orderBy(
         F.col("l_returnflag").asc_nulls_first(),
@@ -137,7 +127,7 @@ SELECT nk, CAST(COUNT(*) AS BIGINT) AS n FROM (
 def rel_union_all(spark, sf_dir):
     """UNION ALL (ColumnarUnionExec parity: pure concatenation, no
     shuffle) + count per key."""
-    u = setops.union_all(_cust_nations(spark, sf_dir), _supp_nations(spark, sf_dir))
+    u = _cust_nations(spark, sf_dir).union(_supp_nations(spark, sf_dir))
     return u.groupBy("nk").agg(F.count(F.lit(1)).alias("n")).orderBy("nk")
 
 
@@ -151,9 +141,12 @@ ORDER BY nk
 """,
 )
 def rel_union_distinct(spark, sf_dir):
-    return setops.union_distinct(
-        _cust_nations(spark, sf_dir), _supp_nations(spark, sf_dir)
-    ).orderBy("nk")
+    return (
+        _cust_nations(spark, sf_dir)
+        .union(_supp_nations(spark, sf_dir))
+        .distinct()
+        .orderBy("nk")
+    )
 
 
 @query(
@@ -170,10 +163,11 @@ def rel_intersect(spark, sf_dir):
     hitting the same join machinery as the reference."""
     c = t(spark, sf_dir, "customer").filter(F.col("c_acctbal") < 0)
     s = t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)
-    return setops.intersect(
-        c.select(F.col("c_nationkey").alias("nk")),
-        s.select(F.col("s_nationkey").alias("nk")),
-    ).orderBy("nk")
+    return (
+        c.select(F.col("c_nationkey").alias("nk"))
+        .intersect(s.select(F.col("s_nationkey").alias("nk")))
+        .orderBy("nk")
+    )
 
 
 @query(
@@ -186,12 +180,13 @@ ORDER BY nk
 """,
 )
 def rel_except(spark, sf_dir):
-    """EXCEPT DISTINCT (left-anti + dedup lowering)."""
+    """EXCEPT DISTINCT (left-anti + dedup lowering): ``subtract``, not
+    ``exceptAll().distinct()``, which keeps x for left=[x,x], right=[x]."""
     c = _cust_nations(spark, sf_dir)
     s = t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         F.col("s_nationkey").alias("nk")
     )
-    return setops.except_(c, s).orderBy("nk")
+    return c.subtract(s).orderBy("nk")
 
 
 @query(
@@ -209,7 +204,7 @@ def rel_intersect_all(spark, sf_dir):
     c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100).select(
         F.col("c_nationkey").alias("nk")
     )
-    return setops.intersect_all(c, _supp_nations(spark, sf_dir)).orderBy("nk")
+    return c.intersectAll(_supp_nations(spark, sf_dir)).orderBy("nk")
 
 
 @query(
@@ -225,7 +220,7 @@ def rel_except_all(spark, sf_dir):
     c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100).select(
         F.col("c_nationkey").alias("nk")
     )
-    return setops.except_all(c, _supp_nations(spark, sf_dir)).orderBy("nk")
+    return c.exceptAll(_supp_nations(spark, sf_dir)).orderBy("nk")
 
 
 @query(
@@ -308,7 +303,7 @@ def rel_smj(spark, sf_dir):
     side is hash-buildable."""
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
-    j = joins.sort_merge_join(s, n, s.s_nationkey == n.n_nationkey)
+    j = s.join(n.hint("MERGE"), s.s_nationkey == n.n_nationkey)
     return (
         j.groupBy("n_name")
         .agg(
@@ -334,7 +329,7 @@ def rel_shj(spark, sf_dir):
     StrategyOverrides forces SHJ over SMJ exactly like this)."""
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 5000)
-    j = joins.shuffled_hash_join(o, c, o.o_custkey == c.c_custkey)
+    j = o.join(c.hint("SHUFFLE_HASH"), o.o_custkey == c.c_custkey)
     return j.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n")).orderBy(
         "o_orderstatus"
     )
@@ -374,7 +369,7 @@ def rel_full_outer(spark, sf_dir):
         .groupBy(F.col("s_nationkey").alias("nk2"))
         .agg(F.count(F.lit(1)).alias("s_cnt"))
     )
-    j = joins.sort_merge_join(c, s, c.nk == s.nk2, "full_outer")
+    j = c.join(s.hint("MERGE"), c.nk == s.nk2, "full_outer")
     return j.select(
         F.coalesce("nk", "nk2").alias("nk"), "c_cnt", "s_cnt"
     ).orderBy("nk")
@@ -396,7 +391,7 @@ def rel_cross_join(spark, sf_dir):
     both sides are bounded."""
     r = t(spark, sf_dir, "region")
     n = t(spark, sf_dir, "nation")
-    out = joins.cross_join(r, n, F.pmod(n.n_nationkey, F.lit(5)) == r.r_regionkey)
+    out = r.crossJoin(n).filter(F.pmod(n.n_nationkey, F.lit(5)) == r.r_regionkey)
     return out.select("r_name", "n_name").orderBy("r_name", "n_name")
 
 
@@ -585,16 +580,13 @@ def rel_agg_stats(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
     ordinal = F.col("l_orderkey") * 16 + F.col("l_linenumber")
     return (
-        aggregates.hash_aggregate(
-            li,
-            ["l_returnflag"],
-            [
-                F.min("l_quantity").alias("min_qty"),
-                F.max("l_quantity").alias("max_qty"),
-                F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
-                F.countDistinct("l_suppkey").alias("n_supp"),
-                F.min_by("l_suppkey", ordinal).alias("first_supp"),
-            ],
+        li.groupBy("l_returnflag")
+        .agg(
+            F.min("l_quantity").alias("min_qty"),
+            F.max("l_quantity").alias("max_qty"),
+            F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
+            F.countDistinct("l_suppkey").alias("n_supp"),
+            F.min_by("l_suppkey", ordinal).alias("first_supp"),
         )
         .orderBy("l_returnflag")
     )

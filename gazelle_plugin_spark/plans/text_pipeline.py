@@ -653,7 +653,7 @@ def doc_ngram_jaccard(spark, sf_dir):
     # recomputing the (cheap, codegen'd) explosion per branch beats a
     # .persist() barrier — caching blinds AQE's runtime replanning. At
     # 100 TB the shingle set is the natural checkpoint candidate; that
-    # choice belongs to the caller (sources/io.py cache_columnar).
+    # choice (a ``persist`` or ``localCheckpoint``) belongs to the caller.
     sh = _shingles(spark, sf_dir)
     # corpus-scaled DF cap as a broadcast 1-row aggregate: lazy,
     # identical arithmetic to the oracle's params CTE (exact division
@@ -2009,7 +2009,8 @@ def doc_pii_scrub(spark, sf_dir):
     at any corpus size. The regexes are written in the Java-regex /
     RE2 common subset so Spark and DuckDB agree match-for-match.
     Reference analog: per-row projection discipline of
-    ColumnarConditionProjectExec (operators/projection.py)."""
+    ColumnarConditionProjectExec (a ``filter`` + ``select``, which
+    whole-stage codegen fuses into one stage)."""
     d = t(spark, sf_dir, "documents")
     payload = F.concat(
         F.col("text"),

@@ -603,11 +603,8 @@ def ds_intersect_yoy(spark, sf_dir):
             .distinct()
         )
 
-    from gazelle_plugin_spark.operators import setops
-
-    common = setops.intersect(
-        setops.intersect(parts_of_year(1995), parts_of_year(1996)),
-        parts_of_year(1997),
+    common = (
+        parts_of_year(1995).intersect(parts_of_year(1996)).intersect(parts_of_year(1997))
     )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -667,9 +664,7 @@ def ds_union_agg(spark, sf_dir):
             .agg(F.sum(disc_price()).alias("rev"))
         )
 
-    from gazelle_plugin_spark.operators import setops
-
-    branches = setops.union_all(setops.union_all(branch("A"), branch("N")), branch("R"))
+    branches = branch("A").union(branch("N")).union(branch("R"))
     return (
         branches.groupBy("p_brand")
         .agg(
@@ -762,9 +757,7 @@ def ds_except_churn(spark, sf_dir):
             o.filter(F.year("o_orderdate") == y).select("o_custkey").distinct()
         )
 
-    from gazelle_plugin_spark.operators import setops
-
-    churned = setops.except_(custs_of_year(1996), custs_of_year(1997))
+    churned = custs_of_year(1996).subtract(custs_of_year(1997))
     return (
         c.join(churned, c.c_custkey == churned.o_custkey, "left_semi")
         .groupBy("c_mktsegment")

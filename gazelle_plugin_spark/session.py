@@ -9,8 +9,8 @@ GazellePluginConfig.scala) and docs/performance.md:
 
 Here the same intents map to vanilla Spark confs: Tungsten +
 whole-stage codegen already provide vectorized columnar execution, so
-the "plugin" surface collapses to a config profile plus the operator
-helpers in this package.
+the "plugin" surface collapses to this config profile; the plans call
+the DataFrame API directly.
 
 Scale posture (100 TB / 1000 executors): everything below is
 per-session, cluster-size independent. ``shuffle_partitions`` should

@@ -8,20 +8,14 @@ writes via ArrowFileFormat + ArrowWriteExtension (ArrowWriteExtension.
 scala:43-108). Spark's own DSv2 readers/writers are the direct analog
 — vectorized, pushdown-capable, columnar.
 
-The cache helper mirrors ColumnarInMemoryTableScanExec +
-ArrowColumnarCachedBatchSerializer (ColumnarInMemoryTableScanExec.
-scala:31; ColumnarInMemoryRelation.scala:113): Spark's
-CachedBatchSerializer is already columnar.
+- ``io``: ``read``/``write`` (format check, CSV header rule) and the
+  distributed Arrow IPC reader/writer;
+- ``layout``: z-order clustered writes and small-file compaction;
+- ``bucketing``: bucketed tables for shuffle-free co-located joins.
 
-Verified by tests/test_sources.py (round-trips, pushdown plan
-assertions, cache plan assertion).
+The reference's columnar cache (ColumnarInMemoryTableScanExec) is
+``DataFrame.persist``: Spark's CachedBatchSerializer is already
+columnar.
+
+Verified by tests/test_sources.py and tests/test_layout.py.
 """
-
-from gazelle_plugin_spark.sources.io import (
-    SUPPORTED_FORMATS,
-    cache_columnar,
-    read,
-    write,
-)
-
-__all__ = ["SUPPORTED_FORMATS", "read", "write", "cache_columnar"]

@@ -1,4 +1,4 @@
-"""Unified read/write/cache facade over Spark's DSv2 sources.
+"""Unified read/write facade over Spark's DSv2 sources, plus Arrow IPC.
 
 Scale notes (100 TB): reads rely on Catalyst pushdown — predicate
 pushdown and column pruning reach the parquet/ORC row groups
@@ -15,7 +15,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-from pyspark import StorageLevel
 
 from gazelle_plugin_spark.operators.errors import UnsupportedOperationError
 
@@ -75,15 +74,6 @@ def write(
     if options:
         writer = writer.options(**options)
     writer.save(path)
-
-
-def cache_columnar(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Columnar cache (ColumnarInMemoryTableScanExec analog): Spark's
-    CachedBatchSerializer stores compressed columnar batches; repeat
-    scans replay them without re-reading the source."""
-    return df.persist(level)
 
 
 def read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:

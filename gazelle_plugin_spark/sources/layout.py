@@ -30,6 +30,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from gazelle_plugin_spark.sources import io
+
 #: bits per dimension in the interleaved curve value (2 dims * 16 bits
 #: = a 32-bit z-value: plenty — row-group boundaries are millions of
 #: rows apart at scale, far coarser than 2^16 buckets per dimension).
@@ -102,10 +104,7 @@ def zorder_write(
         .sortWithinPartitions("__zval")
         .drop("__zval")
     )
-    writer = clustered.write.mode("overwrite")
-    if options:
-        writer = writer.options(**options)
-    writer.parquet(path)
+    io.write(clustered, path, **options)
 
 
 def compact(
@@ -138,8 +137,6 @@ def compact(
     import math
     import os
     import shutil
-
-    from gazelle_plugin_spark.sources import io
 
     base = path.rstrip("/")
     # Crash cleanup runs on EVERY entry: a previous compact() that died

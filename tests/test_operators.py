@@ -1,4 +1,6 @@
-"""Unit tests for the operator surface (gazelle_plugin_spark.operators).
+"""Unit tests for the operator surface: the helpers in
+gazelle_plugin_spark.operators, and the DataFrame calls the plans use
+in place of the reference's Columnar*Exec operators.
 
 Patterned after the reference's forked Spark suites (SURVEY.md §5
 layer 1): small literal DataFrames, exact expected answers, edge
@@ -10,15 +12,10 @@ OptimizerOverrides.scala:39-218 analog).
 
 from __future__ import annotations
 
-from pyspark.sql import Row
+from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.operators import aggregates, exchange, joins, projection, setops, window
-# the package re-exports the `sort` *function*, which shadows the
-# module attribute — go through sys.modules for the module itself
-from importlib import import_module
-
-sort_ops = import_module("gazelle_plugin_spark.operators.sort")
+from gazelle_plugin_spark.operators import aggregates, joins
 
 
 def rows(df):
@@ -87,17 +84,18 @@ def test_existence_join(spark):
 def test_except_is_distinct(spark):
     left = spark.createDataFrame([(1,), (1,), (2,)], "x int")
     right = spark.createDataFrame([(1,)], "x int")
-    assert rows(setops.except_(left, right)) == [(2,)]
-    assert rows(setops.except_all(left, right)) == [(1,), (2,)]
+    # subtract, not exceptAll().distinct(): that would keep 1 here
+    assert rows(left.subtract(right)) == [(2,)]
+    assert rows(left.exceptAll(right)) == [(1,), (2,)]
 
 
 def test_union_intersect(spark):
     a = spark.createDataFrame([(1,), (2,), (2,)], "x int")
     b = spark.createDataFrame([(2,), (3,)], "x int")
-    assert rows(setops.union_all(a, b)) == [(1,), (2,), (2,), (2,), (3,)]
-    assert rows(setops.union_distinct(a, b)) == [(1,), (2,), (3,)]
-    assert rows(setops.intersect(a, b)) == [(2,)]
-    assert rows(setops.intersect_all(a, b)) == [(2,)]
+    assert rows(a.union(b)) == [(1,), (2,), (2,), (2,), (3,)]
+    assert rows(a.union(b).distinct()) == [(1,), (2,), (3,)]
+    assert rows(a.intersect(b)) == [(2,)]
+    assert rows(a.intersectAll(b)) == [(2,)]
 
 
 # ------------------------------------------------------------ aggregates
@@ -132,9 +130,9 @@ def test_rollup_cube_grouping_sets(spark):
         [("a", "x", 1), ("a", "y", 2), ("b", "x", 3)], "g1 string, g2 string, v int"
     )
     aggs = [F.sum("v").alias("s")]
-    assert aggregates.rollup_aggregate(df, ["g1", "g2"], aggs).count() == 6
-    assert aggregates.cube_aggregate(df, ["g1", "g2"], aggs).count() == 8
-    gs = aggregates.grouping_sets_aggregate(df, [["g1"], ["g2"]], ["g1", "g2"], aggs)
+    assert df.rollup("g1", "g2").agg(*aggs).count() == 6
+    assert df.cube("g1", "g2").agg(*aggs).count() == 8
+    gs = df.groupingSets([["g1"], ["g2"]], "g1", "g2").agg(*aggs)
     assert rows(gs) == rows(
         df.groupBy("g1").agg(*aggs).withColumn("g2", F.lit(None).cast("string"))
         .select("g1", "g2", "s")
@@ -148,8 +146,8 @@ def test_rollup_cube_grouping_sets(spark):
 
 def test_hash_aggregate_global_and_grouped(spark):
     df = spark.createDataFrame([(1, 2.0), (1, 4.0), (2, 6.0)], "k int, x double")
-    assert rows(aggregates.hash_aggregate(df, [], [F.sum("x").alias("s")])) == [(12.0,)]
-    assert rows(aggregates.hash_aggregate(df, ["k"], [F.avg("x").alias("a")])) == [
+    assert rows(df.agg(F.sum("x").alias("s"))) == [(12.0,)]
+    assert rows(df.groupBy("k").agg(F.avg("x").alias("a"))) == [
         (1, 3.0),
         (2, 6.0),
     ]
@@ -235,7 +233,7 @@ def test_approx_aggregates_are_close_to_exact(spark):
 
 def test_exchange_partitioning_modes(spark):
     df = spark.range(0, 1000).withColumn("k", F.pmod("id", F.lit(10)))
-    h = exchange.repartition_hash(df, 8, ["k"])
+    h = df.repartition(8, "k")
     assert h.rdd.getNumPartitions() == 8
     # hash partitioning co-locates: every partition holds complete keys
     per_part = (
@@ -243,7 +241,7 @@ def test_exchange_partitioning_modes(spark):
         .groupBy("k").agg(F.countDistinct("p").alias("np")).collect()
     )
     assert all(r.np == 1 for r in per_part)
-    r = exchange.repartition_range(df, 4, ["id"])
+    r = df.repartitionByRange(4, "id")
     assert r.rdd.getNumPartitions() == 4
     # range partitioning keeps partitions order-disjoint
     bounds = (
@@ -253,44 +251,43 @@ def test_exchange_partitioning_modes(spark):
     )
     for a, b in zip(bounds, bounds[1:]):
         assert a.hi < b.lo
-    assert exchange.repartition_round_robin(df, 5).rdd.getNumPartitions() == 5
-    sp = exchange.single_partition(df)
+    assert df.repartition(5).rdd.getNumPartitions() == 5
+    sp = df.coalesce(1)
     assert sp.rdd.getNumPartitions() == 1
     assert sp.count() == 1000
 
 
 def test_sort_limit_topk(spark):
     df = spark.range(0, 100).withColumn("v", F.pmod(F.col("id") * 37, F.lit(100)))
-    top = sort_ops.top_k(df, [F.desc("v"), F.asc("id")], 5).collect()
+    top = df.orderBy(F.desc("v"), F.asc("id")).limit(5).collect()
     assert [r.v for r in top] == sorted({i * 37 % 100 for i in range(100)}, reverse=True)[:5]
-    plan = sort_ops.top_k(df, [F.desc("v")], 5)._jdf.queryExecution().executedPlan().toString()
+    plan = df.orderBy(F.desc("v")).limit(5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
-    assert sort_ops.limit(df, 7).count() == 7
-    ordered = sort_ops.sort(df, ["v"]).collect()
+    assert df.limit(7).count() == 7
+    ordered = df.orderBy("v").collect()
     assert [r.v for r in ordered] == sorted(r.v for r in ordered)
-    local = sort_ops.sort_within_partitions(exchange.repartition_hash(df, 4, ["v"]), ["v"])
+    local = df.repartition(4, "v").sortWithinPartitions("v")
     assert "Exchange" not in local._jdf.queryExecution().executedPlan().toString().split("Sort")[0]
 
 
 def test_condition_project(spark):
     df = spark.createDataFrame([(1, 2.0), (5, 3.0)], "a int, b double")
-    out = projection.condition_project(
-        df, F.col("a") > 2, {"a2": F.col("a") * 2, "b": F.col("b")}
-    )
+    out = df.filter(F.col("a") > 2).select((F.col("a") * 2).alias("a2"), "b")
     assert rows(out) == [(10, 3.0)]
-    out2 = projection.coalesce_partitions(spark.range(100).repartition(8), 2)
+    out2 = spark.range(100).repartition(8).coalesce(2)
     assert out2.rdd.getNumPartitions() == 2
 
 
 def test_join_strategy_hints(spark):
-    """The SMJ/SHJ wrappers must actually pin the physical strategy
-    (the session profile prefers hash joins, so SMJ only appears when
-    hinted — StrategyOverrides.scala:39-78 analog, inverted)."""
+    """The MERGE/SHUFFLE_HASH hints must actually pin the physical
+    strategy (the session profile prefers hash joins, so SMJ only
+    appears when hinted — StrategyOverrides.scala:39-78 analog,
+    inverted)."""
     left = spark.range(0, 1000).withColumnRenamed("id", "k")
     right = spark.range(0, 500).withColumnRenamed("id", "k")
-    smj = joins.sort_merge_join(left, right, "k")
+    smj = left.join(right.hint("MERGE"), "k")
     assert "SortMergeJoin" in smj._jdf.queryExecution().executedPlan().toString()
-    shj = joins.shuffled_hash_join(left, right, "k")
+    shj = left.join(right.hint("SHUFFLE_HASH"), "k")
     assert "ShuffledHashJoin" in shj._jdf.queryExecution().executedPlan().toString()
 
 
@@ -304,7 +301,8 @@ def test_window_topk_plan_has_window_group_limit(spark):
         [(g, i, float(i * g)) for g in (1, 2) for i in range(10)],
         "g int, i int, x double",
     )
-    out = window.window_topk(df, ["g"], [F.desc("x")], k=3)
+    w = Window.partitionBy("g").orderBy(F.desc("x"))
+    out = df.withColumn("rk", F.rank().over(w)).filter(F.col("rk") <= 3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, plan
     got = {(r["g"], r["i"]) for r in out.collect()}
@@ -316,30 +314,33 @@ def test_window_agg_frames(spark):
         [(1, 1, 10.0), (1, 2, 20.0), (1, 3, 30.0), (2, 1, 5.0)],
         "g int, seq int, x double",
     )
-    spec = window.window_spec(["g"], ["seq"], rows_between=(window.Window.unboundedPreceding, window.Window.currentRow))
-    out = window.window_agg(df, spec, {"running": F.sum("x")})
+    spec = (
+        Window.partitionBy("g")
+        .orderBy("seq")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    out = df.withColumn("running", F.sum("x").over(spec))
     got = {(r["g"], r["seq"], r["running"]) for r in out.collect()}
     assert got == {(1, 1, 10.0), (1, 2, 30.0), (1, 3, 60.0), (2, 1, 5.0)}
 
 
 def test_full_outer_join_extends_both_sides(spark):
-    """FULL OUTER through hash_join/sort_merge_join: unmatched rows on
-    EACH side survive null-extended (the join type the reference
+    """FULL OUTER unhinted and through the MERGE hint: unmatched rows
+    on EACH side survive null-extended (the join type the reference
     excluded from columnar SMJ, ColumnarGuardRule.scala:208)."""
-    from gazelle_plugin_spark.operators import joins
-
     l = spark.createDataFrame([(1, "a"), (2, "b")], "k long, lv string")
     r = spark.createDataFrame([(2, "x"), (3, "y")], "rk long, rv string")
-    for fn in (joins.hash_join, joins.sort_merge_join):
+    for hint in (None, "MERGE"):
+        right = r.hint(hint) if hint else r
         got = {
             (row.k, row.lv, row.rk, row.rv)
-            for row in fn(l, r, l.k == r.rk, "full_outer").collect()
+            for row in l.join(right, l.k == r.rk, "full_outer").collect()
         }
         assert got == {
             (1, "a", None, None),
             (2, "b", 2, "x"),
             (None, None, 3, "y"),
-        }, fn.__name__
+        }, hint
 
 
 def test_salted_join_matches_plain_join(spark):

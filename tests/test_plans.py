@@ -128,7 +128,7 @@ def test_multimodal_featurizer_is_arrow_batched(spark):
 def test_bucketed_scan_prunes_buckets(spark):
     """An equality filter on the bucket key must prune to one bucket
     at the scan (SelectedBucketsCount in the plan)."""
-    from gazelle_plugin_spark.sources import read
+    from gazelle_plugin_spark.sources.io import read
     from gazelle_plugin_spark.sources.bucketing import read_bucketed, write_bucketed
     from gazelle_plugin_spark.catalog import table_path
 

@@ -14,7 +14,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.operators import joins, setops
+from gazelle_plugin_spark.operators import joins
 from gazelle_plugin_spark.plans._util import dec
 
 SETTINGS = settings(
@@ -68,13 +68,13 @@ def test_bag_setops_multiset_semantics(spark, left, right):
     if not right:
         rdf = rdf.limit(0)
     lc, rc = Counter(left), Counter(right)
-    assert sorted(r.x for r in setops.except_all(ldf, rdf).collect()) == sorted(
+    assert sorted(r.x for r in ldf.exceptAll(rdf).collect()) == sorted(
         (lc - rc).elements()
     )
-    assert sorted(r.x for r in setops.intersect_all(ldf, rdf).collect()) == sorted(
+    assert sorted(r.x for r in ldf.intersectAll(rdf).collect()) == sorted(
         (lc & rc).elements()
     )
-    assert sorted(r.x for r in setops.except_(ldf, rdf).collect()) == sorted(
+    assert sorted(r.x for r in ldf.subtract(rdf).collect()) == sorted(
         set(left) - set(right)
     )
 

@@ -2,15 +2,17 @@
 parquet/ORC/CSV round-trips (ArrowUtils.scala:212-218 read formats +
 ArrowFileFormat write path), scan pushdown plan assertions
 (ArrowFilters.scala:28-48 analog is Catalyst+parquet pushdown), and
-the columnar cache (ColumnarInMemoryTableScanExec.scala:31 analog).
+the columnar cache (ColumnarInMemoryTableScanExec.scala:31 analog:
+``DataFrame.persist``, whose CachedBatchSerializer is columnar).
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.sources import read, write, cache_columnar
+from gazelle_plugin_spark.sources.io import read, write
 from gazelle_plugin_spark.catalog import table_path
 from tests.conftest import SF_SMALL
 
@@ -99,7 +101,7 @@ def test_bucketed_aggregation_has_no_exchange(spark):
 
 
 def test_columnar_cache_round_trip(spark, sample):
-    cached = cache_columnar(sample)
+    cached = sample.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         first = cached.count()
         plan = cached._jdf.queryExecution().executedPlan().toString()

@@ -1,21 +1,23 @@
 """SQL entry surface: views registered, SQL text produces the same
 plans/results as the DataFrame builders, and errors.py's typed
-fallback discipline."""
+fallback discipline in sources/io.py."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.operators import joins
+from gazelle_plugin_spark.catalog import register_views
 from gazelle_plugin_spark.operators.errors import UnsupportedOperationError
-from gazelle_plugin_spark.sql import SqlEngine
+from gazelle_plugin_spark.sources import io
 from tests.conftest import SF_MED
 
 
 @pytest.fixture(scope="module")
 def engine(spark):
-    return SqlEngine(spark, SF_MED)
+    """The SQL entry: the catalog's testdata views plus ``spark.sql``."""
+    register_views(spark, SF_MED)
+    return spark
 
 
 def test_sql_over_views(engine):
@@ -51,14 +53,21 @@ def test_sql_matches_dataframe_builder(engine, spark):
     assert df_result == sql_result
 
 
-def test_unsupported_operation_error_discipline(spark):
-    """The RowGuard-analog: helpers raise a typed error naming the
-    vanilla-Spark escape hatch, never silently degrade."""
+def test_unsupported_operation_error_discipline(spark, tmp_path):
+    """The RowGuard-analog: the sources layer raises a typed error
+    naming the vanilla-Spark escape hatch, never silently degrades."""
     a = spark.range(3)
-    with pytest.raises(UnsupportedOperationError, match="df.join"):
-        joins.hash_join(a, a, "id", how="left_semi_oops")
-    with pytest.raises(UnsupportedOperationError, match="build="):
-        joins.broadcast_hash_join(a, a, "id", build="middle")
+    with pytest.raises(UnsupportedOperationError, match=r"spark\.read\.format"):
+        io.read(spark, str(tmp_path), fmt="avro")
+    with pytest.raises(UnsupportedOperationError, match=r"spark\.read\.format"):
+        io.write(a, str(tmp_path / "avro_out"), fmt="avro")
+    no_ipc = tmp_path / "no_ipc"
+    no_ipc.mkdir()
+    (no_ipc / "notes.txt").write_text("not an IPC file")
+    with pytest.raises(UnsupportedOperationError, match="a non-empty IPC directory"):
+        io.read_arrow_ipc(spark, str(no_ipc))
+    with pytest.raises(UnsupportedOperationError, match="write_arrow_ipc never appends"):
+        io.write_arrow_ipc(a, str(no_ipc))
 
 
 def test_driver_window_is_a_family_cross_section():
