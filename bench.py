@@ -16,9 +16,16 @@ Modes:
   python bench.py --worker[=kind]          internal: measurement
       subprocess; reads query names from stdin, answers one JSON line
       per name on stdout.
+  python bench.py --report <detail.json> <detail.json> ...
+      growth and ratio-drift table over side files of several scale
+      points (see growth_report).
 
-All three modes time queries through the same worker path; the
-one-side modes simply ask one worker.
+All three measuring modes time queries through the same worker path;
+the one-side modes simply ask one worker. Each query's side-file
+record also carries its result row count and its per-execution
+shuffle write bytes/records (Spark's stage metrics, read through
+gazelle_plugin_spark.profile). A scale point is one run:
+SPARK_GRAFT_SF_DIR=<dir> python bench.py --no-compare <names>.
 
 Crash isolation (round-4 lesson: one broken query zeroed the whole
 artifact): every query runs under try/except; failures land in
@@ -39,6 +46,8 @@ import os
 import statistics
 import sys
 import time
+
+import pyarrow.parquet as pq
 
 #: LLM-pipeline representatives benched by default alongside TPC-H:
 #: one per dedup family, both ANN paths, sessionization, as-of join.
@@ -103,9 +112,10 @@ LINE_CAP = 1900
 
 def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
     """One query's measurement: ``{"sec": median, "t": [timed reps],
-    "w": warm-up rep or None}`` — the per-rep data makes the artifact
-    SELF-certifying (a weak median carries the rep class that caused
-    it: first-plan codegen spike, one GC outlier, or uniform).
+    "w": warm-up rep or None, "rows": result rows}`` — the per-rep
+    data makes the artifact SELF-certifying (a weak median carries the
+    rep class that caused it: first-plan codegen spike, one GC
+    outlier, or uniform).
 
     An explicit (untimed) JVM GC ahead of the reps keeps heap debt
     from earlier queries out of this query's measurement — over an
@@ -123,14 +133,14 @@ def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
     except Exception:  # noqa: BLE001 - a GC nudge is best-effort
         pass
     start = time.perf_counter()
-    fn(spark, sf_dir).collect()
+    rows = len(fn(spark, sf_dir).collect())
     first = time.perf_counter() - start
     warm = round(first, 4) if first < WARM_EXCLUDE_UNDER else None
     times = [] if warm is not None else [first]
     target = reps
     while len(times) < target:
         start = time.perf_counter()
-        fn(spark, sf_dir).collect()
+        rows = len(fn(spark, sf_dir).collect())
         times.append(time.perf_counter() - start)
         if (
             len(times) == target
@@ -142,6 +152,7 @@ def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
         "sec": round(statistics.median(times), 4),
         "t": [round(x, 4) for x in times],
         "w": warm,
+        "rows": rows,
     }
 
 
@@ -266,6 +277,7 @@ def _worker(cpus: str, sf_dir: str, kind: str) -> None:
     sides per query without paying ~10 s of JVM startup per
     measurement; the parent recycles workers periodically so neither
     side's timings ride a JVM aged by dozens of earlier queries."""
+    from gazelle_plugin_spark import profile
     from gazelle_plugin_spark.plans import all_queries
 
     spark = _engine_session(cpus) if kind == "engine" else _vanilla_session(cpus)
@@ -273,12 +285,22 @@ def _worker(cpus: str, sf_dir: str, kind: str) -> None:
     queries = all_queries()
     _warm(spark, queries, sf_dir)
     print(json.dumps({"ready": True}), flush=True)
+    seen: set = set()
     for line in sys.stdin:
         name = line.strip()
         if not name:
             continue
         try:
+            # the warm-up's and any failed query's stages count for no query
+            profile.new_stages(spark, seen)
             out = {"name": name, **_time_one(spark, queries[name], sf_dir)}
+            # every execution runs the same plan: per-execution shuffle
+            # is the stage total over all of them, warm-up included
+            runs = len(out["t"]) + (out["w"] is not None)
+            stages = profile.new_stages(spark, seen)
+            for key in ("Bytes", "Records"):
+                total = sum(s.get(f"shuffleWrite{key}", 0) for s in stages)
+                out[f"shuffle_{key.lower()}"] = total // runs
         except Exception as exc:  # noqa: BLE001
             out = {"name": name, "err": f"{type(exc).__name__}: {exc}"[:500]}
         print(json.dumps(out), flush=True)
@@ -369,6 +391,7 @@ class _WorkerHandle:
 
 
 USAGE = """usage: python bench.py [--no-compare | --vanilla] [query ...]
+       python bench.py --report <detail.json> <detail.json> ...
 
 Runs the headline query set (TPC-H + SSB + ds_ patterns + the
 LLM-pipeline ops) at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]
@@ -379,6 +402,8 @@ query.
   --no-compare     engine worker only
   --vanilla        default-conf Spark worker only
   --worker[=kind]  internal measurement subprocess (engine|vanilla)
+  --report         growth/drift table over side files of several scale
+                   points (one run per point: SPARK_GRAFT_SF_DIR=<dir>)
   -h, --help       this message
 
 Positional args name specific registered queries (e.g. q1 q6
@@ -386,7 +411,95 @@ doc_minhash_neardup); unknown flags are an error — a typo must not
 silently launch a full default compare run (round-14 verdict task 4).
 """
 
-KNOWN_FLAGS = {"--no-compare", "--vanilla", "--worker"}
+KNOWN_FLAGS = {"--no-compare", "--vanilla", "--worker", "--report"}
+
+#: A query whose engine/vanilla ratio at the largest scale point falls
+#: below this share of its ratio at the smallest is flagged.
+DEGRADED_DRIFT = 0.7
+
+
+def growth_report(points: list[dict]) -> dict[str, dict]:
+    """Per-query growth across bench.py side files of several scale
+    points, smallest corpus (``docs``) first.
+
+    A query's ``verdict`` is "ok", with first->last growth factors
+    ``docs_x``/``wall_x``/``bytes_x``/``rows_x``, only when it ran at 2+
+    points and every point counted a non-empty result. An empty output
+    at any point is refused ("refused: vacuous-at <sf_dir>"): an empty
+    candidate relation measures window machinery, not the operator
+    (SCALE.md round-14 CORRECTION). So is a record without a row count
+    ("refused: no-rowcount <sf_dir>"): it cannot prove it measured real
+    work. Independently, where 2+ points carry an engine/vanilla ratio
+    for the query, ``drift`` is last/first ratio, flagged under
+    DEGRADED_DRIFT."""
+    pts = sorted(points, key=lambda p: p.get("docs", 0))
+    names = list(dict.fromkeys(n for p in pts for n in p.get("queries", {})))
+
+    def x(a, b):
+        return round(b / a, 2) if a and b is not None else None
+
+    out: dict[str, dict] = {}
+    for n in names:
+        # (docs, sf_dir, median sec, the first side's per-query record)
+        series = [
+            (p.get("docs", 0), p.get("sf_dir", "?"), p["queries"][n],
+             next(iter(p.get("rep_detail", {}).get(n, {}).values()), {}))
+            for p in pts
+            if n in p.get("queries", {})
+        ]
+        vacuous = [d for _, d, _, r in series if r.get("rows") == 0]
+        no_count = [d for _, d, _, r in series if r.get("rows") is None]
+        if len(series) < 2:
+            e = {"verdict": "refused: <2 scale points"}
+        elif vacuous:
+            e = {"verdict": f"refused: vacuous-at {','.join(vacuous)}"}
+        elif no_count:
+            e = {"verdict": f"refused: no-rowcount {','.join(no_count)}"}
+        else:
+            (d0, _, s0, r0), (d1, _, s1, r1) = series[0], series[-1]
+            e = {
+                "verdict": "ok",
+                "docs_x": x(d0, d1),
+                "wall_x": x(s0, s1),
+                "bytes_x": x(r0.get("shuffle_bytes"), r1.get("shuffle_bytes")),
+                "rows_x": x(r0["rows"], r1["rows"]),
+            }
+        ratios = [p["ratios"][n] for p in pts if n in p.get("ratios", {})]
+        if len(ratios) >= 2:
+            drift = ratios[-1] / ratios[0]
+            e.update(ratio_first=ratios[0], ratio_last=ratios[-1], drift=round(drift, 3))
+            if drift < DEGRADED_DRIFT:
+                e["flag"] = "DEGRADED>30%"
+        out[n] = e
+    return out
+
+
+def report(paths: list[str]) -> None:
+    """Print growth_report over the side files at ``paths`` as a markdown
+    table (worst ratio drift first), the geomean ratios of the queries
+    compared at both ends, and a last line ``{"flagged": [...]}``."""
+    points = []
+    for path in paths:
+        with open(path) as fh:
+            points.append(json.load(fh))
+    rep = growth_report(points)
+    cols = ("docs_x", "wall_x", "bytes_x", "rows_x", "ratio_first", "ratio_last", "drift", "flag")
+    print("| query | verdict | " + " | ".join(cols) + " |")
+    print("|---" * (len(cols) + 2) + "|")
+    drifted = sorted((n for n in rep if "drift" in rep[n]), key=lambda n: rep[n]["drift"])
+    for n in drifted + [n for n in rep if n not in drifted]:
+        cells = ("" if rep[n].get(c) is None else str(rep[n][c]) for c in cols)
+        print(f"| {n} | {rep[n]['verdict']} | " + " | ".join(cells) + " |")
+    uncompared = sorted(set(rep) - set(drifted))
+    if uncompared:
+        print(f"\nuncompared (a ratio at fewer than 2 points): {' '.join(uncompared)}")
+    if drifted:
+        def gm(key):
+            return math.exp(sum(math.log(rep[n][key]) for n in drifted) / len(drifted))
+
+        print(f"\ngeomean over the {len(drifted)} common queries: "
+              f"smallest {gm('ratio_first'):.4f} -> largest {gm('ratio_last'):.4f}")
+    print(json.dumps({"flagged": [n for n in drifted if "flag" in rep[n]]}))
 
 
 def main() -> None:
@@ -405,6 +518,9 @@ def main() -> None:
     if unknown:
         print(f"bench.py: unknown flag(s): {' '.join(unknown)}\n{USAGE}", file=sys.stderr, end="")
         sys.exit(2)
+    if "--report" in args:
+        report([a for a in args if a != "--report"])
+        return
     for a in args:
         if a.startswith("--worker"):
             kind = a.split("=", 1)[1] if "=" in a else "vanilla"
@@ -429,7 +545,13 @@ def main() -> None:
         "reps": REPS,
         "short_query_reps": SHORT_QUERY_REPS,
         "machine": _machine_state(),
+        "sf_dir": sf_dir,
     }
+    # corpus sizes order a growth report's scale points (footers only, no job)
+    for key, table in (("docs", "documents"), ("vecs", "embeddings")):
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        if os.path.exists(path):
+            result[key] = pq.read_metadata(path).num_rows
 
     # Interleaved SYMMETRIC measurement: each side lives in its own
     # worker subprocess, asked back-to-back per query; crash respawns
@@ -446,7 +568,7 @@ def main() -> None:
             ans = w.ask(name)
             if "sec" in ans:
                 secs[kind][name] = ans["sec"]
-                reps[kind][name] = {"t": ans.get("t"), "w": ans.get("w")}
+                reps[kind][name] = {k: v for k, v in ans.items() if k not in ("name", "sec")}
             else:
                 errs[kind][name] = ans["err"]
     for w in workers.values():

@@ -9,16 +9,6 @@ the Python worker, no row conversion — the exact mechanism the
 reference re-implemented.
 """
 
-from gazelle_plugin_spark.functions.registry import (
-    BUILTIN_UDFS,
-    register_builtin_udfs,
-    register_grouped_agg,
-    register_scalar,
-)
+from gazelle_plugin_spark.functions.registry import register_builtin_udfs
 
-__all__ = [
-    "BUILTIN_UDFS",
-    "register_builtin_udfs",
-    "register_scalar",
-    "register_grouped_agg",
-]
+__all__ = ["register_builtin_udfs"]

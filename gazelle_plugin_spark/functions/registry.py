@@ -18,58 +18,10 @@ from __future__ import annotations
 
 import math
 import urllib.parse
-from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
-
-#: name -> (pandas_udf, doc) registered by register_builtin_udfs
-BUILTIN_UDFS: dict[str, tuple[object, str]] = {}
-
-
-def register_scalar(
-    spark: SparkSession,
-    name: str,
-    fn: Callable[..., pd.Series],
-    return_type: DataType | str,
-):
-    """Register ``fn`` (pd.Series -> pd.Series) as a scalar vectorized
-    UDF, callable from SQL and DataFrame code (ColumnarUDF registry
-    analog — but open, not a hardcoded name list)."""
-    udf = F.pandas_udf(fn, return_type)
-    spark.udf.register(name, udf)
-    return udf
-
-
-def register_grouped_agg(
-    spark: SparkSession,
-    name: str,
-    fn: Callable[..., object],
-    return_type: DataType | str,
-):
-    """Register a grouped-aggregate vectorized UDF (pd.Series ->
-    scalar) — the UDAF surface the reference lacked natively
-    (docs/operators.md:26-27 row fallback; SURVEY.md §2.10)."""
-    # fn's `pd.Series -> scalar` type hints make pandas_udf infer the
-    # grouped-agg eval type (the PandasUDFType enum is deprecated)
-    udf = F.pandas_udf(fn, return_type)
-    spark.udf.register(name, udf)
-    return udf
-
-
-def register_udtf(spark: SparkSession, name: str, cls: type, return_type: str):
-    """Register a Python UDTF (table function) — completes the
-    UDF/UDAF/UDTF triple the reference left on the row-fallback path
-    (SURVEY.md §2.10: 'UDAF / UDTF: none native'). Spark >= 3.5 runs
-    these Arrow-batched like pandas UDFs."""
-    from pyspark.sql.functions import udtf
-
-    wrapped = udtf(cls, returnType=return_type)
-    spark.udtf.register(name, wrapped)
-    return wrapped
-
 
 # ---------------------------------------------------------------- built-ins
 
@@ -121,28 +73,30 @@ class _SplitNgrams:
 
 
 def register_builtin_udfs(spark: SparkSession) -> dict[str, tuple[object, str]]:
-    """Install the built-in registry into ``spark`` and return it."""
-    BUILTIN_UDFS["split_ngrams"] = (
-        register_udtf(spark, "split_ngrams", _SplitNgrams, "pos int, ngram string"),
-        "UDTF: explode text into positioned word n-grams",
-    )
-    BUILTIN_UDFS["url_decode"] = (
-        register_scalar(spark, "url_decode", _url_decode, "string"),
-        "percent-decode a URL-encoded string",
-    )
-    BUILTIN_UDFS["url_encode"] = (
-        register_scalar(spark, "url_encode", _url_encode, "string"),
-        "percent-encode a string",
-    )
-    BUILTIN_UDFS["text_entropy"] = (
-        register_scalar(spark, "text_entropy", _text_entropy, "double"),
-        "Shannon entropy (bits/char) of the character distribution",
-    )
-    BUILTIN_UDFS["geo_mean"] = (
-        register_grouped_agg(spark, "geo_mean", _geo_mean, "double"),
-        "geometric mean (grouped aggregate)",
-    )
-    return dict(BUILTIN_UDFS)
+    """Install the built-ins into ``spark``; return ``name -> (udf, doc)``.
+
+    The scalar and grouped-aggregate UDFs are both ``F.pandas_udf``:
+    ``_geo_mean``'s ``pd.Series -> float`` hints make Spark infer the
+    grouped-agg eval type (the UDAF surface the reference lacked
+    natively, SURVEY.md §2.10). ``split_ngrams`` is a Python UDTF,
+    which Spark >= 3.5 runs Arrow-batched like the pandas UDFs."""
+    pandas_udfs = {
+        "url_decode": (F.pandas_udf(_url_decode, "string"), "percent-decode a URL-encoded string"),
+        "url_encode": (F.pandas_udf(_url_encode, "string"), "percent-encode a string"),
+        "text_entropy": (
+            F.pandas_udf(_text_entropy, "double"),
+            "Shannon entropy (bits/char) of the character distribution",
+        ),
+        "geo_mean": (F.pandas_udf(_geo_mean, "double"), "geometric mean (grouped aggregate)"),
+    }
+    for name, (fn, _doc) in pandas_udfs.items():
+        spark.udf.register(name, fn)
+    split_ngrams = F.udtf(_SplitNgrams, returnType="pos int, ngram string")
+    spark.udtf.register("split_ngrams", split_ngrams)
+    return {
+        "split_ngrams": (split_ngrams, "UDTF: explode text into positioned word n-grams"),
+        **pandas_udfs,
+    }
 
 
 def grouped_zscore(df, group_cols: list[str], value_col: str):

@@ -16,9 +16,11 @@ the edge-rewriting variant of the same bound).
 Scale posture: every round shuffles the EDGE list and the LABEL table
 (both O(|V| + |E|) of the graph, typically orders of magnitude
 smaller than the corpus the graph was derived from), never the source
-data. ``localCheckpoint`` truncates lineage each 2-round batch so
-later rounds do not replay earlier ones (the probe's COUNT is the job
-that materializes the lazy checkpoint — one job per batch); swap for
+data. ``localCheckpoint`` truncates lineage every round so later
+rounds do not replay earlier ones, and one convergence probe runs per
+round (the probe's COUNT is the job that materializes the lazy
+checkpoint — one job per round; two rounds per probe was measured
+and rejected, see the loop comment); swap for
 reliable ``checkpoint`` (HDFS / object store) every few rounds on a
 production cluster (the full trade is decided in SCALE.md "Round-16:
 localCheckpoint at 100 TB"). The convergence probe is a COUNT

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from gazelle_plugin_spark.catalog import read_parquet
 from gazelle_plugin_spark.plans import query
 from gazelle_plugin_spark.plans._util import (
     SQL_DISC_PRICE,
@@ -57,11 +56,14 @@ def rel_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout is row-identical."""
     from gazelle_plugin_spark.sources import layout
 
+    lineitem = t(spark, sf_dir, "lineitem")
     path = materialize_once(
         sf_dir, "zorder/lineitem",
-        lambda tmp: layout.zorder_write(t(spark, sf_dir, "lineitem"), tmp, _ZCOLS, _FILES),
+        lambda tmp: layout.zorder_write(lineitem, tmp, _ZCOLS, _FILES),
     )
-    li = read_parquet(spark, path)
+    # zorder_write drops its curve column: the mirror has lineitem's
+    # schema, so reading it with that schema starts no inference job
+    li = spark.read.schema(lineitem.schema).parquet(path)
     return (
         li.filter(
             F.col("l_partkey").between(_PART_LO, _PART_HI)

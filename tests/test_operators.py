@@ -388,32 +388,12 @@ def _heaviest_stage_read_records(spark, df) -> tuple[float, float]:
     stage after fully evaluating df — the deterministic skew signal
     (task wall times bounce with scheduler noise at local[32]; the row
     counts each task pulls are a pure function of the partitioning)."""
-    import json as _json
-    import urllib.request
+    from gazelle_plugin_spark import profile
 
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-
-    def rest(path):
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}{path}", timeout=10
-        ) as r:
-            return _json.loads(r.read())
-
-    before = {
-        (s["stageId"], s["attemptId"]) for s in rest("/stages?status=complete")
-    }
+    seen: set = set()
+    profile.new_stages(spark, seen)
     df.selectExpr("sum(hash(*)) as h").collect()
-    new = [
-        s
-        for s in rest("/stages?status=complete")
-        if (s["stageId"], s["attemptId"]) not in before
-    ]
-    top = max(new, key=lambda s: s.get("shuffleReadBytes", 0))
-    q = rest(
-        f"/stages/{top['stageId']}/{top['attemptId']}/taskSummary"
-        "?quantiles=0.5,1.0"
-    )
+    _, q = profile.heaviest_read_summary(spark, profile.new_stages(spark, seen), "0.5,1.0")
     rr = q["shuffleReadMetrics"]["readRecords"]
     return rr[0], rr[1]
 

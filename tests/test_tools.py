@@ -1,20 +1,24 @@
-"""Pins for the measurement/report tooling (round-13 advice)."""
+"""Pins for bench.py's measurement and report paths."""
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import sys
 
-_TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+import pyarrow.parquet as pq
+
+from tests.conftest import SF_MED
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load(name: str):
-    spec = importlib.util.spec_from_file_location(name, os.path.join(_TOOLS, f"{name}.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+def _report(monkeypatch, *paths):
+    """Run ``bench.py --report`` over ``paths``."""
+    import bench
+
+    monkeypatch.setattr(sys, "argv", ["bench.py", "--report", *map(str, paths)])
+    bench.main()
 
 
 def test_sf1_report_disjoint_sides(tmp_path, monkeypatch, capsys):
@@ -23,10 +27,9 @@ def test_sf1_report_disjoint_sides(tmp_path, monkeypatch, capsys):
     line instead of dying on a zero-division in the geomean block."""
     a = tmp_path / "sf1.json"
     b = tmp_path / "sf01.json"
-    a.write_text(json.dumps({"ratios": {"q1": 1.2}, "queries": {"q1": 3.0}}))
-    b.write_text(json.dumps({"ratios": {"q6": 1.1}, "queries": {"q6": 0.5}}))
-    monkeypatch.setattr(sys, "argv", ["sf1_report.py", str(a), str(b)])
-    _load("sf1_report").main()
+    a.write_text(json.dumps({"docs": 10, "ratios": {"q1": 1.2}, "queries": {"q1": 3.0}}))
+    b.write_text(json.dumps({"docs": 1, "ratios": {"q6": 1.1}, "queries": {"q6": 0.5}}))
+    _report(monkeypatch, a, b)
     out = capsys.readouterr().out
     assert '{"flagged": []}' in out
     assert "uncompared" in out
@@ -35,10 +38,9 @@ def test_sf1_report_disjoint_sides(tmp_path, monkeypatch, capsys):
 def test_sf1_report_flags_degraded(tmp_path, monkeypatch, capsys):
     a = tmp_path / "sf1.json"
     b = tmp_path / "sf01.json"
-    a.write_text(json.dumps({"ratios": {"q1": 0.6}, "queries": {"q1": 3.0}}))
-    b.write_text(json.dumps({"ratios": {"q1": 1.0}, "queries": {"q1": 0.5}}))
-    monkeypatch.setattr(sys, "argv", ["sf1_report.py", str(a), str(b)])
-    _load("sf1_report").main()
+    a.write_text(json.dumps({"docs": 10, "ratios": {"q1": 0.6}, "queries": {"q1": 3.0}}))
+    b.write_text(json.dumps({"docs": 1, "ratios": {"q1": 1.0}, "queries": {"q1": 0.5}}))
+    _report(monkeypatch, a, b)
     out = capsys.readouterr().out
     assert '{"flagged": ["q1"]}' in out
     assert "geomean" in out
@@ -82,16 +84,21 @@ def test_bench_warns_when_profile_class_cache_not_live(spark, capsys):
     assert f"{bench.CODEGEN_CACHE}=4096 live, not the profile's 100" in err
 
 
-_R16 = os.path.join(
-    os.path.dirname(_TOOLS), "measurements", "bench_detail_r16_sf01.json"
-)
+_R16 = os.path.join(_ROOT, "measurements", "bench_detail_r16_sf01.json")
 
 
-def _fake_bench(monkeypatch, tmp_path, capsys, *flags, detail="d.json", slower=None):
-    """Drive bench.main() over the 96 queries of the committed r16
-    sf0.1 side file with fake workers that answer that run's per-query
-    medians and rep arrays, so no JVM starts. ``slower`` multiplies
-    named engine medians. Returns (stdout, side file, worker kinds)."""
+def _fake_record(name: str) -> dict:
+    """The rows/shuffle figures a fake worker answers for ``name``."""
+    n = len(name)
+    return {"rows": n, "shuffle_bytes": 1000 * n, "shuffle_records": 10 * n}
+
+
+def _fake_bench(monkeypatch, tmp_path, capsys, *flags, detail="d.json", slower=None, sf_dir=SF_MED):
+    """Drive bench.main() at ``sf_dir`` over the 96 queries of the
+    committed r16 sf0.1 side file with fake workers that answer that
+    run's per-query medians and rep arrays, plus _fake_record's rows
+    and shuffle figures, so no JVM starts. ``slower`` multiplies named
+    engine medians. Returns (stdout, side file, worker kinds)."""
     import bench
 
     r16 = json.load(open(_R16))
@@ -109,7 +116,7 @@ def _fake_bench(monkeypatch, tmp_path, capsys, *flags, detail="d.json", slower=N
 
         def ask(self, name):
             reps = r16["rep_detail"][name][self.kind]
-            return {"name": name, "sec": secs[self.kind][name], **reps}
+            return {"name": name, "sec": secs[self.kind][name], **reps, **_fake_record(name)}
 
         def recycle(self):
             pass
@@ -120,6 +127,7 @@ def _fake_bench(monkeypatch, tmp_path, capsys, *flags, detail="d.json", slower=N
     path = tmp_path / detail
     monkeypatch.setattr(bench, "_WorkerHandle", FakeHandle)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(path))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
     monkeypatch.setattr(sys, "argv", ["bench.py", *flags, *sorted(r16["queries"])])
     bench.main()
     return capsys.readouterr().out, json.load(open(path)), kinds
@@ -145,9 +153,18 @@ def test_bench_compare_line_from_fake_workers(tmp_path, monkeypatch, capsys):
     assert detail["geomean_speedup_vs_vanilla"] == pytest.approx(
         r16["geomean_speedup_vs_vanilla"], abs=1e-4
     )
-    # r16's keys minus its two adjudication blocks and its summary
-    assert set(detail) < set(r16) and len(set(r16) - set(detail)) == 3
+    # r16's keys minus its two adjudication blocks and its summary,
+    # plus the scale point: its dir and corpus sizes from parquet footers
+    assert set(detail) - set(r16) == {"sf_dir", "docs", "vecs"}
+    assert len(set(r16) - set(detail)) == 3
     assert not any(k.startswith("adjudications") for k in detail)
+    assert detail["sf_dir"] == SF_MED
+    assert detail["docs"] == pq.read_metadata(f"{SF_MED}/documents.parquet").num_rows
+    assert detail["vecs"] == pq.read_metadata(f"{SF_MED}/embeddings.parquet").num_rows
+    # each side's per-query record is the worker's answer minus name and median
+    for n, sides in detail["rep_detail"].items():
+        for kind in kinds:
+            assert sides[kind] == {**r16["rep_detail"][n][kind], **_fake_record(n)}
 
     lines = out.splitlines()
     assert len(lines) == 1 and len(lines[0]) <= bench.LINE_CAP
@@ -185,22 +202,24 @@ def test_bench_one_side_modes_ask_only_their_worker(tmp_path, monkeypatch, capsy
 
 
 def test_sf1_report_reads_bench_side_files(tmp_path, monkeypatch, capsys):
-    """tools/sf1_report.py renders two bench.py side files: it reads
-    their ``ratios`` and ``queries`` keys, so this pins that contract."""
+    """``bench.py --report`` renders bench.py side files of two scale
+    points: it orders them by their ``docs`` and reads their
+    ``queries``, ``ratios`` and per-query records, so this pins that
+    contract."""
+    larger = os.path.join(os.path.dirname(SF_MED), "sf0.1")  # 10x SF_MED's documents
     _, a, _ = _fake_bench(
-        monkeypatch, tmp_path, capsys, detail="sf1.json", slower={"q1": 2.0}
+        monkeypatch, tmp_path, capsys, detail="sf1.json", slower={"q1": 2.0}, sf_dir=larger
     )
     _, b, _ = _fake_bench(monkeypatch, tmp_path, capsys, detail="sf01.json")
-    monkeypatch.setattr(
-        sys, "argv", ["sf1_report.py", str(tmp_path / "sf1.json"), str(tmp_path / "sf01.json")]
-    )
-    _load("sf1_report").main()
+    _report(monkeypatch, tmp_path / "sf1.json", tmp_path / "sf01.json")
     out = capsys.readouterr().out
     rows = [r for r in out.splitlines() if r.startswith("| ") and not r.startswith("| query")]
     assert len(rows) == 96
     assert rows[0].startswith("| q1 |") and "DEGRADED" in rows[0]
     assert out.rstrip().endswith('{"flagged": ["q1"]}')
     assert "geomean over the 96 common queries" in out
+    # fake records are non-empty at both points: every query gets a verdict
+    assert all("| ok |" in r for r in rows)
 
 
 def test_scale_bench_growth_report_refuses_vacuous():
@@ -208,21 +227,22 @@ def test_scale_bench_growth_report_refuses_vacuous():
     are refused — not computed — when any scale point's output was
     empty or predates the row-count schema; healthy series carry
     first->last growth factors."""
-    sb = _load("scale_bench")
+    import bench as sb
 
     def pt(docs, name_rows):
         return {
             "sf_dir": f"d{docs}",
             "docs": docs,
-            "queries": {
-                n: {"sec": docs / 1000, "shuffle_bytes": docs * 10, **extra}
+            "queries": {n: docs / 1000 for n in name_rows},
+            "rep_detail": {
+                n: {"engine": {"shuffle_bytes": docs * 10, **extra}}
                 for n, extra in name_rows.items()
             },
         }
 
     lines = [
-        pt(1000, {"ok_q": {"rows": 5}, "vac_q": {"rows": 7}, "old_q": {}}),
         pt(3000, {"ok_q": {"rows": 15}, "vac_q": {"rows": 0}, "old_q": {}}),
+        pt(1000, {"ok_q": {"rows": 5}, "vac_q": {"rows": 7}, "old_q": {}}),
     ]
     rep = sb.growth_report(lines)
     assert rep["ok_q"]["verdict"] == "ok"
@@ -234,5 +254,18 @@ def test_scale_bench_growth_report_refuses_vacuous():
     # pre-guard rows can't prove non-vacuity -> refused as well
     assert rep["old_q"]["verdict"].startswith("refused: no-rowcount")
     # a single scale point is never a growth verdict
-    rep = sb.growth_report(lines[:1])
+    rep = sb.growth_report(lines[1:])
     assert rep["ok_q"]["verdict"] == "refused: <2 scale points"
+
+
+def test_profile_new_stages_reads_each_stage_once(spark):
+    """The one stage reader: a shuffling query's new stages report shuffle
+    write bytes, and a second call with the same ``seen`` finds nothing new."""
+    from gazelle_plugin_spark import profile
+
+    seen: set = set()
+    profile.new_stages(spark, seen)
+    spark.range(0, 10_000).selectExpr("id % 7 as k").groupBy("k").count().collect()
+    stages = profile.new_stages(spark, seen)
+    assert sum(s.get("shuffleWriteBytes", 0) for s in stages) > 0
+    assert profile.new_stages(spark, seen) == []

@@ -77,3 +77,20 @@ def test_bucketed_mirror_registers_without_jobs(spark):
     assert jobs == 0
     assert sorted(df.collect()) == want
     assert "Bucketed: true" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_zorder_mirror_reads_without_jobs(spark):
+    """The z-order mirror is read with lineitem's memoized schema: a
+    session that has read lineitem, with the mirror on disk, builds
+    rel_zorder_scan without a Spark job and gets the same rows."""
+    from gazelle_plugin_spark.plans._util import t
+    from gazelle_plugin_spark.plans.layout import rel_zorder_scan
+
+    warm = rel_zorder_scan(spark, SF_SMALL)  # writes the mirror if absent
+    fresh = spark.newSession()
+    t(fresh, SF_SMALL, "lineitem")
+    df, jobs = _jobs(fresh, "zorder:read", lambda: rel_zorder_scan(fresh, SF_SMALL))
+    assert jobs == 0
+    assert sorted(df.collect()) == sorted(warm.collect())
+    # the premise: the schema Spark infers from the mirror's files is lineitem's
+    assert spark.read.parquet(*df.inputFiles()).schema == t(spark, SF_SMALL, "lineitem").schema

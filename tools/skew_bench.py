@@ -1,8 +1,8 @@
 """Hot-key skew stress measurement (SCALE.md round-13, verdict task 5).
 
 One invocation = ONE join variant in ONE fresh JVM (same discipline as
-tools/scale_bench.py: later variants must not ride earlier JIT/GC
-state). The fixture is planted in-memory at sf1-like fact grain: a
+bench.py's recycled workers: later variants must not ride earlier
+JIT/GC state). The fixture is planted in-memory at sf1-like fact grain: a
 fact table where a single hot key carries 90% of rows (the classic
 power-law user/session distribution every 100 TB corpus has) joined
 to a dim table big enough that Spark will NOT auto-broadcast it —
@@ -34,7 +34,6 @@ import os
 import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -65,31 +64,16 @@ def _sink(df) -> int:
     return df.selectExpr("sum(hash(k, payload, label)) as h").collect()[0][0]
 
 
-def _rest(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}{path}", timeout=10
-    ) as r:
-        return json.loads(r.read())
-
-
 def _join_stage_spread(spark, seen: set) -> dict:
     """Task-duration quantiles of the heaviest NEW shuffle-read stage
     (the reduce side of the join) + total new shuffle write bytes."""
-    stages = _rest(spark, "/stages?status=complete")
-    new = [s for s in stages if (s["stageId"], s["attemptId"]) not in seen]
-    for s in new:
-        seen.add((s["stageId"], s["attemptId"]))
+    from gazelle_plugin_spark import profile
+
+    new = profile.new_stages(spark, seen)
     wbytes = sum(s.get("shuffleWriteBytes", 0) for s in new)
     if not new:
         return {"shuffle_write_bytes": wbytes}
-    top = max(new, key=lambda s: s.get("shuffleReadBytes", 0))
-    q = _rest(
-        spark,
-        f"/stages/{top['stageId']}/{top['attemptId']}/taskSummary"
-        "?quantiles=0.5,0.95,1.0",
-    )
+    top, q = profile.heaviest_read_summary(spark, new, "0.5,0.95,1.0")
     dur = q.get("duration", [None, None, None])
     return {
         "shuffle_write_bytes": wbytes,
