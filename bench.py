@@ -9,8 +9,8 @@ Modes:
       INTERLEAVED per query — engine median-of-R then vanilla
       median-of-R for the same query back-to-back, so sandbox load
       shifts hit both sides alike. R = $SPARK_GRAFT_BENCH_REPS
-      (default 3, median); a first rep under WARM_EXCLUDE_UNDER
-      (2.0 s) is an untimed warm-up on BOTH sides.
+      (default 3, median) after one untimed warm-up execution on
+      BOTH sides.
   python bench.py --no-compare [names...]  engine worker only
   python bench.py --vanilla [names...]     vanilla worker only
   python bench.py --worker[=kind]          internal: measurement
@@ -78,19 +78,11 @@ PIPELINE_BENCH = [
 
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
-#: First-rep cutoff (seconds) below which the first execution is
-#: treated as an UNTIMED warm-up and excluded from the median. The
-#: r11 per-rep profiling showed ~3x first-to-last-rep decay on BOTH
-#: engines for sub-second queries — the first rep is dominated by
-#: that query's own whole-stage-codegen compilation, not by the
-#: engine — so median-of-3 including it measured codegen, and a new
-#: sub-1.0 "perf-weak" entry had to be hand-re-benched every round.
-#: Long queries keep all reps (the warm-up share is negligible and an
-#: extra execution is expensive). Symmetric: both workers time
-#: through this same function.
-WARM_EXCLUDE_UNDER = 2.0
+#: Timed median (seconds) under which a query is short and extends
+#: to SHORT_QUERY_REPS timed reps.
+SHORT_QUERY_UNDER = 2.0
 
-#: Queries whose timed median lands under WARM_EXCLUDE_UNDER extend to
+#: Queries whose timed median lands under SHORT_QUERY_UNDER extend to
 #: this many timed reps (round-12 verdict task 2): the sub-2s class is
 #: exactly where median-of-3 was repeatedly too noisy to judge from
 #: the driver artifact (ds_dow_pivot 0.437, doc_incremental_dedup
@@ -112,7 +104,7 @@ LINE_CAP = 1900
 
 def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
     """One query's measurement: ``{"sec": median, "t": [timed reps],
-    "w": warm-up rep or None, "rows": result rows}`` — the per-rep
+    "w": untimed warm-up rep, "rows": result rows}`` — the per-rep
     data makes the artifact SELF-certifying (a weak median carries the
     rep class that caused it: first-plan codegen spike, one GC
     outlier, or uniform).
@@ -123,20 +115,21 @@ def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
     random later query's reps and show up as a spurious 2-4x outlier
     on ONE side (both sides of the compare run this same path).
 
-    The FIRST execution is kept in the median only when it ran at
-    least WARM_EXCLUDE_UNDER seconds; a shorter first rep is warm-up
-    (first-plan codegen) and further timed reps follow — `reps` of
-    them, extended to SHORT_QUERY_REPS when the timed median is under
-    the same threshold."""
+    The FIRST execution is always an untimed warm-up: it pays the
+    query's own whole-stage-codegen compilation on both engines, ~3x
+    the steady rep for sub-second queries, and a long query's first
+    rep is still warming too (doc_minhash_neardup at sf0.1:
+    6.40/3.54/3.01 s). `reps` timed reps follow, extended to
+    SHORT_QUERY_REPS when their median is under SHORT_QUERY_UNDER.
+    Symmetric: both workers time through this same function."""
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:  # noqa: BLE001 - a GC nudge is best-effort
         pass
     start = time.perf_counter()
     rows = len(fn(spark, sf_dir).collect())
-    first = time.perf_counter() - start
-    warm = round(first, 4) if first < WARM_EXCLUDE_UNDER else None
-    times = [] if warm is not None else [first]
+    warm = round(time.perf_counter() - start, 4)
+    times: list[float] = []
     target = reps
     while len(times) < target:
         start = time.perf_counter()
@@ -145,7 +138,7 @@ def _time_one(spark, fn, sf_dir: str, reps: int = REPS) -> dict:
         if (
             len(times) == target
             and target < SHORT_QUERY_REPS
-            and statistics.median(times) < WARM_EXCLUDE_UNDER
+            and statistics.median(times) < SHORT_QUERY_UNDER
         ):
             target = SHORT_QUERY_REPS
     return {
@@ -296,7 +289,7 @@ def _worker(cpus: str, sf_dir: str, kind: str) -> None:
             out = {"name": name, **_time_one(spark, queries[name], sf_dir)}
             # every execution runs the same plan: per-execution shuffle
             # is the stage total over all of them, warm-up included
-            runs = len(out["t"]) + (out["w"] is not None)
+            runs = len(out["t"]) + 1
             stages = profile.new_stages(spark, seen)
             for key in ("Bytes", "Records"):
                 total = sum(s.get(f"shuffleWrite{key}", 0) for s in stages)

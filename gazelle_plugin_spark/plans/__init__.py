@@ -72,35 +72,35 @@ def load_all() -> None:
 #: done. (Round 14 shipped doc_ngram_jaccard's in-plan DF cap + ppjoin
 #: filter while its newest driver evidence was r11; round 15 fronts it.)
 DRIVER_WINDOW: tuple[str, ...] = (
-    # flagship
+    # flagship; first by position, so its sort_small plan is fronted too
     "q1",
-    # FRONTED per the changed-plan rule (r14 verdict item 1; the r15
-    # verdict's item 1 names all 11): every plan function that
-    # materially changed in round 15 — the lineage cuts, the two
-    # Expand-elimination pre-aggregates, and the Arrow vectorizations —
-    # must be validated by the driver's own DuckDB hash gate this
-    # round. The r15 window was frozen at r14 close, so none of these
-    # new plans has driver-side evidence yet.
+    # FRONTED per the changed-plan rule: every builder whose plan
+    # changed with the job cuts — the bounded TPC-H/SSB results that
+    # now sort in one task (plans/_util.sort_small; orc_ssb2_1 shares
+    # ssb2_1's flight-2 plan), q18's reuse of its subquery's per-order
+    # sum — and rel_except_all, whose supplier side is now bounded by
+    # key so it is non-empty at sf0.1.
+    "q4", "q5", "q7", "q8", "q9", "q12", "q16", "q18", "q22",
+    "ssb2_1", "ssb2_2", "ssb2_3", "ssb3_1", "ssb3_2", "ssb3_3",
+    "ssb3_4", "ssb4_1", "ssb4_2", "ssb4_3", "orc_ssb2_1",
+    "rel_except_all",
+    # Fronted earlier for the lineage cuts, Expand-elimination
+    # pre-aggregates, Arrow vectorizations, candidate-join tightening,
+    # rank pruning and salted-join assert relocation; all green in
+    # CORRECTNESS_r16.json.
     "emb_semdedup", "emb_pq", "emb_ivfpq_search",
     "ds_band_distinct", "ds_join_chain", "ds_lochierarchy",
     "ds_rollup_rank",
     "doc_minhash_neardup", "doc_neardup_components",
     "doc_incremental_dedup", "doc_cluster_dedup",
-    # FRONTED for round 16's own plan work (same rule, applied
-    # within-round): these queries' plan paths are optimization-round-2
-    # targets (doc_ngram_jaccard candidate-join tightening, ds_dual_rank
-    # rank pruning, rel_salted_join assert relocation), so any change
-    # they ship is hash-gated in the same round it lands.
     "doc_ngram_jaccard", "ds_dual_rank", "rel_salted_join",
-    # STALEST evidence next: the 26 remaining r10 rows — exactly the
-    # rotation precomputed at r15 close. After this window no query's
-    # newest driver green is older than r11.
-    "dsv27_q10a", "dsv27_q11", "dsv27_q14a", "dsv27_q34",
-    "dsv27_q5a", "dsv27_q6", "dsv27_q67a", "dsv27_q70a",
-    "dsv27_q74", "dsv27_q75", "dsv27_q80a", "dsv27_q86a",
-    "q12", "q13", "q14", "q15", "q17", "q20",
-    "rel_collect", "rel_except", "rel_intersect",
-    "rel_union_distinct", "ssb2_2", "ssb3_2", "ssb3_3", "ssb4_2",
+    # The rest of the r10 cohort rotated in for stale evidence (green
+    # again in r16). Its 12 dsv27_ rows and q13/q14/q15/q17 rotated out
+    # to make room for the fronted rows: their newest green before r16
+    # was r10, the stalest of the window, and none of their plans
+    # changed since.
+    "q20", "rel_collect", "rel_except", "rel_intersect",
+    "rel_union_distinct",
     # ... fill with stalest r11 rows, curated for family coverage
     # (events_/expr_ representatives are r11; mm_blob_stats is the
     # stalest mm_ row, r12 — test_sql_entry pins the cross-section).

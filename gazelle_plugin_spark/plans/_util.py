@@ -25,6 +25,21 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet(spark, table_path(sf_dir, name))
 
 
+def sort_small(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """``df`` ordered by ``cols`` like ``df.orderBy(*cols)``, for a
+    BOUNDED result only: an aggregate over keys from fixed domains
+    (flags, priorities, nations, regions, years, segments,
+    brand/type/size, city buckets), a few thousand rows at any scale.
+
+    ``orderBy`` range-partitions its input, which costs a sampling job
+    and a range shuffle (two Spark jobs per query); this merges the
+    partitions into one task and sorts it there, so the whole result
+    must fit one task. Per-customer, per-order or per-part outputs grow
+    with the data and keep ``orderBy``; ``orderBy(...).limit(n)`` is
+    already one ``TakeOrderedAndProject`` stage and keeps it too."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 def materialize_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
     """The directory of mirror ``name`` (an at-rest copy of ``sf_dir``'s
     tables), ``.mirror_cache/<sf>/<name>`` in the checkout (gitignored),

@@ -212,15 +212,22 @@ def rel_intersect_all(spark, sf_dir):
     oracle="""
 SELECT c_nationkey AS nk FROM customer WHERE c_custkey < 100
 EXCEPT ALL
-SELECT s_nationkey AS nk FROM supplier
+SELECT s_nationkey AS nk FROM supplier WHERE s_suppkey < 50
 ORDER BY nk
 """,
 )
 def rel_except_all(spark, sf_dir):
+    """EXCEPT ALL — multiplicity-preserving (left count minus right
+    count). Both sides are bounded by key: against every supplier the
+    right bag outnumbers the left on each nation key at sf0.1 and the
+    result is empty."""
     c = t(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100).select(
         F.col("c_nationkey").alias("nk")
     )
-    return c.exceptAll(_supp_nations(spark, sf_dir)).orderBy("nk")
+    s = t(spark, sf_dir, "supplier").filter(F.col("s_suppkey") < 50).select(
+        F.col("s_nationkey").alias("nk")
+    )
+    return c.exceptAll(s).orderBy("nk")
 
 
 @query(

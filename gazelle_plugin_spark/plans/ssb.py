@@ -30,6 +30,7 @@ from gazelle_plugin_spark.plans._util import (
     dec,
     disc_price,
     materialize_once,
+    sort_small,
     sql_dsum,
     t,
 )
@@ -208,11 +209,9 @@ def _flight2(spark, sf_dir, part_pred, region, load=None):
     f = f.join(o, f.l_orderkey == o.o_orderkey).withColumn(
         "d_year", F.year(F.col("o_orderdate"))
     )
-    return (
-        f
-        .groupBy("d_year", "p_brand")
-        .agg(F.sum(revenue()).cast("double").alias("revenue"))
-        .orderBy("d_year", "p_brand")
+    return sort_small(
+        f.groupBy("d_year", "p_brand").agg(F.sum(revenue()).cast("double").alias("revenue")),
+        "d_year", "p_brand",
     )
 
 
@@ -277,12 +276,12 @@ def ssb3_1(spark, sf_dir):
     f = fact(spark, sf_dir).filter(F.col("d_year").between(1995, 1997))
     c = customer_dim(spark, sf_dir).filter(F.col("c_region") == "ASIA")
     s = supplier_dim(spark, sf_dir).filter(F.col("s_region") == "ASIA")
-    return (
+    return sort_small(
         f.join(F.broadcast(c), f.o_custkey == c.c_custkey)
         .join(F.broadcast(s), f.l_suppkey == s.s_suppkey)
         .groupBy("c_nation", "s_nation", "d_year")
-        .agg(F.sum(revenue()).cast("double").alias("revenue"))
-        .orderBy("d_year", F.desc("revenue"), "c_nation", "s_nation")
+        .agg(F.sum(revenue()).cast("double").alias("revenue")),
+        "d_year", F.desc("revenue"), "c_nation", "s_nation",
     )
 
 
@@ -292,14 +291,13 @@ def _flight3_city(spark, sf_dir, c_pred, s_pred, extra=None):
         f = f.filter(extra)
     c = customer_dim(spark, sf_dir).filter(c_pred)
     s = supplier_dim(spark, sf_dir).filter(s_pred)
-    out = (
+    return sort_small(
         f.join(F.broadcast(c), f.o_custkey == c.c_custkey)
         .join(F.broadcast(s), f.l_suppkey == s.s_suppkey)
         .groupBy("c_city", "s_city", "d_year")
-        .agg(F.sum(revenue()).cast("double").alias("revenue"))
-        .orderBy("d_year", F.desc("revenue"), "c_city", "s_city")
+        .agg(F.sum(revenue()).cast("double").alias("revenue")),
+        "d_year", F.desc("revenue"), "c_city", "s_city",
     )
-    return out
 
 
 @query(
@@ -393,13 +391,13 @@ def ssb4_1(spark, sf_dir):
     c = customer_dim(spark, sf_dir).filter(F.col("c_region") == "AMERICA")
     s = supplier_dim(spark, sf_dir).filter(F.col("s_region") == "AMERICA")
     p = t(spark, sf_dir, "part").filter(F.col("p_type").isin("MEDIUM", "LARGE"))
-    return (
+    return sort_small(
         f.join(F.broadcast(c), f.o_custkey == c.c_custkey)
         .join(F.broadcast(s), f.l_suppkey == s.s_suppkey)
         .join(F.broadcast(p), f.l_partkey == p.p_partkey)
         .groupBy("d_year", "c_nation")
-        .agg(F.sum(profit()).cast("double").alias("profit"))
-        .orderBy("d_year", "c_nation")
+        .agg(F.sum(profit()).cast("double").alias("profit")),
+        "d_year", "c_nation",
     )
 
 
@@ -424,13 +422,13 @@ def ssb4_2(spark, sf_dir):
     c = customer_dim(spark, sf_dir).filter(F.col("c_region") == "AMERICA")
     s = supplier_dim(spark, sf_dir).filter(F.col("s_region") == "AMERICA")
     p = t(spark, sf_dir, "part").filter(F.col("p_type").isin("MEDIUM", "LARGE"))
-    return (
+    return sort_small(
         f.join(F.broadcast(c), f.o_custkey == c.c_custkey)
         .join(F.broadcast(s), f.l_suppkey == s.s_suppkey)
         .join(F.broadcast(p), f.l_partkey == p.p_partkey)
         .groupBy("d_year", "s_nation", "p_type")
-        .agg(F.sum(profit()).cast("double").alias("profit"))
-        .orderBy("d_year", "s_nation", "p_type")
+        .agg(F.sum(profit()).cast("double").alias("profit")),
+        "d_year", "s_nation", "p_type",
     )
 
 
@@ -454,13 +452,13 @@ def ssb4_3(spark, sf_dir):
     c = customer_dim(spark, sf_dir).filter(F.col("c_region") == "AMERICA")
     s = supplier_dim(spark, sf_dir).filter(F.col("s_nation") == "NATION_3")
     p = t(spark, sf_dir, "part").filter(F.col("p_type") == "MEDIUM")
-    return (
+    return sort_small(
         f.join(F.broadcast(c), f.o_custkey == c.c_custkey)
         .join(F.broadcast(s), f.l_suppkey == s.s_suppkey)
         .join(F.broadcast(p), f.l_partkey == p.p_partkey)
         .groupBy("d_year", "s_city", "p_brand")
-        .agg(F.sum(profit()).cast("double").alias("profit"))
-        .orderBy("d_year", "s_city", "p_brand")
+        .agg(F.sum(profit()).cast("double").alias("profit")),
+        "d_year", "s_city", "p_brand",
     )
 
 

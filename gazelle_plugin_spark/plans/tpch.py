@@ -32,6 +32,7 @@ from gazelle_plugin_spark.plans._util import (
     dsum,
     one_minus,
     one_plus,
+    sort_small,
     sql_davg,
     sql_dsum,
     t,
@@ -59,7 +60,7 @@ def q1(spark, sf_dir):
     """Pricing summary report (tpch/q1.sql; horizon moved into the
     synthetic date range). Scan -> filter -> hash agg -> sort."""
     l = t(spark, sf_dir, "lineitem")
-    return (
+    return sort_small(
         l.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -71,8 +72,8 @@ def q1(spark, sf_dir):
             davg("l_extendedprice").alias("avg_price"),
             davg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag", "l_linestatus",
     )
 
 
@@ -199,11 +200,11 @@ def q4(spark, sf_dir):
     cond = (lineitem.l_orderkey == orders.o_orderkey) & (
         lineitem.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     )
-    return (
+    return sort_small(
         orders.join(lineitem, cond, "left_semi")
         .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("order_count")),
+        "o_orderpriority",
     )
 
 
@@ -231,7 +232,7 @@ def q5(spark, sf_dir):
     supplier = t(spark, sf_dir, "supplier")
     nation = t(spark, sf_dir, "nation")
     region = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
+    return sort_small(
         customer.join(orders, customer.c_custkey == orders.o_custkey)
         .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .join(
@@ -242,8 +243,8 @@ def q5(spark, sf_dir):
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
-        .orderBy(F.desc("revenue"))
+        .agg(F.sum(disc_price()).cast("double").alias("revenue")),
+        F.desc("revenue"),
     )
 
 
@@ -307,7 +308,7 @@ def q7(spark, sf_dir):
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    return (
+    return sort_small(
         supplier.join(lineitem, supplier.s_suppkey == lineitem.l_suppkey)
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
@@ -321,8 +322,8 @@ def q7(spark, sf_dir):
             disc_price().alias("volume"),
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.sum("volume").cast("double").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .agg(F.sum("volume").cast("double").alias("revenue")),
+        "supp_nation", "cust_nation", "l_year",
     )
 
 
@@ -385,7 +386,7 @@ def q8(spark, sf_dir):
         )
     )
     zero = F.lit(0).cast("decimal(17,4)")
-    return (
+    return sort_small(
         all_nations.groupBy("o_year")
         .agg(
             (
@@ -394,8 +395,8 @@ def q8(spark, sf_dir):
                 )
                 / F.sum("volume").cast("double")
             ).alias("mkt_share")
-        )
-        .orderBy("o_year")
+        ),
+        "o_year",
     )
 
 
@@ -422,7 +423,7 @@ def q9(spark, sf_dir):
     lineitem = t(spark, sf_dir, "lineitem")
     orders = t(spark, sf_dir, "orders")
     nation = t(spark, sf_dir, "nation")
-    return (
+    return sort_small(
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .join(supplier, lineitem.l_suppkey == supplier.s_suppkey)
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
@@ -433,8 +434,8 @@ def q9(spark, sf_dir):
             disc_price().alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(F.sum("amount").cast("double").alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
+        .agg(F.sum("amount").cast("double").alias("sum_profit")),
+        "nation", F.desc("o_year"),
     )
 
 
@@ -545,14 +546,14 @@ def q12(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
+    return sort_small(
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .groupBy("l_returnflag")
         .agg(
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 
@@ -678,12 +679,12 @@ def q16(spark, sf_dir):
     )
     lineitem = t(spark, sf_dir, "lineitem")
     bad_sup = t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
+    return sort_small(
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .join(F.broadcast(bad_sup), lineitem.l_suppkey == bad_sup.s_suppkey, "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt")),
+        F.desc("supplier_cnt"), "p_brand", "p_type", "p_size",
     )
 
 
@@ -740,23 +741,24 @@ LIMIT 100
 )
 def q18(spark, sf_dir):
     """Large volume customer (tpch/q18.sql; threshold tuned to the
-    synthetic order fan-out). IN + GROUP BY/HAVING subquery -> semi
-    join."""
+    synthetic order fan-out). The IN + GROUP BY/HAVING subquery's
+    per-order ``sum(l_quantity)`` is the outer query's ``sum_qty``:
+    ``o_orderkey`` is orders' key, so each outer group is one order and
+    sums exactly that order's lineitems. The subquery's aggregate is
+    therefore inner-joined to orders and customer and kept, in place of
+    a semi join followed by a second lineitem scan, join and group-by."""
     customer = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders")
-    lineitem = t(spark, sf_dir, "lineitem")
     big = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select("l_orderkey")
+        t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("sum_qty"))
+        .filter(F.col("sum_qty") > 150)
     )
     return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey, "left_semi")
+        orders.join(big, orders.o_orderkey == big.l_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum("l_quantity").alias("sum_qty"))
+        .select("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice", "sum_qty")
         .orderBy(F.desc("o_totalprice"), "o_orderdate", "o_orderkey")
         .limit(100)
     )
@@ -940,7 +942,7 @@ def q22(spark, sf_dir):
         customer.filter((F.col("c_acctbal") > 0.00) & in_set)
         .agg(davg("c_acctbal").alias("avg_bal"))
     )
-    return (
+    return sort_small(
         customer.filter(in_set)
         .join(F.broadcast(avg_bal))
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
@@ -950,6 +952,6 @@ def q22(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("numcust"),
             F.sum(dec("c_acctbal")).cast("double").alias("totacctbal"),
-        )
-        .orderBy("cntrycode")
+        ),
+        "cntrycode",
     )

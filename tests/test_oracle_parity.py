@@ -4,6 +4,8 @@ scale). Queries without an oracle get a rows>=0 smoke run."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from gazelle_plugin_spark.plans import all_oracles, all_queries
@@ -38,9 +40,11 @@ def spark_results(spark, request):
     from concurrent.futures import ThreadPoolExecutor
 
     names = sorted(
-        item.callspec.params["name"]
-        for item in request.session.items
-        if getattr(item, "function", None) is test_query_matches_oracle
+        {
+            item.callspec.params["name"]
+            for item in request.session.items
+            if getattr(item, "function", None) in (test_query_matches_oracle, test_sort_small_order)
+        }
     )
     pooled = [n for n in names if not n.startswith(_SERIAL_PREFIXES)]
     serial = [n for n in names if n.startswith(_SERIAL_PREFIXES)]
@@ -76,3 +80,39 @@ def test_query_not_vacuous(name, duck):
     (round-1 q22 lesson) — every oracled query must be non-empty at
     the comparison scale."""
     assert len(duck.sql(ORACLES[name]).fetchall()) >= 1, f"{name} is vacuous at sf0.01"
+
+
+#: Builders whose final sort is plans/_util.sort_small (a bounded
+#: result merged into one task).
+SORT_SMALL = (
+    "q1", "q4", "q5", "q7", "q8", "q9", "q12", "q16", "q22", "orc_ssb2_1",
+    *(f"ssb{f}_{q}" for f, n in ((2, 3), (3, 4), (4, 3)) for q in range(1, n + 1)),
+)
+
+#: q1's oracle has no ORDER BY; TPC-H orders q1 by its group keys.
+_ORDER_BY = {"q1": "l_returnflag, l_linestatus"}
+
+
+def _order_keys(name: str) -> list[tuple[str, bool]]:
+    """(column, descending) per term of ``name``'s ORDER BY: its
+    oracle's last line, or ``_ORDER_BY``'s entry."""
+    order_by = _ORDER_BY.get(name) or re.search(r"ORDER BY (.+)\s*$", ORACLES[name]).group(1)
+    terms = [term.split() for term in order_by.split(",")]
+    return [(term[0], term[-1].upper() == "DESC") for term in terms]
+
+
+@pytest.mark.parametrize("name", sorted(SORT_SMALL))
+def test_sort_small_order(name, spark_results, duck):
+    """The hash gate compares values order-insensitively, so a lost
+    ORDER BY passes it: each sort_small builder's collected rows must
+    follow its ORDER BY, key column by key column, row by row, against
+    DuckDB ordered with Spark's NULL placement (first when ascending)."""
+    res = spark_results[name]
+    if isinstance(res, Exception):
+        raise res
+    keys = _order_keys(name)
+    order = ", ".join(f"{c} {'DESC NULLS LAST' if d else 'ASC NULLS FIRST'}" for c, d in keys)
+    want = duck.sql(f"SELECT * FROM ({ORACLES[name]}) o ORDER BY {order}").df()
+    cols = [c for c, _ in keys]
+    assert len(res) > 1, name
+    assert res[cols].values.tolist() == want[cols].values.tolist(), name

@@ -189,3 +189,19 @@ def test_rollup_rank_plans_window_group_limit(spark):
         .toString()
     )
     assert "WindowGroupLimit" in plan, plan
+
+
+def test_sort_small_orders_like_order_by(spark):
+    """sort_small over a multi-partition input with tied keys and NULLs
+    yields orderBy's key order (NULLs first ascending, last descending)
+    from one partition, without orderBy's range exchange."""
+    from gazelle_plugin_spark.plans._util import sort_small
+
+    rows = [(k % 3 if k % 5 else None, f"s{k % 4}" if k % 7 else None, k) for k in range(200)]
+    df = spark.createDataFrame(rows, "a int, b string, v int").repartition(4, "v")
+    keys = ("a", F.desc("b"))
+    got = sort_small(df, *keys)
+    assert got.rdd.getNumPartitions() == 1
+    assert [r[:2] for r in got.collect()] == [r[:2] for r in df.orderBy(*keys).collect()]
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan, plan

@@ -201,6 +201,27 @@ def test_bench_one_side_modes_ask_only_their_worker(tmp_path, monkeypatch, capsy
         assert "ratios_worst_first" not in line and "ratios" not in detail
 
 
+def test_bench_first_execution_is_always_warm_up(monkeypatch):
+    """A first execution of 2 s or more is still a warm-up: it is
+    reported as ``w`` and kept out of the median (doc_minhash_neardup's
+    sf0.1 reps were 6.40/3.54/3.01 s, and the median was the second)."""
+    import bench
+
+    clock = [0.0]
+    durations = iter([6.40, 3.54, 3.01, 3.20])
+
+    class FakeQuery:
+        def collect(self):
+            clock[0] += next(durations)
+            return [(1,), (2,)]
+
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
+    out = bench._time_one(object(), lambda spark, sf_dir: FakeQuery(), SF_MED, reps=3)
+    assert out["w"] == 6.40
+    assert out["t"] == [3.54, 3.01, 3.20]
+    assert (out["sec"], out["rows"]) == (3.20, 2)
+
+
 def test_sf1_report_reads_bench_side_files(tmp_path, monkeypatch, capsys):
     """``bench.py --report`` renders bench.py side files of two scale
     points: it orders them by their ``docs`` and reads their

@@ -64,6 +64,25 @@ def test_warm_session_repeats_no_per_session_work(spark):
     catalog.assert_testdata_schema(poisoned, SF_SMALL)
 
 
+def _final_plan(df) -> str:
+    """``df``'s executed plan after a collect; under AQE, the final plan."""
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_star_builders_skip_range_sort_and_second_scan(spark):
+    """Bounded results sort in one task (plans/_util.sort_small), so
+    their executed plans hold no range exchange (no sampling job, no
+    range shuffle); q18 keeps its IN-subquery's per-order sum, so it
+    scans lineitem once."""
+    queries = all_queries()
+    for name in ("q7", "ssb4_1", "q18"):
+        df = queries[name](spark, SF_MED)
+        df.collect()
+        plan = _final_plan(df)
+        assert "rangepartitioning" not in plan, (name, plan)
+    assert plan.count("lineitem.parquet]") == 1, plan
+
+
 def test_bucketed_mirror_registers_without_jobs(spark):
     """The bucketed mirror is written once per checkout: a session that
     finds its files on disk registers the tables and starts no job."""
