@@ -13,8 +13,7 @@ Design stance (SURVEY.md §7):
 - Of the reference's operator inventory (SURVEY.md §2), what the
   DataFrame API lacks lives in ``operators/``, ``functions/`` and
   ``sources/``; beyond-parity LLM-data-pipeline queries live in
-  ``plans/`` (text_pipeline, similarity_queries, multimodal) and
-  streaming in ``streaming/``.
+  ``plans/`` (text_pipeline, similarity_queries, multimodal).
 """
 
 from gazelle_plugin_spark.session import get_spark, session_confs

@@ -97,30 +97,3 @@ def register_builtin_udfs(spark: SparkSession) -> dict[str, tuple[object, str]]:
         "split_ngrams": (split_ngrams, "UDTF: explode text into positioned word n-grams"),
         **pandas_udfs,
     }
-
-
-def grouped_zscore(df, group_cols: list[str], value_col: str):
-    """Grouped-map applyInPandas example: per-group z-score — the
-    grouped-transform shape of the custom-operator ladder (pandas gets
-    ONE group per call, Arrow-batched). NOTE: expressible with window
-    functions too (see tests for the equivalence gate); real uses are
-    transforms that need full-group pandas/numpy logic (per-group
-    model fits, resampling, rank-based normalization).
-
-    Scale: one shuffle on the group key; each group must fit in one
-    worker's memory — for billion-row groups use the window form."""
-    import pandas as pd  # noqa: F811
-
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    schema = f"{out_fields}, zscore double"
-
-    def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
-        sd = pdf[value_col].std(ddof=1)
-        mu = pdf[value_col].mean()
-        pdf = pdf.copy()
-        pdf["zscore"] = (pdf[value_col] - mu) / sd if sd and sd > 0 else 0.0
-        return pdf
-
-    return df.groupBy(*group_cols).applyInPandas(zscore, schema)

@@ -83,9 +83,7 @@ ORDER BY user_id, session_id
 )
 def events_sessionize(spark, sf_dir):
     """Gap-based sessionization: a new session starts after a >30 min
-    silence. lag + running-sum window -> per-session aggregate; the
-    stateful-streaming analog is ``streaming.sessionize`` (same
-    semantics over readStream)."""
+    silence. lag + running-sum window -> per-session aggregate."""
     e = events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     run = Window.partitionBy("user_id").orderBy("ts_us").rowsBetween(

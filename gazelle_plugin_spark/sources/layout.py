@@ -168,38 +168,3 @@ def compact(
     os.rename(tmp, path)
     shutil.rmtree(old)
     return n
-
-
-def rowgroup_overlap_fraction(
-    path: str, column: str, lo, hi
-) -> float:
-    """Fraction of the layout's parquet row groups whose [min, max]
-    stats overlap [lo, hi] — the scan cost a stats-pruning reader pays
-    for that predicate. Driver-side footer inspection (pyarrow), used
-    as the skipping measurement in tests."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    overlapping = 0
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        meta = pq.ParquetFile(os.path.join(path, name)).metadata
-        for rg in range(meta.num_row_groups):
-            group = meta.row_group(rg)
-            stats = None
-            for ci in range(group.num_columns):
-                col = group.column(ci)
-                if col.path_in_schema == column:
-                    stats = col.statistics
-                    break
-            total += 1
-            if stats is None or not stats.has_min_max:
-                overlapping += 1  # no stats = must read
-            elif not (stats.max < lo or stats.min > hi):
-                overlapping += 1
-    if total == 0:
-        raise ValueError(f"no parquet row groups under {path}")
-    return overlapping / total

@@ -71,35 +71,6 @@ def test_udtf_split_ngrams(spark):
     }
 
 
-def test_grouped_zscore_matches_window_expression(spark):
-    """applyInPandas grouped transform == the pure-expression window
-    form (stddev_samp/avg over the group partition)."""
-    from pyspark.sql import Window
-
-    from gazelle_plugin_spark.functions.registry import grouped_zscore
-    from gazelle_plugin_spark.plans._util import t
-    from tests.conftest import SF_SMALL
-
-    df = t(spark, SF_SMALL, "lineitem").select("l_returnflag", "l_orderkey", "l_quantity")
-    got = {
-        (r.l_returnflag, r.l_orderkey, round(r.zscore, 9))
-        for r in grouped_zscore(df, ["l_returnflag"], "l_quantity").collect()
-    }
-    w = Window.partitionBy("l_returnflag")
-    expr_form = df.select(
-        "l_returnflag",
-        "l_orderkey",
-        (
-            (F.col("l_quantity") - F.avg("l_quantity").over(w))
-            / F.stddev_samp("l_quantity").over(w)
-        ).alias("z"),
-    )
-    expected = {
-        (r.l_returnflag, r.l_orderkey, round(r.z, 9)) for r in expr_form.collect()
-    }
-    assert got == expected
-
-
 def test_hash_native_values_vs_python(spark):
     """expr_hash_native has no DuckDB oracle (rows-only driver gate) —
     re-derive ALL FOUR native hashes in pure Python as the value

@@ -5,6 +5,10 @@ mirror."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +24,47 @@ def _morton_py(a: int, b: int, bits: int) -> int:
         z |= ((a >> i) & 1) << (2 * i)
         z |= ((b >> i) & 1) << (2 * i + 1)
     return z
+
+
+def _rowgroup_overlap_fraction(path: str, column: str, lo, hi) -> float:
+    """Fraction of the layout's parquet row groups whose [min, max]
+    stats overlap [lo, hi] — the scan cost a stats-pruning reader pays
+    for that predicate, read from the footers with pyarrow."""
+    total = 0
+    overlapping = 0
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet"):
+            continue
+        meta = pq.ParquetFile(os.path.join(path, name)).metadata
+        for rg in range(meta.num_row_groups):
+            group = meta.row_group(rg)
+            stats = None
+            for ci in range(group.num_columns):
+                col = group.column(ci)
+                if col.path_in_schema == column:
+                    stats = col.statistics
+                    break
+            total += 1
+            if stats is None or not stats.has_min_max:
+                overlapping += 1  # no stats = must read
+            elif not (stats.max < lo or stats.min > hi):
+                overlapping += 1
+    if total == 0:
+        raise ValueError(f"no parquet row groups under {path}")
+    return overlapping / total
+
+
+def test_overlap_fraction_reads_statless_groups_and_refuses_empty_dir(tmp_path):
+    table = pa.table({"k": list(range(100))})
+    pq.write_table(table, tmp_path / "stats.parquet", row_group_size=10)
+    assert _rowgroup_overlap_fraction(str(tmp_path), "k", 15, 25) == 0.2
+    pq.write_table(table, tmp_path / "nostats.parquet", row_group_size=10, write_statistics=False)
+    # the ten stat-less groups count as read whatever the predicate
+    assert _rowgroup_overlap_fraction(str(tmp_path), "k", 1000, 2000) == 0.5
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(ValueError, match="no parquet row groups"):
+        _rowgroup_overlap_fraction(str(empty), "k", 0, 1)
 
 
 def test_z_value_matches_python_reference(spark):
@@ -63,10 +108,10 @@ def layouts(spark, tmp_path_factory):
 def test_zorder_prunes_both_box_columns(layouts):
     linear, zordered = layouts
     # narrow box: ~5% of the l_partkey domain, ~11% of l_suppkey's
-    part_frac_linear = layout.rowgroup_overlap_fraction(linear, "l_partkey", 100, 200)
-    part_frac_z = layout.rowgroup_overlap_fraction(zordered, "l_partkey", 100, 200)
-    supp_frac_linear = layout.rowgroup_overlap_fraction(linear, "l_suppkey", 10, 20)
-    supp_frac_z = layout.rowgroup_overlap_fraction(zordered, "l_suppkey", 10, 20)
+    part_frac_linear = _rowgroup_overlap_fraction(linear, "l_partkey", 100, 200)
+    part_frac_z = _rowgroup_overlap_fraction(zordered, "l_partkey", 100, 200)
+    supp_frac_linear = _rowgroup_overlap_fraction(linear, "l_suppkey", 10, 20)
+    supp_frac_z = _rowgroup_overlap_fraction(zordered, "l_suppkey", 10, 20)
     # the linear layout prunes its sort column but reads everything on
     # the second column; the z-order prunes BOTH
     assert part_frac_linear < 0.35
@@ -88,8 +133,6 @@ def test_compact_small_files(spark, tmp_path):
     """64 tiny files -> a handful of ~target-size files with the same
     rows, no stray staging dirs left behind; in CSV each file's header
     line stays a header, never a data row."""
-    import os
-
     from gazelle_plugin_spark.sources import io
 
     li = t(spark, SF_MED, "lineitem").select("l_orderkey", "l_quantity")
@@ -125,8 +168,6 @@ def test_compact_recovers_stranded_swap(spark, tmp_path):
     path restores the snapshot before compacting. (The swap contract
     is local-FS/HDFS only — object stores need a manifest commit; see
     the compact() docstring and SCALE.md.)"""
-    import os
-
     path = str(tmp_path / "frag")
     li = t(spark, SF_MED, "lineitem").select("l_orderkey", "l_quantity").limit(1000)
     li.repartition(8).write.parquet(path)

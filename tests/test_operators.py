@@ -6,8 +6,8 @@ Patterned after the reference's forked Spark suites (SURVEY.md §5
 layer 1): small literal DataFrames, exact expected answers, edge
 cases the reference calls out (null-aware anti join three-case
 semantics, ColumnarOverrides.scala:260; EXCEPT distinctness;
-two-phase skewed aggregation; WindowGroupLimit rank-limit pushdown,
-OptimizerOverrides.scala:39-218 analog).
+WindowGroupLimit rank-limit pushdown, OptimizerOverrides.scala:39-218
+analog).
 """
 
 from __future__ import annotations
@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from gazelle_plugin_spark.operators import aggregates, joins
+from gazelle_plugin_spark.operators import joins
 
 
 def rows(df):
@@ -99,31 +99,6 @@ def test_union_intersect(spark):
 
 
 # ------------------------------------------------------------ aggregates
-
-def test_skew_safe_aggregate_matches_direct(spark):
-    # skewed: one key owns 90% of rows
-    data = [("hot", float(i % 7)) for i in range(900)] + [
-        (f"k{i % 10}", float(i)) for i in range(100)
-    ]
-    df = spark.createDataFrame(data, "k string, x double")
-    got = aggregates.skew_safe_aggregate(
-        df,
-        ["k"],
-        partial_aggs=[F.sum("x").alias("px"), F.count("x").alias("pc")],
-        final_aggs=[
-            F.sum("px").alias("sum_x"),
-            F.sum("pc").alias("cnt_x"),
-            (F.sum("px") / F.sum("pc")).alias("avg_x"),
-        ],
-        salt_buckets=8,
-    )
-    expected = df.groupBy("k").agg(
-        F.sum("x").alias("sum_x"),
-        F.count("x").alias("cnt_x"),
-        F.avg("x").alias("avg_x"),
-    )
-    assert rows(got) == rows(expected)
-
 
 def test_rollup_cube_grouping_sets(spark):
     df = spark.createDataFrame(

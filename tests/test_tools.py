@@ -1,9 +1,11 @@
-"""Pins for bench.py's measurement and report paths."""
+"""Pins for bench.py's measurement and report paths, and for the
+package's reachability from its entry points."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 import pyarrow.parquet as pq
@@ -290,3 +292,85 @@ def test_profile_new_stages_reads_each_stage_once(spark):
     stages = profile.new_stages(spark, seen)
     assert sum(s.get("shuffleWriteBytes", 0) for s in stages) > 0
     assert profile.new_stages(spark, seen) == []
+
+
+#: Package modules no entry point imports, each with its reason.
+_UNREACHED_ALLOWED = {
+    "gazelle_plugin_spark.plans.sqlgolden": "test harness: replays the sql-tests goldens",
+    "gazelle_plugin_spark.plans.stability": "test harness: regenerates tests/plan_goldens.json",
+}
+
+
+def _py_files(*rel_globs):
+    import glob
+
+    return sorted(
+        p for g in rel_globs for p in glob.glob(os.path.join(_ROOT, g), recursive=True)
+    )
+
+
+def _module_name(path):
+    rel = os.path.relpath(path, _ROOT)[: -len(".py")].split(os.sep)
+    return ".".join(rel[:-1] if rel[-1] == "__init__" else rel)
+
+
+def test_every_package_module_and_public_def_is_reached():
+    """Regrowth tripwire, ast only: follow imports (function-local ones
+    too) from bench.py, __spark_entry__.py, perfbench/*.py and tools/*.py
+    through the package. Every package module must be reached, and every
+    public top-level def or class of a reached module must be named
+    somewhere outside tests/ besides its own definition: as an
+    identifier, an attribute, an import, or a word in a string (the
+    registry names builders by string)."""
+    import ast
+
+    package = {_module_name(p): p for p in _py_files("gazelle_plugin_spark/**/*.py")}
+    entries = _py_files("bench.py", "__spark_entry__.py", "perfbench/*.py", "tools/*.py")
+    trees = {p: ast.parse(open(p).read(), p) for p in [*package.values(), *entries]}
+
+    def imported(path):
+        for node in ast.walk(trees[path]):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                assert not node.level, f"{path}: relative import; the walk reads absolute ones"
+                yield node.module
+                yield from (f"{node.module}.{a.name}" for a in node.names)
+
+    reached: set[str] = set()
+    todo = list(entries)
+    while todo:
+        for name in imported(todo.pop()):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                mod = ".".join(parts[:i])
+                if mod in package and mod not in reached:
+                    reached.add(mod)
+                    todo.append(package[mod])
+
+    named: set[str] = set()
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.alias):
+                named.update(node.name.split("."))
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                named.update(re.findall(r"\w+", node.value))
+    unnamed = [
+        f"{mod}.{node.name}"
+        for mod in sorted(reached)
+        for node in trees[package[mod]].body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+        and node.name not in named
+    ]
+    unreached = sorted(set(package) - reached - set(_UNREACHED_ALLOWED))
+    stale = sorted(set(_UNREACHED_ALLOWED) - (set(package) - reached))
+    assert not unreached + unnamed + stale, (
+        f"package modules no entry point imports: {unreached}; "
+        f"public defs named only in tests: {unnamed}; "
+        f"allowlisted modules that are reached or gone: {stale}"
+    )
