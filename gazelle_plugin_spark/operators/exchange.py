@@ -22,17 +22,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def choose_join_strategy(
-    dim_bytes: int,
-    fact_bytes: int,
-    hot_key_share: float,
-    *,
-    broadcast_threshold: int = 10 * 2**20,
-    aqe_skew_threshold: int = 256 * 2**20,
-    aqe_skew_factor: float = 5.0,
-    shuffle_partitions: int = 32,
-    salt_floor_bytes: int = 30 * 2**20,
-) -> str:
+#: The thresholds choose_join_strategy decides by: Spark's own
+#: broadcast fence, AQE's skewedPartitionThresholdInBytes and
+#: skewedPartitionFactor defaults, the session profile's shuffle
+#: width, and the hot-partition floor under which skew cannot dominate
+#: a stage's critical path.
+BROADCAST_THRESHOLD = 10 * 2**20
+AQE_SKEW_THRESHOLD = 256 * 2**20
+AQE_SKEW_FACTOR = 5.0
+SHUFFLE_PARTITIONS = 32
+SALT_FLOOR_BYTES = 30 * 2**20
+
+
+def choose_join_strategy(dim_bytes: int, fact_bytes: int, hot_key_share: float) -> str:
     """The measured skew operating rule (SCALE.md round-13, measured
     on measurements/skew_r13.jsonl's result-hash-identical 3-variant
     hot-key study), as code instead of prose. Returns one of
@@ -56,13 +58,10 @@ def choose_join_strategy(
        salting would just add dim-replication shuffle on top. A large
        hot partition among uniformly large partitions fails the 5x
        factor and falls through (round-14 ADVICE: size alone never
-       triggers the split). Caveat the caller owns: AQE skew split
-       applies to sort-merge/shuffled-hash joins only — for a shape
-       AQE cannot split (e.g. a BNLJ), pass ``aqe_skew_threshold``
-       high enough to disable this branch.
+       triggers the split).
     3. **salted** in the measured in-between band: the hot partition
        is big enough to dominate the stage's critical path (above
-       ``salt_floor_bytes`` and materially above the even-spread
+       ``SALT_FLOOR_BYTES`` and materially above the even-spread
        share) but UNDER the AQE threshold, where the study showed
        OptimizeSkewedJoin never fires (90 MB hot partition: max/p50
        task spread 10.5x plain vs 1.28x salted at 9.4x shuffle cost —
@@ -77,16 +76,16 @@ def choose_join_strategy(
     """
     if not 0.0 <= hot_key_share <= 1.0:
         raise ValueError(f"hot_key_share must be in [0, 1], got {hot_key_share}")
-    if dim_bytes <= broadcast_threshold:
+    if dim_bytes <= BROADCAST_THRESHOLD:
         return "broadcast"
     hot_partition = fact_bytes * hot_key_share
-    even_share = 1.0 / max(shuffle_partitions, 1)
+    even_share = 1.0 / SHUFFLE_PARTITIONS
     if (
-        hot_partition >= aqe_skew_threshold
-        and hot_key_share >= aqe_skew_factor * even_share
+        hot_partition >= AQE_SKEW_THRESHOLD
+        and hot_key_share >= AQE_SKEW_FACTOR * even_share
     ):
         return "plain"
-    if hot_partition >= salt_floor_bytes and hot_key_share >= 4 * even_share:
+    if hot_partition >= SALT_FLOOR_BYTES and hot_key_share >= 4 * even_share:
         return "salted"
     return "plain"
 
@@ -102,7 +101,6 @@ def skew_aware_join(
     hot_key_share: float,
     salt: int = 16,
     how: str = "inner",
-    **rule_kwargs,
 ) -> DataFrame:
     """The live caller of :func:`choose_join_strategy` (round-14
     verdict task 5): an equi-join of a skewed ``left`` (fact) against
@@ -113,8 +111,7 @@ def skew_aware_join(
 
     ``dim_bytes`` / ``fact_bytes`` / ``hot_key_share`` are the caller's
     size estimates (catalog stats, a prior, or a cheap top-1 key
-    count); ``rule_kwargs`` pass through to choose_join_strategy.
-    Dispatch:
+    count). Dispatch:
 
     - ``"broadcast"`` → plain join with an explicit ``F.broadcast``
       hint on the dim (threshold-independent — the r13 lesson).
@@ -127,9 +124,7 @@ def skew_aware_join(
     """
     from pyspark.sql import functions as F
 
-    strategy = choose_join_strategy(
-        dim_bytes, fact_bytes, hot_key_share, **rule_kwargs
-    )
+    strategy = choose_join_strategy(dim_bytes, fact_bytes, hot_key_share)
     if strategy == "salted":
         return salted_join(left, right, left_key, right_key, salt=salt, how=how)
     if how not in ("inner", "left_outer"):

@@ -4,16 +4,16 @@ Media assets are opaque ``binary`` columns plus a typed metadata
 struct; feature extraction runs as Arrow-batched ``mapInPandas``
 pipelines (the ColumnarArrowEvalPythonExec analog — batches cross to
 Python once, vectorized inside). PIXEL decode (:func:`decode_pixels`)
-handles the two formats the registered queries plant, with no codec
-library: PNG (stdlib zlib + numpy unfilter; every color type, palette,
-8/16-bit, Adam7) and Huffman-coded JPEG — baseline, extended
-sequential, AND progressive (SOF0/1/2 incl. spectral selection,
-successive approximation, restart intervals, chroma subsampling). Any
-other format, and the non-Huffman-DCT JPEG variants (lossless/
-hierarchical/arithmetic, SOF3/5-7/9-15), raise a named
-NotImplementedError. The fixture encoders (:func:`encode_png_gray16`,
-:func:`encode_jpeg_gray`) build the planted blobs of
-plans/multimodal.py's pixel-stats queries. Tested in
+handles what the registered pixel-stats queries plant, with no codec
+library: grayscale PNG (stdlib zlib + numpy unfilter; 8/16-bit, all
+five filters, Adam7 or not) and one-component Huffman JPEG (baseline
+SOF0, and progressive SOF2 spectral-selection scans). Every other
+variant — color or palette PNG, multi-component JPEG, restart
+intervals, successive approximation, EOBn runs, SOF1 and the other
+SOFs, 16-bit quantization tables — and every other format raise a
+NotImplementedError naming it. The fixture encoders
+(:func:`encode_png_gray16`, :func:`encode_jpeg_gray`) build the planted
+blobs of plans/multimodal.py's pixel-stats queries. Tested in
 tests/test_multimodal.py.
 
 Scale notes (100 TB of media): blobs should live in the lake as
@@ -49,11 +49,11 @@ BYTE_FEATURES_SCHEMA = StructType(
 )
 
 
-def attach_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Simulate an ingested media column: utf-8 bytes of ``text_col``
-    as the opaque blob + a typed metadata struct (every real media
-    table carries one)."""
-    blob = F.encode(F.col(text_col), "UTF-8")
+def attach_blob(df: DataFrame) -> DataFrame:
+    """Simulate an ingested media column: utf-8 bytes of ``text`` as
+    the opaque blob + a typed metadata struct (every real media table
+    carries one)."""
+    blob = F.encode(F.col("text"), "UTF-8")
     meta = F.struct(
         F.lit("application/octet-stream").alias("mime"),
         F.length(blob).alias("n_bytes"),
@@ -72,7 +72,7 @@ BYTE_FEATURE_CHUNK = 64 << 20
 
 
 def extract_byte_features(
-    df: DataFrame, id_col: str = "doc_id", chunk_bytes: int = BYTE_FEATURE_CHUNK
+    df: DataFrame, chunk_bytes: int = BYTE_FEATURE_CHUNK
 ) -> DataFrame:
     """Arrow-batched feature extraction over the blob column: byte
     statistics computed vectorized in numpy — blobs concatenate into
@@ -86,11 +86,11 @@ def extract_byte_features(
     crossing, and the body keeps the vectorization it paid for (the
     ColumnarArrowEvalPythonExec analog). Swap the body for an
     image/audio featurizer when codecs are available."""
-    featurize = _byte_featurizer(id_col, chunk_bytes)
-    return df.select(id_col, "blob").mapInPandas(featurize, BYTE_FEATURES_SCHEMA)
+    featurize = _byte_featurizer(chunk_bytes)
+    return df.select("doc_id", "blob").mapInPandas(featurize, BYTE_FEATURES_SCHEMA)
 
 
-def _byte_featurizer(id_col: str, chunk_bytes: int):
+def _byte_featurizer(chunk_bytes: int):
     """The mapInPandas kernel of :func:`extract_byte_features`. An empty batch
     yields a frame typed from BYTE_FEATURES_SCHEMA, not all-float64 columns."""
     import numpy as np
@@ -132,7 +132,7 @@ def _byte_featurizer(id_col: str, chunk_bytes: int):
                 lo = hi
             yield pd.DataFrame(
                 {
-                    names[0]: pdf[id_col].to_numpy(),
+                    names[0]: pdf["doc_id"].to_numpy(),
                     names[1]: lengths,
                     names[2]: mean,
                     names[3]: distinct,
@@ -155,9 +155,7 @@ PIXEL_STATS_SCHEMA = StructType(
 )
 
 
-def extract_pixel_stats(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
+def extract_pixel_stats(df: DataFrame) -> DataFrame:
     """Arrow-batched PIXEL-grain featurizer: run :func:`decode_pixels`
     on each blob inside mapInPandas and reduce the raster to exact
     integer stats (count / sum / min / max over all samples). The
@@ -173,7 +171,7 @@ def extract_pixel_stats(
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {k: [] for k in names}
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
+            for i, b in zip(pdf["doc_id"], pdf["blob"]):
                 px = decode_pixels(bytes(b)).astype(np.int64).reshape(-1)
                 out["doc_id"].append(int(i))
                 out["n_px"].append(int(px.size))
@@ -184,20 +182,20 @@ def extract_pixel_stats(
                 out["px_max"].append(int(px.max()) if px.size else None)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, blob_col).mapInPandas(stats, PIXEL_STATS_SCHEMA)
+    return df.select("doc_id", "blob").mapInPandas(stats, PIXEL_STATS_SCHEMA)
 
 
-def encode_png_gray16(raster, interlace: int = 1, filters=(0, 1, 2, 3, 4)) -> bytes:
-    """Planted-fixture PNG encoder: 16-bit GRAYSCALE, optionally
-    Adam7-interlaced, one filter type per scanline cycling ``filters``
-    — the forward transform of RFC 2083 §6 over big-endian 2-byte
-    samples (bpp=2, left neighbor two bytes back). Exists so a
+def encode_png_gray16(raster) -> bytes:
+    """Planted-fixture PNG encoder: 16-bit GRAYSCALE, Adam7-interlaced,
+    filter type ``y % 5`` (None, Sub, Up, Average, Paeth) on scanline y
+    of each pass — the forward transform of RFC 2083 §6 over big-endian
+    2-byte samples (bpp=2, left neighbor two bytes back). Exists so a
     DRIVER-visible query (plans/multimodal.py mm_png_pixel_stats) can
     exercise the decoder's hardest path — 16-bit depth x all five
     filters x Adam7 reassembly — on deterministic rasters whose pixel
     values an external oracle re-derives arithmetically; the general
-    multi-color-type twin used by the pytest suite lives in
-    tests/test_multimodal.py."""
+    twin (any color type, depth, filter list, interlace or not) used by
+    the pytest suite lives in tests/test_multimodal.py."""
     import struct
     import zlib
 
@@ -217,7 +215,7 @@ def encode_png_gray16(raster, interlace: int = 1, filters=(0, 1, 2, 3, 4)) -> by
         out = bytearray()
         prev = [0] * stride
         for y in range(sub.shape[0]):
-            f = filters[y % len(filters)]
+            f = y % 5
             row = list(sub[y].astype(">u2").tobytes())
             out.append(f)
             for i in range(stride):
@@ -230,11 +228,11 @@ def encode_png_gray16(raster, interlace: int = 1, filters=(0, 1, 2, 3, 4)) -> by
         return out
 
     body = bytearray()
-    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+    for x0, y0, dx, dy in _ADAM7:
         sub = arr[y0::dy, x0::dx]
-        if sub.size or not interlace:  # an empty Adam7 pass has no scanlines
+        if sub.size:  # an empty Adam7 pass has no scanlines
             body += encode_sub(sub)
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 1 if interlace else 0)
+    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 1)
     return (
         b"\x89PNG\r\n\x1a\n"
         + chunk(b"IHDR", ihdr)
@@ -412,19 +410,19 @@ def _png_unfilter(raw: bytes, off: int, w: int, h: int, bpp: int):
 
 
 def _png_pixels(b: bytes):
-    """Codec-free PNG pixel decode: stdlib zlib inflate + numpy
-    per-scanline unfilter (the five PNG filter types are simple byte
-    recurrences — RFC 2083 §6). Supports 8- and 16-bit gray /
-    gray+alpha / RGB / RGBA, 8-bit palette, both non-interlaced and
-    Adam7-interlaced (each interlace pass is its own independently
-    filtered sub-image — RFC 2083 §2.6). Sub-byte depths (1/2/4-bit)
-    raise NotImplementedError (fail-loud contract)."""
+    """Codec-free grayscale PNG pixel decode: stdlib zlib inflate +
+    numpy per-scanline unfilter (the five PNG filter types are simple
+    byte recurrences — RFC 2083 §6). Supports 8- and 16-bit grayscale,
+    both non-interlaced and Adam7-interlaced (each interlace pass is its
+    own independently filtered sub-image — RFC 2083 §2.6). Color and
+    palette images and sub-byte depths (1/2/4-bit) raise
+    NotImplementedError (fail-loud contract)."""
     import struct
     import zlib
 
     import numpy as np
 
-    pos, ihdr, idat, plte = 8, None, [], None
+    pos, ihdr, idat = 8, None, []
     while pos + 8 <= len(b):
         ln, typ = struct.unpack_from(">I4s", b, pos)
         data = b[pos + 8 : pos + 8 + ln]
@@ -433,8 +431,6 @@ def _png_pixels(b: bytes):
             ihdr = struct.unpack(">IIBBBBB", data)
         elif typ == b"IDAT":
             idat.append(data)
-        elif typ == b"PLTE":
-            plte = data
         elif typ == b"IEND":
             break
     if ihdr is None or not idat:
@@ -442,12 +438,15 @@ def _png_pixels(b: bytes):
     w, h, depth, ctype, _comp, _filt, interlace = ihdr
     if depth not in (8, 16):
         raise NotImplementedError(f"PNG bit depth {depth} is not supported")
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
-    if nch is None:
+    color = {2: "RGB", 3: "palette", 4: "gray+alpha", 6: "RGBA"}.get(ctype)
+    if color:
+        raise NotImplementedError(
+            f"decode_pixels: {color} PNG (color type {ctype}) is not "
+            "supported; only grayscale PNG decodes"
+        )
+    if ctype:
         raise ValueError(f"malformed PNG: color type {ctype}")
-    if ctype == 3 and depth != 8:
-        raise ValueError(f"malformed PNG: palette with depth {depth}")
-    bpp = nch * (depth // 8)
+    bpp = depth // 8
     if interlace not in (0, 1):
         raise ValueError(f"malformed PNG: interlace method {interlace}")
     raw = zlib.decompress(b"".join(idat))
@@ -466,15 +465,9 @@ def _png_pixels(b: bytes):
         out[np.ix_(np.arange(y0, h, dy), cols)] = sub
     if off != len(raw):
         raise ValueError("malformed PNG: IDAT size mismatch")
-    if ctype == 3:  # palette indices -> RGB
-        if plte is None:
-            raise ValueError("malformed PNG: palette image without PLTE")
-        pal = np.frombuffer(plte, np.uint8)
-        pal = pal[: (len(pal) // 3) * 3].reshape(-1, 3)
-        return pal[out.reshape(h, w)]
     if depth == 16:  # big-endian sample pairs -> native uint16
-        out = np.frombuffer(out.tobytes(), np.dtype(">u2")).astype(np.uint16)
-    return out.reshape((h, w, nch) if nch > 1 else (h, w))
+        return out.view(">u2").astype(np.uint16)
+    return out
 
 
 #: JPEG zigzag scan order: stream position k -> natural block index.
@@ -519,22 +512,20 @@ def _jpeg_huff_table(counts: bytes, symbols: bytes) -> dict:
 
 
 def _jpeg_pixels(b: bytes):
-    """Codec-free JPEG pixel decode (ITU T.81 DCT-based, Huffman
-    entropy coding): the marker walk collects DQT/DHT/SOF/DRI, every
-    SOS scan is un-stuffed (0xFF00), split at RSTn restarts, and
-    entropy-decoded by a pure-Python canonical-Huffman bit reader into
-    per-component COEFFICIENT stores (so sequential single-scan,
-    sequential multi-scan, and progressive multi-scan frames all share
-    one path), then numpy does dequantization, de-zigzag, a
-    block-vectorized separable 8x8 IDCT, pixel-replication chroma
-    upsampling, and JFIF YCbCr->RGB.
+    """Codec-free decode of a one-component (grayscale) Huffman JPEG
+    (ITU T.81, DCT-based): the marker walk collects DQT/DHT/SOF, every
+    SOS scan is entropy-decoded by :func:`_jpeg_decode_scan` into one
+    COEFFICIENT store (so a baseline frame's single scan and a
+    progressive frame's spectral-selection scans share one path), then
+    numpy does dequantization, de-zigzag, a block-vectorized separable
+    8x8 IDCT and the crop of the block padding.
 
-    Supported frames: baseline (SOF0), extended sequential Huffman
-    (SOF1), and progressive Huffman (SOF2) — including spectral
-    selection, successive approximation (DC and AC first/refinement
-    passes, EOBn band runs), and restart intervals. Lossless,
-    hierarchical, and arithmetic-coded frames raise
-    NotImplementedError (a different coder, honestly gated). Per-bit
+    Supported frames: baseline (SOF0) and progressive Huffman (SOF2)
+    first-pass spectral-selection scans (Ah=Al=0) ending blocks with
+    plain EOB. More than one component, 16-bit quantization tables,
+    restart intervals, successive approximation, EOBn runs, and every
+    other SOF (extended sequential, lossless, hierarchical,
+    arithmetic) raise a NotImplementedError naming the variant. Per-bit
     Python Huffman is a correctness path for test-scale blobs, not a
     production codec; the Spark-side plumbing (schema, batching,
     partitioning) is what production swaps a native codec into."""
@@ -544,9 +535,8 @@ def _jpeg_pixels(b: bytes):
 
     qt: dict[int, np.ndarray] = {}  # id -> 64 dequant factors, zigzag order
     huff: dict[tuple[int, int], dict] = {}  # (class 0=DC/1=AC, id) -> table
-    frame = None  # (h, w, [(comp_id, hi, vi, qt_id), ...])
-    coefs: list | None = None  # per-component (blocks_y, blocks_x, 64) int32
-    dri = 0
+    frame = None  # (h, w, comp_id, qt_id)
+    coefs = None  # (blocks_y, blocks_x, 64) int32, zigzag order
     nscans = 0
     i, n = 2, len(b)
     while i + 3 < n:
@@ -566,14 +556,14 @@ def _jpeg_pixels(b: bytes):
             raise ValueError("malformed JPEG: bad segment length")
         seg = b[i + 4 : i + 2 + seglen]
         if marker == 0xDB:  # DQT: one or more tables per segment
-            j = 0
-            while j < len(seg):
-                prec, tid = seg[j] >> 4, seg[j] & 15
-                width = 2 if prec else 1
-                vals = seg[j + 1 : j + 1 + 64 * width]
-                dt = np.dtype(">u2") if prec else np.uint8
-                qt[tid] = np.frombuffer(vals, dt).astype(np.float64)
-                j += 1 + 64 * width
+            for j in range(0, len(seg), 65):
+                if seg[j] >> 4:
+                    raise NotImplementedError(
+                        "decode_pixels: 16-bit JPEG quantization tables "
+                        "are not supported"
+                    )
+                q = np.frombuffer(seg[j + 1 : j + 65], np.uint8)
+                qt[seg[j] & 15] = q.astype(np.float64)
         elif marker == 0xC4:  # DHT: one or more tables per segment
             j = 0
             while j < len(seg):
@@ -584,309 +574,156 @@ def _jpeg_pixels(b: bytes):
                     counts, seg[j + 17 : j + 17 + nsym]
                 )
                 j += 17 + nsym
-        elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
+        elif marker in (0xC0, 0xC2):  # baseline / progressive
             h, w = struct.unpack_from(">HH", seg, 1)
-            ncomp = seg[5]
-            comps = [
-                (seg[6 + 3 * c], seg[7 + 3 * c] >> 4, seg[7 + 3 * c] & 15, seg[8 + 3 * c])
-                for c in range(ncomp)
-            ]
-            if ncomp not in (1, 3):
+            if seg[5] != 1:
                 raise NotImplementedError(
-                    f"decode_pixels: {ncomp}-component JPEG (CMYK/unknown) "
-                    "is not supported codec-free"
+                    f"decode_pixels: {seg[5]}-component JPEG (color, any "
+                    "chroma sampling) is not supported; only one-component "
+                    "grayscale JPEG decodes"
                 )
-            if any(c[1] < 1 or c[2] < 1 for c in comps):
+            # one component: its MCU is one block whatever its factors
+            if seg[7] >> 4 < 1 or seg[7] & 15 < 1:
                 raise ValueError("malformed JPEG: zero sampling factor")
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if any(hmax % c[1] or vmax % c[2] for c in comps):
-                raise NotImplementedError(
-                    "decode_pixels: non-integer chroma sampling ratio is "
-                    "not supported codec-free"
-                )
-            mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-            frame = (h, w, comps)
-            coefs = [
-                np.zeros((mcuy * v, mcux * hh, 64), np.int32)
-                for (_cid, hh, v, _q) in comps
-            ]
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7) or 0xC9 <= marker <= 0xCF:
+            frame = (h, w, seg[6], seg[8])
+            coefs = np.zeros((-(-h // 8), -(-w // 8), 64), np.int32)
+        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7) or 0xC9 <= marker <= 0xCF:
             raise NotImplementedError(
-                "decode_pixels: only Huffman sequential/progressive JPEG "
-                f"decodes codec-free (SOF marker 0x{marker:02x} — "
-                "lossless/hierarchical/arithmetic JPEG needs a codec "
-                "library; this environment ships none)"
+                f"decode_pixels: SOF{marker - 0xC0} JPEG (extended "
+                "sequential, lossless, hierarchical or arithmetic) needs a "
+                "codec library; only baseline (SOF0) and progressive (SOF2) "
+                "Huffman JPEG decodes codec-free"
             )
         elif marker == 0xDD:  # DRI
-            dri = int.from_bytes(seg[:2], "big")
+            raise NotImplementedError(
+                "decode_pixels: JPEG restart intervals (DRI) are not supported"
+            )
         elif marker == 0xDA:  # SOS — entropy-coded scan follows
             if frame is None:
                 raise ValueError("malformed JPEG: SOS before SOF")
             if len(seg) < 4 + 2 * seg[0] or seg[0] < 1:
                 raise ValueError("malformed JPEG: truncated SOS header")
             nsc = seg[0]
-            scomps = [
-                (seg[1 + 2 * c], seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 15)
-                for c in range(nsc)
-            ]
-            ss, se = seg[1 + 2 * nsc], seg[2 + 2 * nsc]
-            ah, al = seg[3 + 2 * nsc] >> 4, seg[3 + 2 * nsc] & 15
-            i = _jpeg_decode_scan(
-                b, i + 2 + seglen, frame, coefs, huff, scomps, ss, se, ah, al, dri
-            )
+            ss, se, ahal = seg[1 + 2 * nsc], seg[2 + 2 * nsc], seg[3 + 2 * nsc]
+            if not ss <= se <= 63:
+                raise ValueError("malformed JPEG: bad spectral band")
+            if ahal:
+                raise NotImplementedError(
+                    "decode_pixels: JPEG successive approximation "
+                    "(Ah/Al != 0) is not supported"
+                )
+            if any(seg[1 + 2 * c] != frame[2] for c in range(nsc)):
+                raise ValueError("malformed JPEG: scan names unknown component")
+            if nsc > 1:
+                raise ValueError("malformed JPEG: scan repeats its component")
+            dc, ac = huff.get((0, seg[2] >> 4)), huff.get((1, seg[2] & 15))
+            if ss == 0 and dc is None:
+                raise ValueError("malformed JPEG: missing DC Huffman table")
+            if se >= 1 and ac is None:
+                raise ValueError("malformed JPEG: missing AC Huffman table")
+            i = _jpeg_decode_scan(b, i + 2 + seglen, coefs, dc, ac, ss, se)
             nscans += 1
             continue
         i += 2 + seglen
     if frame is None or nscans == 0:
         raise ValueError("malformed JPEG: no SOS scan")
-    return _jpeg_reconstruct(frame, coefs, qt)
+    h, w, _cid, qid = frame
+    q = qt.get(qid)
+    if q is None:
+        raise ValueError("malformed JPEG: missing quantization table")
+    deq = coefs.astype(np.float64) * q[None, None, :]
+    nat = np.zeros_like(deq)
+    nat[:, :, list(_JPEG_ZZ)] = deq  # de-zigzag
+    by, bx = nat.shape[:2]
+    A = _dct_basis()
+    spatial = np.einsum("ux,abuv,vy->abxy", A, nat.reshape(by, bx, 8, 8), A) + 128.0
+    plane = spatial.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)[:h, :w]
+    return np.clip(np.round(plane), 0, 255).astype(np.uint8)
 
 
-def _jpeg_decode_scan(b, start, frame, coefs, huff, scomps, ss, se, ah, al, dri):
-    """Entropy-decode ONE scan (sequential full-band or progressive
-    spectral/successive-approximation pass) into the per-component
-    coefficient stores; returns the byte offset of the marker that
-    terminated the scan (see :func:`_jpeg_pixels`)."""
-    h, w, comps = frame
-    if not (0 <= ss <= se <= 63):
-        raise ValueError("malformed JPEG: bad spectral band")
+def _jpeg_decode_scan(b, start, coefs, dc_tbl, ac_tbl, ss, se):
+    """Entropy-decode ONE scan — band [ss, se] of every block, in raster
+    order over the component's ceil(dim/8) block grid (T.81 A.2.2) —
+    into the coefficient store; returns the byte offset of the marker
+    that ends the scan (see :func:`_jpeg_pixels`)."""
+    import re
 
-    # -- un-stuff the scan and split at restart markers ----------------
-    segments, cur, i, n = [], bytearray(), start, len(b)
-    while i < n:
-        c = b[i]
-        if c != 0xFF:
-            cur.append(c)
-            i += 1
-            continue
-        m = b[i + 1] if i + 1 < n else 0xD9
-        if m == 0x00:  # stuffed literal 0xFF
-            cur.append(0xFF)
-            i += 2
-        elif 0xD0 <= m <= 0xD7:  # RSTn: restart interval boundary
-            segments.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:  # EOI or any other marker terminates the scan
-            break
-    segments.append(bytes(cur))
-    end = i
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    # resolve scan components against the frame; tables are required
-    # only for the passes that consume them (refinement DC needs none)
-    sel = []
-    for cid, dcid, acid in scomps:
-        ci = next((j for j, c in enumerate(comps) if c[0] == cid), None)
-        if ci is None:
-            raise ValueError("malformed JPEG: scan names unknown component")
-        dc = huff.get((0, dcid))
-        ac = huff.get((1, acid))
-        if ss == 0 and ah == 0 and dc is None:
-            raise ValueError("malformed JPEG: missing DC Huffman table")
-        if se >= 1 and ac is None:
-            raise ValueError("malformed JPEG: missing AC Huffman table")
-        sel.append((ci, dc, ac))
-
-    interleaved = len(sel) > 1
-    if ss > 0 and interleaved:
-        raise ValueError("malformed JPEG: multi-component AC scan")
-    if interleaved:
-        total_units = mcux * mcuy
-    else:
-        # non-interleaved scans walk the component's OWN ceil-block
-        # grid (T.81 A.2.2), not the MCU-padded grid
-        ci0 = sel[0][0]
-        _cid, hh, v, _q = comps[ci0]
-        cw, ch = -(-(w * hh) // hmax), -(-(h * v) // vmax)
-        cbx, cby = -(-cw // 8), -(-ch // 8)
-        total_units = cbx * cby
-
-    per_seg = dri if dri else total_units
-    unit = 0
-    for seg in segments:
-        if unit >= total_units:
-            break
-        preds = [0] * len(sel)  # DC predictors reset at each restart
-        eobrun = 0
-        pos, nbits = 0, len(seg) * 8
-
-        def bit():
-            nonlocal pos
-            if pos >= nbits:
-                raise ValueError("malformed JPEG: truncated scan")
-            byte = seg[pos >> 3]
-            v = (byte >> (7 - (pos & 7))) & 1
-            pos += 1
-            return v
-
-        def receive(s):
-            v = 0
-            for _ in range(s):
-                v = (v << 1) | bit()
-            return v
-
-        def extend(v, s):
-            return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-        def huffdec(tbl):
-            code = 0
-            for ln in range(1, 17):
-                code = (code << 1) | bit()
-                sym = tbl.get((ln, code))
-                if sym is not None:
-                    return sym
-            raise ValueError("malformed JPEG: invalid Huffman code")
-
-        def decode_unit(block, si, dc_tbl, ac_tbl):
-            nonlocal eobrun
-            if ss == 0:
-                if ah == 0:  # DC first pass
-                    s = huffdec(dc_tbl)
-                    diff = extend(receive(s), s) if s else 0
-                    preds[si] += diff
-                    block[0] = preds[si] << al
-                elif bit():  # DC refinement: one bit per block
-                    block[0] |= 1 << al
-            if se == 0:
-                return
-            k = max(ss, 1)
-            if ah == 0:  # AC first pass (band [k..se], values << al)
-                if eobrun:
-                    eobrun -= 1
-                    return
-                while k <= se:
-                    rs = huffdec(ac_tbl)
-                    r, s = rs >> 4, rs & 15
-                    if s == 0:
-                        if r != 15:  # EOBn: this + (eobrun) blocks end
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += receive(r)
-                            break
-                        k += 16  # ZRL
-                    else:
-                        k += r
-                        if k > se:
-                            raise ValueError("malformed JPEG: AC overrun")
-                        block[k] = extend(receive(s), s) << al
-                        k += 1
-                return
-            # AC refinement pass (T.81 G.1.2.3: correction bits for
-            # nonzero history, +-1<<al for newly nonzero coefficients)
-            p1, m1 = 1 << al, -1 << al
-            if eobrun == 0:
-                while k <= se:
-                    rs = huffdec(ac_tbl)
-                    r, s = rs >> 4, rs & 15
-                    val = 0
-                    if s == 0:
-                        if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += receive(r)
-                            break
-                        # ZRL: r stays 15 — skip 16 zero-history slots
-                    else:
-                        if s != 1:
-                            raise ValueError(
-                                "malformed JPEG: bad refinement magnitude"
-                            )
-                        val = p1 if bit() else m1
-                    while k <= se:
-                        if block[k] != 0:
-                            if bit() and (block[k] & p1) == 0:
-                                block[k] += p1 if block[k] > 0 else m1
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val and k <= se:
-                        block[k] = val
-                    k += 1
-            if eobrun > 0:  # finish the current block's corrections
-                while k <= se:
-                    if block[k] != 0 and bit() and (block[k] & p1) == 0:
-                        block[k] += p1 if block[k] > 0 else m1
-                    k += 1
-                eobrun -= 1
-
-        for _ in range(min(per_seg, total_units - unit)):
-            if interleaved:
-                my, mx = divmod(unit, mcux)
-                for si, (ci, dc_tbl, ac_tbl) in enumerate(sel):
-                    _cid, hh, v, _q = comps[ci]
-                    for by in range(v):
-                        for bx in range(hh):
-                            decode_unit(
-                                coefs[ci][my * v + by, mx * hh + bx],
-                                si, dc_tbl, ac_tbl,
-                            )
-            else:
-                ci, dc_tbl, ac_tbl = sel[0]
-                by, bx = divmod(unit, cbx)
-                decode_unit(coefs[ci][by, bx], 0, dc_tbl, ac_tbl)
-            unit += 1
-    if unit < total_units:
-        raise ValueError("malformed JPEG: truncated scan")
-    return end
-
-
-def _jpeg_reconstruct(frame, coefs, qt):
-    """Dequantize + de-zigzag + block-vectorized IDCT the accumulated
-    coefficient stores, upsample chroma by pixel replication, crop the
-    MCU padding, and color-convert (see :func:`_jpeg_pixels`)."""
     import numpy as np
 
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    A = _dct_basis()
-    zz = np.array(_JPEG_ZZ)
+    # the scan runs to the first 0xFF that is not a stuffed 0xFF00
+    m = re.compile(rb"\xff(?!\x00)").search(b, start)
+    end = m.start() if m else len(b)
+    bits = np.unpackbits(
+        np.frombuffer(b[start:end].replace(b"\xff\x00", b"\xff"), np.uint8)
+    ).tolist()
+    pos = 0
 
-    full = []
-    for ci, (_cid, hh, v, qid) in enumerate(comps):
-        q = qt.get(qid)
-        if q is None:
-            raise ValueError("malformed JPEG: missing quantization table")
-        deq = coefs[ci].astype(np.float64) * q[None, None, :]
-        nat = np.zeros_like(deq)
-        nat[:, :, zz] = deq  # de-zigzag: stream position k -> index zz[k]
-        by, bx = nat.shape[:2]
-        blocks = nat.reshape(by, bx, 8, 8)
-        spatial = np.einsum("ux,abuv,vy->abxy", A, blocks, A) + 128.0
-        plane = spatial.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
-        if hh < hmax:
-            plane = np.repeat(plane, hmax // hh, axis=1)
-        if v < vmax:
-            plane = np.repeat(plane, vmax // v, axis=0)
-        full.append(plane[:h, :w])
-    if len(full) == 1:
-        return np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    bl = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, bl], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+    def bit():
+        nonlocal pos
+        if pos >= len(bits):
+            raise ValueError("malformed JPEG: truncated scan")
+        pos += 1
+        return bits[pos - 1]
+
+    def receive(s):
+        v = 0
+        for _ in range(s):
+            v = (v << 1) | bit()
+        return v
+
+    def extend(v, s):
+        return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+
+    def huffdec(tbl):
+        code = 0
+        for ln in range(1, 17):
+            code = (code << 1) | bit()
+            sym = tbl.get((ln, code))
+            if sym is not None:
+                return sym
+        raise ValueError("malformed JPEG: invalid Huffman code")
+
+    pred = 0  # DC predictor
+    for block in coefs.reshape(-1, 64):
+        if ss == 0:
+            s = huffdec(dc_tbl)
+            pred += extend(receive(s), s) if s else 0
+            block[0] = pred
+        k = max(ss, 1)
+        while k <= se:
+            rs = huffdec(ac_tbl)
+            r, s = rs >> 4, rs & 15
+            if s == 0:
+                if r == 0:  # EOB
+                    break
+                if r != 15:
+                    raise NotImplementedError(
+                        "decode_pixels: JPEG EOBn runs are not supported"
+                    )
+                k += 16  # ZRL
+                continue
+            k += r
+            if k > se:
+                raise ValueError("malformed JPEG: AC overrun")
+            block[k] = extend(receive(s), s)
+            k += 1
+    return end
 
 
 def decode_pixels(b: bytes):
     """Decode a PNG or JPEG blob to a raster numpy array, picking the
-    decoder from the signature bytes. PNG decodes through stdlib zlib +
-    numpy unfilter (:func:`_png_pixels`); Huffman-coded JPEG — baseline,
-    extended sequential, and progressive, incl. spectral selection /
-    successive approximation / restart intervals — through pure-Python
-    entropy decode + numpy IDCT (:func:`_jpeg_pixels`). Any other blob
-    raises NotImplementedError naming the two formats; inside them,
-    variants no decoder here handles (sub-byte PNG depths, lossless/
-    hierarchical/arithmetic JPEG) raise it too, and malformed streams
-    raise ValueError."""
+    decoder from the signature bytes: grayscale PNG (8/16-bit, any
+    filter, Adam7 or not) through stdlib zlib + numpy unfilter
+    (:func:`_png_pixels`) to an (h, w) uint8/uint16 array, and
+    one-component Huffman JPEG (baseline SOF0, or progressive SOF2
+    spectral-selection scans) through pure-Python entropy decode +
+    numpy IDCT (:func:`_jpeg_pixels`) to an (h, w) uint8 array. Any
+    other blob raises NotImplementedError naming the two formats;
+    inside them, every variant the decoders leave out (color or palette
+    PNG, sub-byte depths, multi-component JPEG, restart intervals,
+    successive approximation, EOBn runs, other SOFs, 16-bit
+    quantization tables) raises it too, naming the variant, and
+    malformed streams raise ValueError."""
     if b.startswith(b"\x89PNG\r\n\x1a\n"):
         return _png_pixels(b)
     if b.startswith(b"\xff\xd8"):
@@ -897,7 +734,7 @@ def decode_pixels(b: bytes):
     )
 
 
-def sample_frames(df: DataFrame, blob_col: str = "blob", every_n: int = 1000) -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 1000) -> DataFrame:
     """Deterministic fake of video frame sampling: take every
     ``every_n``-th byte of the blob as a 'frame' marker — exercises
     the exploding (1 blob -> N rows) pipeline shape that real frame
@@ -905,10 +742,10 @@ def sample_frames(df: DataFrame, blob_col: str = "blob", every_n: int = 1000) ->
     zero frames (the sequence lower bound would otherwise emit one
     phantom frame at offset 0)."""
     frames = F.expr(
-        f"case when length({blob_col}) > 0 then "
-        f"transform(sequence(0, cast(length({blob_col}) as int) - 1, {every_n}),"
-        f" i -> struct(i as frame_offset, substr({blob_col}, i + 1, 16) as frame_chunk))"
-        f" else array() end"
+        "case when length(blob) > 0 then "
+        f"transform(sequence(0, cast(length(blob) as int) - 1, {every_n}),"
+        " i -> struct(i as frame_offset, substr(blob, i + 1, 16) as frame_chunk))"
+        " else array() end"
     )
     return (
         df.withColumn("frame", F.explode(frames))

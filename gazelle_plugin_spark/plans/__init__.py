@@ -63,8 +63,7 @@ def load_all() -> None:
 #: for at least one more round. Stalest-evidence rows also rotate back
 #: in so driver evidence ages out within ~2 rounds (round-7 verdict
 #: item 7). q1 stays first: entry() depends on it. Every window entry
-#: carries a full DuckDB hash oracle (ROWS_ONLY_WINDOW is empty since
-#: round 8).
+#: carries a full DuckDB hash oracle.
 #: CHANGED-PLAN RULE (round-14 verdict item 1): any query whose plan
 #: function changed materially in-round is auto-FRONTED into the next
 #: window regardless of its staleness turn — the driver's own hash gate
@@ -113,14 +112,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
 # any plan changed in round 16 first, per the changed-plan rule), then
 # fill with the stalest r12 rows; recompute at close from
 # CORRECTNESS_r*.json newest-green evidence.
-
-#: Window entries with NO DuckDB oracle. Empty since round 8:
-#: expr_hash_native — the last rows-only entry — now carries a VALUES
-#: list oracle generated from the pure-Python hash implementations
-#: (plans/expressions.py:_hash_native_oracle), so every window entry
-#: has a full hash-match oracle. rel_approx_agg and mm_byte_features
-#: graduated in round 6.
-ROWS_ONLY_WINDOW: frozenset[str] = frozenset()
 
 
 def _conditionally_absent() -> frozenset[str]:

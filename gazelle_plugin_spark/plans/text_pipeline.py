@@ -555,13 +555,22 @@ _SQL_DF_CAP = (
 )
 
 
-def ngram_df_cap(n_docs: int) -> int:
-    """Pure-Python twin of the scaled DF cap (unit-pinned in
-    tests/test_pipelines.py at the measured regimes: 500 -> 20,
-    5000 -> 20, 50000 -> 7, 150000 -> 4)."""
-    import math as _math
+def _df_cap(docs: DataFrame) -> DataFrame:
+    """The corpus-scaled DF cap as a 1-row aggregate over ``docs``:
+    the Spark twin of _SQL_DF_CAP (exact division + IEEE sqrt/ceil),
+    pinned against it in tests/test_pipelines.py."""
+    return docs.agg(
+        F.least(
+            F.lit(NGRAM_DF_MAX),
+            F.greatest(
+                F.lit(NGRAM_DF_MIN),
+                F.ceil(
+                    F.sqrt(F.lit(float(NGRAM_DF_BUDGET)) / F.count(F.lit(1)))
+                ).cast("int"),
+            ),
+        ).alias("df_cap")
+    )
 
-    return max(NGRAM_DF_MIN, min(NGRAM_DF_MAX, _math.ceil(_math.sqrt(NGRAM_DF_BUDGET / n_docs))))
 
 #: Prefix-filter length for Jaccard >= 0.8 (Chaudhuri/Bayardo
 #: set-similarity-join prefix principle): two sets with J >= t MUST
@@ -628,7 +637,7 @@ def doc_ngram_jaccard(spark, sf_dir):
     Three candidate bounds on top of the prefix (the first two from
     the round-13 verdict task 1 DF-cap scaling rule; the positional
     bound added in round 16):
-    - df <= ngram_df_cap(N): the stop-shingle cap SCALES with corpus
+    - df <= df_cap(N): the stop-shingle cap SCALES with corpus
       size (see NGRAM_DF_BUDGET) so worst-case sum-of-C(df,2) verify
       work is bounded at a constant pair budget; on realistic
       Heaps/Zipf corpora it is a ~10%-wall constant-factor win at a
@@ -660,19 +669,7 @@ def doc_ngram_jaccard(spark, sf_dir):
     # + IEEE sqrt/ceil). Like every prefix-subtree node it executes
     # once per SIDE of the candidate self-join (two metadata-only
     # parquet footer COUNT(*) jobs — no data scan)
-    cap = F.broadcast(
-        t(spark, sf_dir, "documents").agg(
-            F.least(
-                F.lit(NGRAM_DF_MAX),
-                F.greatest(
-                    F.lit(NGRAM_DF_MIN),
-                    F.ceil(
-                        F.sqrt(F.lit(float(NGRAM_DF_BUDGET)) / F.count(F.lit(1)))
-                    ).cast("int"),
-                ),
-            ).alias("df_cap")
-        )
-    )
+    cap = F.broadcast(_df_cap(t(spark, sf_dir, "documents")))
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w_rank = Window.partitionBy("doc_id").orderBy("df", "s")
     w_size = Window.partitionBy("doc_id")

@@ -1,8 +1,8 @@
 """Multimodal plumbing tests: blob attachment schema, mapInPandas
-feature extraction verified against a plain-Python oracle, PNG and
-Huffman-JPEG pixel decode round-tripped through test-side encoders (and
-the NotImplementedError every other format raises), and the
-frame-sample explosion."""
+feature extraction verified against a plain-Python oracle, grayscale PNG
+and one-component Huffman-JPEG pixel decode round-tripped through
+test-side encoders (and the NotImplementedError every other format and
+variant raises), and the frame-sample explosion."""
 
 from __future__ import annotations
 
@@ -63,7 +63,7 @@ def test_byte_features_kernel_output_is_typed(rows):
             "blob": pd.Series([r[1] for r in rows], dtype=object),
         }
     )
-    [out] = _byte_featurizer("doc_id", BYTE_FEATURE_CHUNK)(iter([batch]))
+    [out] = _byte_featurizer(BYTE_FEATURE_CHUNK)(iter([batch]))
     declared = to_arrow_schema(BYTE_FEATURES_SCHEMA)
     assert pa.Table.from_pandas(out, preserve_index=False).schema.equals(declared)
     assert out.to_dict("records") == (
@@ -72,7 +72,7 @@ def test_byte_features_kernel_output_is_typed(rows):
     )
 
 
-def _png(w: int, h: int, color_type: int = 6) -> bytes:
+def _png(w: int, h: int) -> bytes:
     import struct
 
     return (
@@ -80,23 +80,17 @@ def _png(w: int, h: int, color_type: int = 6) -> bytes:
         + struct.pack(">I", 13)
         + b"IHDR"
         + struct.pack(">II", w, h)
-        + bytes([8, color_type, 0, 0, 0])
+        + bytes([8, 0, 0, 0, 0])
     )
 
 
-def _jpeg(w: int, h: int, ncomp: int = 3) -> bytes:
+def _jpeg(w: int, h: int) -> bytes:
+    """Header-only one-component JPEG stub: no tables, no scan."""
     import struct
 
     app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 8 + 3 * ncomp)
-        + b"\x08"
-        + struct.pack(">HH", h, w)
-        + bytes([ncomp])
-        + b"\x00" * (3 * ncomp)
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xda\x00\x02"
+    sof0 = b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", h, w)
+    return b"\xff\xd8" + app0 + sof0 + b"\x01" + b"\x00" * 3 + b"\xff\xda\x00\x02"
 
 
 def _webp_vp8l(w: int, h: int) -> bytes:
@@ -111,10 +105,13 @@ def _webp_vp8l(w: int, h: int) -> bytes:
 
 def test_decode_pixels_native_and_gated():
     """Only PNG and JPEG decode: a GIF, BMP or WEBP blob raises the
-    NotImplementedError naming the two formats. Inside JPEG,
-    arithmetic-coded frames (SOF10) keep the codec gate, and a
-    header-only stub (no tables, no scan) is MALFORMED — fail-loud,
-    never a silently-wrong raster."""
+    NotImplementedError naming the two formats. Inside JPEG, every
+    variant the decoder leaves out raises it naming the variant —
+    3-component (4:4:4 and subsampled), restart intervals, successive
+    approximation, EOBn runs, SOF1, 16-bit quantization tables — and
+    arithmetic-coded frames (SOF10) keep the codec gate. A header-only
+    stub (no tables, no scan) is MALFORMED — fail-loud, never a
+    silently-wrong raster."""
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
     for blob in (b"GIF89a" + bytes(7), b"BM" + bytes(52), _webp_vp8l(4, 4)):
@@ -124,6 +121,53 @@ def test_decode_pixels_native_and_gated():
         decode_pixels(_jpeg(4, 4).replace(b"\xff\xc0", b"\xff\xca"))
     with pytest.raises(ValueError, match="malformed JPEG"):
         decode_pixels(_jpeg(4, 4))
+
+    rng = np.random.RandomState(11)
+    y = rng.randint(0, 256, (18, 21), dtype=np.uint8)
+    cb, cr = np.full_like(y, 90), np.full_like(y, 170)
+    for sampling in [(1, 1), (2, 1), (2, 2)]:
+        with pytest.raises(NotImplementedError, match="3-component JPEG"):
+            decode_pixels(_encode_jpeg(y, cb, cr, sampling=sampling))
+    with pytest.raises(NotImplementedError, match="restart intervals"):
+        decode_pixels(_encode_jpeg(y, dri=1))
+    base = _encode_jpeg(y)
+    with pytest.raises(NotImplementedError, match="SOF1 "):
+        decode_pixels(base.replace(b"\xff\xc0", b"\xff\xc1", 1))
+    dqt8 = _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
+    dqt16 = _jpeg_seg(0xDB, b"\x10" + bytes([0, 1] * 64))
+    with pytest.raises(NotImplementedError, match="16-bit JPEG quantization"):
+        decode_pixels(base.replace(dqt8, dqt16, 1))
+
+    # successive approximation: a DC first pass at Al=1 over one block
+    bw_ = _BitWriter()
+    bw_.put(4, 4)
+    bw_.put(8, 4)
+    bw_.flush()
+    sa = (
+        _jpeg_tables_prelude(0xC2, 8, 8)
+        + _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01])) + bytes(bw_.buf)
+        + b"\xff\xd9"
+    )
+    with pytest.raises(NotImplementedError, match="successive approximation"):
+        decode_pixels(sa)
+
+    # EOBn: two DC-only blocks whose AC scan ends both with one EOB1
+    # run (a second AC table codes EOB as '0' and EOB1 as '1')
+    eob1 = _jpeg_tables_prelude(0xC2, 8, 16) + _jpeg_seg(
+        0xC4, b"\x11" + bytes([2] + [0] * 15) + bytes([0x00, 0x10])
+    )
+    bw_ = _BitWriter()
+    bw_.put(0, 4)
+    bw_.put(0, 4)
+    bw_.flush()
+    eob1 += _jpeg_seg(0xDA, bytes([1, 1, 0x01, 0, 0, 0])) + bytes(bw_.buf)
+    bw_ = _BitWriter()
+    bw_.put(1, 1)  # EOB1
+    bw_.put(0, 1)  # run extension bit: 2 blocks end
+    bw_.flush()
+    eob1 += _jpeg_seg(0xDA, bytes([1, 1, 0x01, 1, 63, 0])) + bytes(bw_.buf) + b"\xff\xd9"
+    with pytest.raises(NotImplementedError, match="EOBn"):
+        decode_pixels(eob1)
 
 
 #: Adam7 pass grid (RFC 2083 §2.6) — mirrored in the decoder.
@@ -213,39 +257,28 @@ def _encode_png(
     )
 
 
-def test_decode_pixels_png_all_filters_and_color_types():
-    """PNG pixels decode codec-free (stdlib zlib + numpy unfilter):
-    every filter type (None/Sub/Up/Average/Paeth) and every 8-bit
-    color type round-trips a planted raster exactly."""
+def test_decode_pixels_png_all_filters():
+    """Grayscale PNG pixels decode codec-free (stdlib zlib + numpy
+    unfilter): every filter type (None/Sub/Up/Average/Paeth)
+    round-trips a planted raster exactly."""
     import numpy as np
 
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
     rng = np.random.RandomState(7)
-    # RGBA, one scanline per filter type (h=5 exercises all five)
-    rgba = rng.randint(0, 256, (5, 7, 4), dtype=np.uint8)
-    got = decode_pixels(_encode_png(rgba, 6, [0, 1, 2, 3, 4]))
-    assert got.shape == (5, 7, 4) and (got == rgba).all()
-    # grayscale with the left-recurrence filters
+    # one scanline per filter type (h=5 exercises all five)
+    gray = rng.randint(0, 256, (5, 7), dtype=np.uint8)
+    got = decode_pixels(_encode_png(gray, 0, [0, 1, 2, 3, 4]))
+    assert got.dtype == np.uint8 and got.shape == (5, 7) and (got == gray).all()
+    # the left-recurrence filters back to back
     gray = rng.randint(0, 256, (4, 9), dtype=np.uint8)
     got = decode_pixels(_encode_png(gray, 0, [1, 3, 4, 2]))
     assert got.shape == (4, 9) and (got == gray).all()
-    # RGB and gray+alpha
-    rgb = rng.randint(0, 256, (3, 5, 3), dtype=np.uint8)
-    assert (decode_pixels(_encode_png(rgb, 2, [4, 1, 3])) == rgb).all()
-    la = rng.randint(0, 256, (2, 6, 2), dtype=np.uint8)
-    assert (decode_pixels(_encode_png(la, 4, [2, 1])) == la).all()
-    # palette image expands through PLTE to RGB
-    pal = bytes(range(48))  # 16 RGB entries
-    idx = rng.randint(0, 16, (3, 4), dtype=np.uint8)
-    got = decode_pixels(_encode_png(idx, 3, [0, 1, 2], palette=pal))
-    expect = np.frombuffer(pal, np.uint8).reshape(-1, 3)[idx]
-    assert got.shape == (3, 4, 3) and (got == expect).all()
 
 
 def test_decode_pixels_png_16bit():
     """16-bit PNGs round-trip exactly: samples are big-endian byte
-    PAIRS on the wire, and the filter left-neighbor is bpp=2*nch bytes
+    PAIRS on the wire, and the filter left-neighbor is bpp=2 bytes
     back — an 8-bit-offset bug would corrupt every Sub/Paeth row."""
     import numpy as np
 
@@ -255,11 +288,8 @@ def test_decode_pixels_png_16bit():
     gray = rng.randint(0, 65536, (7, 5), np.uint16)
     got = decode_pixels(_encode_png(gray, 0, [0, 1, 2, 3, 4], depth=16))
     assert got.dtype == np.uint16 and got.shape == (7, 5) and (got == gray).all()
-    rgb = rng.randint(0, 65536, (6, 4, 3), np.uint16)
-    got = decode_pixels(_encode_png(rgb, 2, [4, 1, 3, 2], depth=16))
-    assert got.shape == (6, 4, 3) and (got == rgb).all()
-    rgba = rng.randint(0, 65536, (3, 8, 4), np.uint16)
-    assert (decode_pixels(_encode_png(rgba, 6, [1, 4], depth=16)) == rgba).all()
+    gray = rng.randint(0, 65536, (3, 8), np.uint16)
+    assert (decode_pixels(_encode_png(gray, 0, [1, 4], depth=16)) == gray).all()
 
 
 def test_decode_pixels_png_adam7():
@@ -271,13 +301,11 @@ def test_decode_pixels_png_adam7():
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
     rng = np.random.RandomState(9)
-    for shape, ctype in (((13, 11, 4), 6), ((9, 7, 3), 2), ((5, 3), 0)):
-        img = rng.randint(0, 256, shape, np.uint8)
-        got = decode_pixels(_encode_png(img, ctype, [0, 1, 2, 3, 4], interlace=1))
-        assert (got == img).all(), (shape, ctype)
     # tiny images leave some passes empty entirely
-    img = rng.randint(0, 256, (1, 1, 3), np.uint8)
-    assert (decode_pixels(_encode_png(img, 2, [4], interlace=1)) == img).all()
+    for shape in ((13, 11), (9, 7), (5, 3), (1, 1)):
+        img = rng.randint(0, 256, shape, np.uint8)
+        got = decode_pixels(_encode_png(img, 0, [0, 1, 2, 3, 4], interlace=1))
+        assert (got == img).all(), shape
     # 16-bit + Adam7 compose
     img16 = rng.randint(0, 65536, (10, 6), np.uint16)
     got = decode_pixels(_encode_png(img16, 0, [3, 4, 1], depth=16, interlace=1))
@@ -285,7 +313,8 @@ def test_decode_pixels_png_adam7():
 
 
 def test_decode_pixels_png_unsupported_shapes_fail_loud():
-    """Sub-byte depths raise NotImplementedError (not a silently-wrong
+    """Color and palette PNGs and sub-byte depths raise
+    NotImplementedError naming the variant (not a silently-wrong
     raster); truncated streams raise ValueError."""
     import struct
     import zlib
@@ -308,11 +337,29 @@ def test_decode_pixels_png_unsupported_shapes_fail_loud():
     with pytest.raises(ValueError, match="malformed PNG"):
         decode_pixels(_png(4, 4))  # header-only stream, no IDAT
 
+    rng = np.random.RandomState(13)
+    for ctype, name, shape, depth in (
+        (2, "RGB", (3, 5, 3), 8),
+        (2, "RGB", (6, 4, 3), 16),
+        (4, "gray\\+alpha", (2, 6, 2), 8),
+        (6, "RGBA", (5, 7, 4), 8),
+        (6, "RGBA", (3, 8, 4), 16),
+    ):
+        img = rng.randint(0, 1 << depth, shape).astype(f"uint{depth}")
+        for interlace in (0, 1):
+            blob = _encode_png(img, ctype, [0, 1, 2], depth=depth, interlace=interlace)
+            variant = f"{name} PNG \\(color type {ctype}\\)"
+            with pytest.raises(NotImplementedError, match=variant):
+                decode_pixels(blob)
+    idx = rng.randint(0, 16, (3, 4), dtype=np.uint8)
+    with pytest.raises(NotImplementedError, match="palette PNG"):
+        decode_pixels(_encode_png(idx, 3, [0, 1, 2], palette=bytes(range(48))))
+
 
 # ---------------------------------------------------------------------------
-# baseline JPEG: minimal test-side encoder (quality-0 style: all-ones
-# quant scaled by qscale, fixed-length canonical Huffman tables — DC
-# 12 symbols @ 4 bits, AC 162 symbols @ 8 bits) + decoder round trips
+# JPEG: minimal test-side encoders (quality-0 style: all-ones quant
+# scaled by qscale, fixed-length canonical Huffman tables — DC 12
+# symbols @ 4 bits, AC 162 symbols @ 8 bits) + decoder round trips
 # ---------------------------------------------------------------------------
 
 #: AC symbols in canonical order; code == index, all 8 bits long.
@@ -348,9 +395,9 @@ class _BitWriter:
 
 def _encode_jpeg(y, cb=None, cr=None, sampling=(1, 1), dri=0, qscale=1):
     """Minimal baseline-JPEG encoder (test oracle for _jpeg_pixels):
-    luma sampling = ``sampling``, chroma always 1x1; full-size cb/cr
-    planes are subsampled by top-left pick (exact when the caller keeps
-    chroma constant per sampling window)."""
+    grayscale by default; ``cb``/``cr``, ``sampling`` and ``dri`` build
+    the color, subsampled and restart-interval streams the decoder
+    refuses (luma sampling = ``sampling``, chroma 1x1 picked top-left)."""
     import struct
 
     from gazelle_plugin_spark.operators.multimodal import _JPEG_ZZ
@@ -455,60 +502,22 @@ def test_decode_pixels_jpeg_grayscale_roundtrip():
     assert np.abs(got.astype(int) - gray.astype(int)).max() <= 2
 
 
-def test_decode_pixels_jpeg_color_sampling_and_restarts():
-    """3-component YCbCr decodes through 4:4:4, 4:2:2 and 4:2:0
-    sampling (constant chroma -> replication upsample is exact) and
-    restart markers (DRI=1) reproduce the no-restart raster bit-for-
-    bit."""
-    from gazelle_plugin_spark.operators.multimodal import decode_pixels
-
-    rng = np.random.RandomState(11)
-    h, w = 18, 21  # non-multiple of every MCU size
-    y = rng.randint(0, 256, (h, w), dtype=np.uint8)
-    cb = np.full((h, w), 90, np.uint8)
-    cr = np.full((h, w), 170, np.uint8)
-
-    yf = y.astype(float)
-    exp = np.stack(
-        [
-            yf + 1.402 * (170 - 128.0),
-            yf - 0.344136 * (90 - 128.0) - 0.714136 * (170 - 128.0),
-            yf + 1.772 * (90 - 128.0),
-        ],
-        axis=-1,
-    )
-    exp = np.clip(np.round(exp), 0, 255)
-
-    for sampling in [(1, 1), (2, 1), (2, 2)]:
-        got = decode_pixels(_encode_jpeg(y, cb, cr, sampling=sampling))
-        assert got.shape == (h, w, 3), sampling
-        assert np.abs(got.astype(float) - exp).max() <= 4, sampling
-
-    plain = decode_pixels(_encode_jpeg(y, cb, cr, sampling=(2, 2)))
-    restarts = decode_pixels(_encode_jpeg(y, cb, cr, sampling=(2, 2), dri=1))
-    assert (plain == restarts).all()
-
-
 def _jpeg_seg(marker: int, payload: bytes) -> bytes:
     return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
 
 
-def _jpeg_tables_prelude(ncomp: int, sof_marker: int, h: int, w: int, sampling) -> bytes:
-    """SOI + all-ones DQT + the fixed-length DHT pair + SOFn for the
-    test encoders (components: 1=luma at ``sampling``, chroma 1x1)."""
+def _jpeg_tables_prelude(sof_marker: int, h: int, w: int) -> bytes:
+    """SOI + all-ones DQT + the fixed-length DHT pair + a one-component
+    SOFn for the test encoders."""
     import struct
 
-    hy, vy = sampling
     dc_counts = bytes([0, 0, 0, 12] + [0] * 12)
     ac_counts = bytes([0] * 7 + [162] + [0] * 8)
     dht = (
         b"\x00" + dc_counts + bytes(range(12))
         + b"\x10" + ac_counts + bytes(_AC_SYMS)
     )
-    sof = b"\x08" + struct.pack(">HH", h, w) + bytes([ncomp])
-    for cid in range(1, ncomp + 1):
-        hs, vs = (hy, vy) if cid == 1 else (1, 1)
-        sof += bytes([cid, (hs << 4) | vs, 0])
+    sof = b"\x08" + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0])
     return (
         b"\xff\xd8"
         + _jpeg_seg(0xDB, b"\x00" + bytes([1] * 64))
@@ -517,211 +526,105 @@ def _jpeg_tables_prelude(ncomp: int, sof_marker: int, h: int, w: int, sampling) 
     )
 
 
-def _encode_jpeg_progressive(y, cb=None, cr=None, sampling=(1, 1)):
-    """Spectral-selection-only progressive encoder (test oracle): one
-    interleaved DC scan (Ss=0, Se=0) then one full-band AC scan per
-    component (Ss=1, Se=63), no successive approximation. Coefficients
-    are identical to _encode_jpeg's, so the decoded raster must match
-    the baseline encoding bit-for-bit."""
+def _encode_jpeg_progressive(y):
+    """Spectral-selection-only progressive grayscale encoder (test
+    oracle): one DC scan (Ss=0, Se=0) then one full-band AC scan (Ss=1,
+    Se=63), no successive approximation. Coefficients are identical to
+    _encode_jpeg's, so the decoded raster must match the baseline
+    encoding bit-for-bit."""
     from gazelle_plugin_spark.operators.multimodal import _JPEG_ZZ
 
     A = _jpeg_dct_basis()
     zz = list(_JPEG_ZZ)
     h, w = y.shape
-    hy, vy = sampling
-    mcux, mcuy = -(-w // (8 * hy)), -(-h // (8 * vy))
+    nbx, nby = -(-w // 8), -(-h // 8)
+    plane = np.pad(
+        y.astype(np.float64), ((0, nby * 8 - h), (0, nbx * 8 - w)), mode="edge"
+    )
+    coefs = np.zeros((nby, nbx, 64), np.int64)
+    for rr in range(nby):
+        for cc in range(nbx):
+            blk = plane[rr * 8 : rr * 8 + 8, cc * 8 : cc * 8 + 8]
+            coefs[rr, cc] = np.rint(A @ (blk - 128.0) @ A.T).reshape(-1)[zz]
 
-    def pad(plane, bh, bw):
-        return np.pad(
-            plane.astype(np.float64),
-            ((0, bh * 8 - plane.shape[0]), (0, bw * 8 - plane.shape[1])),
-            mode="edge",
-        )
-
-    comps = [(1, hy, vy, pad(y, mcuy * vy, mcux * hy))]
-    if cb is not None:
-        comps.append((2, 1, 1, pad(cb[::vy, ::hy], mcuy, mcux)))
-        comps.append((3, 1, 1, pad(cr[::vy, ::hy], mcuy, mcux)))
-
-    coefs = []
-    for _cid, _hs, _vs, plane in comps:
-        nby, nbx = plane.shape[0] // 8, plane.shape[1] // 8
-        arr = np.zeros((nby, nbx, 64), np.int64)
-        for rr in range(nby):
-            for cc in range(nbx):
-                blk = plane[rr * 8 : rr * 8 + 8, cc * 8 : cc * 8 + 8]
-                arr[rr, cc] = np.rint(A @ (blk - 128.0) @ A.T).reshape(-1)[zz]
-        coefs.append(arr)
-
-    # interleaved DC scan
+    out = _jpeg_tables_prelude(0xC2, h, w)
+    # DC scan
     bw_ = _BitWriter()
-    pred = [0] * len(comps)
-    for mcu in range(mcux * mcuy):
-        my, mx = divmod(mcu, mcux)
-        for ci, (_cid, hs, vs, _p) in enumerate(comps):
-            for by in range(vs):
-                for bx in range(hs):
-                    dc = int(coefs[ci][my * vs + by, mx * hs + bx, 0])
-                    diff, pred[ci] = dc - pred[ci], dc
-                    s = abs(diff).bit_length()
-                    bw_.put(s, 4)
-                    if s:
-                        bw_.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
+    pred = 0
+    for dc in coefs[:, :, 0].reshape(-1):
+        diff, pred = int(dc) - pred, int(dc)
+        s = abs(diff).bit_length()
+        bw_.put(s, 4)
+        if s:
+            bw_.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
     bw_.flush()
-    sos_dc = bytes([len(comps)])
-    for cid, _hs, _vs, _p in comps:
-        sos_dc += bytes([cid, 0x00])
-    sos_dc += bytes([0, 0, 0])
-    out = _jpeg_tables_prelude(len(comps), 0xC2, h, w, sampling)
-    out += _jpeg_seg(0xDA, sos_dc) + bytes(bw_.buf)
+    out += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0])) + bytes(bw_.buf)
 
-    # one full-band AC scan per component, over its own ceil-block grid
-    for ci, (cid, hs, vs, _p) in enumerate(comps):
-        cw, ch = -(-(w * hs) // hy), -(-(h * vs) // vy)
-        cbx, cby = -(-cw // 8), -(-ch // 8)
-        bw_ = _BitWriter()
-        for idx in range(cbx * cby):
-            rr, cc = divmod(idx, cbx)
-            vec = coefs[ci][rr, cc]
+    # full-band AC scan
+    bw_ = _BitWriter()
+    for vec in coefs.reshape(-1, 64):
+        run = 0
+        for k in range(1, 64):
+            v = int(vec[k])
+            if v == 0:
+                run += 1
+                continue
+            while run > 15:
+                bw_.put(_AC_CODE[0xF0], 8)
+                run -= 16
+            s2 = abs(v).bit_length()
+            bw_.put(_AC_CODE[(run << 4) | s2], 8)
+            bw_.put(v if v >= 0 else v + (1 << s2) - 1, s2)
             run = 0
-            for k in range(1, 64):
-                v = int(vec[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    bw_.put(_AC_CODE[0xF0], 8)
-                    run -= 16
-                s2 = abs(v).bit_length()
-                bw_.put(_AC_CODE[(run << 4) | s2], 8)
-                bw_.put(v if v >= 0 else v + (1 << s2) - 1, s2)
-                run = 0
-            if run:
-                bw_.put(_AC_CODE[0x00], 8)  # EOB == EOBn run of 1
-        bw_.flush()
-        out += _jpeg_seg(0xDA, bytes([1, cid, 0x00, 1, 63, 0])) + bytes(bw_.buf)
+        if run:
+            bw_.put(_AC_CODE[0x00], 8)  # plain EOB
+    bw_.flush()
+    out += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0])) + bytes(bw_.buf)
     return out + b"\xff\xd9"
 
 
 def test_decode_pixels_jpeg_progressive_spectral_matches_baseline():
     """A spectral-selection progressive stream carrying the SAME
     coefficients as the baseline encoding must decode to the identical
-    raster — gray and 4:2:0 color, odd dimensions."""
+    raster — odd dimensions included."""
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
     rng = np.random.RandomState(23)
-    gray = rng.randint(0, 256, (19, 13), dtype=np.uint8)
-    assert (
-        decode_pixels(_encode_jpeg_progressive(gray))
-        == decode_pixels(_encode_jpeg(gray))
-    ).all()
-
-    y = rng.randint(0, 256, (18, 21), dtype=np.uint8)
-    cb = np.full((18, 21), 77, np.uint8)
-    cr = np.full((18, 21), 150, np.uint8)
-    assert (
-        decode_pixels(_encode_jpeg_progressive(y, cb, cr, sampling=(2, 2)))
-        == decode_pixels(_encode_jpeg(y, cb, cr, sampling=(2, 2)))
-    ).all()
+    for shape in ((19, 13), (18, 21)):
+        gray = rng.randint(0, 256, shape, dtype=np.uint8)
+        assert (
+            decode_pixels(_encode_jpeg_progressive(gray))
+            == decode_pixels(_encode_jpeg(gray))
+        ).all(), shape
 
 
 def test_decode_pixels_jpeg_sequential_multiscan():
-    """SEQUENTIAL multi-scan (SOF0 + one full-band scan per component,
-    T.81 allows it and some encoders emit it) decodes identically to
-    the interleaved baseline stream with the same coefficients."""
+    """SEQUENTIAL multi-scan (SOF0 with a DC scan and an AC scan, T.81
+    allows it) decodes identically to the one-scan baseline stream with
+    the same coefficients: scans accumulate into one coefficient
+    store whatever the SOF."""
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
     rng = np.random.RandomState(31)
     y = rng.randint(0, 256, (10, 12), dtype=np.uint8)
-    cb = np.full((10, 12), 120, np.uint8)
-    cr = np.full((10, 12), 135, np.uint8)
-    # reuse the progressive encoder's scan layout but emit SOF0 and
-    # full-band (Ss=0..63) single-component scans: splice DC+AC scans
-    # into per-component sequential scans by re-encoding
-    blob = _encode_jpeg_progressive(y, cb, cr, sampling=(1, 1))
-    # progressive blob: DC scan covers Ss=0..0; the per-component AC
-    # scans cover 1..63 — retag SOF2 as SOF0 to assert the decoder
-    # treats multi-scan SEQUENTIAL frames through the same path
-    seq = blob.replace(b"\xff\xc2", b"\xff\xc0", 1)
-    assert (
-        decode_pixels(seq)
-        == decode_pixels(_encode_jpeg(y, cb, cr, sampling=(1, 1)))
-    ).all()
-
-
-def test_decode_pixels_jpeg_progressive_successive_approximation():
-    """Hand-built 4-scan successive-approximation stream over ONE 8x8
-    gray block: DC first at Al=1, AC first at Al=1 (point-transformed
-    values), DC refinement, AC refinement (correction bit for the
-    existing coefficient + a newly-nonzero +-1 insertion + EOB).
-    Final coefficients: DC=16, zigzag-1 = 5, zigzag-2 = 1."""
-    from gazelle_plugin_spark.operators.multimodal import _JPEG_ZZ, decode_pixels
-
-    out = _jpeg_tables_prelude(1, 0xC2, 8, 8, (1, 1))
-
-    # scan 1: DC first pass, Al=1 — sends 16 >> 1 = 8 (size 4)
-    bw_ = _BitWriter()
-    bw_.put(4, 4)
-    bw_.put(8, 4)
-    bw_.flush()
-    out += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01])) + bytes(bw_.buf)
-
-    # scan 2: AC first pass band 1..63, Al=1 — 5 -> trunc(5/2)=2
-    # (r=0, s=2, bits '10'), 1 -> trunc(1/2)=0 (absent), then EOB
-    bw_ = _BitWriter()
-    bw_.put(_AC_CODE[0x02], 8)
-    bw_.put(2, 2)
-    bw_.put(_AC_CODE[0x00], 8)
-    bw_.flush()
-    out += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x01])) + bytes(bw_.buf)
-
-    # scan 3: DC refinement Ah=1 -> Al=0 — low bit of 16 is 0
-    bw_ = _BitWriter()
-    bw_.put(0, 1)
-    bw_.flush()
-    out += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10])) + bytes(bw_.buf)
-
-    # scan 4: AC refinement Ah=1 -> Al=0 — new coefficient at zigzag-2
-    # (rs=0x01, sign bit 1 = +1), correction bit 1 for zigzag-1
-    # (2<<1=4 -> 5), then EOB covering the rest of the band
-    bw_ = _BitWriter()
-    bw_.put(_AC_CODE[0x01], 8)
-    bw_.put(1, 1)  # sign: +1
-    bw_.put(1, 1)  # correction bit for the existing zigzag-1 coefficient
-    bw_.put(_AC_CODE[0x00], 8)
-    bw_.flush()
-    out += _jpeg_seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x10])) + bytes(bw_.buf)
-    out += b"\xff\xd9"
-
-    got = decode_pixels(out)
-
-    A = _jpeg_dct_basis()
-    nat = np.zeros(64)
-    nat[_JPEG_ZZ[0]], nat[_JPEG_ZZ[1]], nat[_JPEG_ZZ[2]] = 16, 5, 1
-    exp = np.clip(np.round(A.T @ nat.reshape(8, 8) @ A + 128.0), 0, 255)
-    assert (got == exp.astype(np.uint8)).all()
+    seq = _encode_jpeg_progressive(y).replace(b"\xff\xc2", b"\xff\xc0", 1)
+    assert (decode_pixels(seq) == decode_pixels(_encode_jpeg(y))).all()
 
 
 @pytest.mark.parametrize("dims", [(1, 1), (3, 5), (7, 24), (40, 1), (9, 9)])
 def test_decode_pixels_jpeg_edge_dimensions(dims):
-    """Every (dims x sampling) combination round-trips: tiny images,
-    single-row/column, MCU-straddling odd sizes. Gray error bounded by
-    DCT rounding (<=2); progressive equals baseline bit-for-bit."""
+    """Tiny images, single-row/column and block-straddling odd sizes
+    round-trip: error bounded by DCT rounding (<=2); progressive equals
+    baseline bit-for-bit."""
     from gazelle_plugin_spark.operators.multimodal import decode_pixels
 
     h, w = dims
     rng = np.random.RandomState(h * 41 + w)
     y = rng.randint(0, 256, (h, w), dtype=np.uint8)
-    cb = np.full((h, w), 100, np.uint8)
-    cr = np.full((h, w), 140, np.uint8)
     g = decode_pixels(_encode_jpeg(y))
     assert g.shape == (h, w)
     assert np.abs(g.astype(int) - y.astype(int)).max() <= 2
-    for sampling in [(1, 1), (2, 2), (2, 1), (1, 2)]:
-        c = decode_pixels(_encode_jpeg(y, cb, cr, sampling=sampling))
-        assert c.shape == (h, w, 3), sampling
-        p = decode_pixels(_encode_jpeg_progressive(y, cb, cr, sampling=sampling))
-        assert (p == c).all(), sampling
+    assert (decode_pixels(_encode_jpeg_progressive(y)) == g).all()
 
 
 def test_decode_pixels_jpeg_truncated_fails_loud():
@@ -780,7 +683,8 @@ def test_sample_frames_empty_blob_yields_no_frames(spark):
 def test_encode_png_gray16_roundtrip_adam7():
     """The package's planted-fixture encoder (16-bit grayscale, Adam7,
     all five filters) round-trips through decode_pixels exactly — the
-    unit-level twin of the driver query mm_png_pixel_stats."""
+    unit-level twin of the registered query mm_png_pixel_stats — and so does
+    the same raster non-interlaced, built by the test-side encoder."""
     from gazelle_plugin_spark.operators.multimodal import (
         decode_pixels,
         encode_png_gray16,
@@ -789,10 +693,13 @@ def test_encode_png_gray16_roundtrip_adam7():
     rng = np.random.default_rng(7)
     for h, w in ((7, 9), (1, 1), (8, 8), (3, 16)):
         raster = rng.integers(0, 65536, (h, w)).astype(np.uint16)
-        for interlace in (0, 1):
-            got = decode_pixels(encode_png_gray16(raster, interlace=interlace))
+        for blob in (
+            encode_png_gray16(raster),
+            _encode_png(raster, 0, [0, 1, 2, 3, 4], depth=16),
+        ):
+            got = decode_pixels(blob)
             assert got.dtype == np.uint16 and got.shape == (h, w)
-            assert (got == raster).all(), (h, w, interlace)
+            assert (got == raster).all(), (h, w)
 
 
 def test_mm_png_pixel_stats_matches_formula(spark):

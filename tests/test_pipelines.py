@@ -99,18 +99,27 @@ def test_ngram_jaccard_superset_of_minhash(spark):
     assert len(exact) >= 10
 
 
-def test_ngram_df_cap_schedule():
-    """The corpus-scaled DF cap (round-13 verdict task 1), pinned at
-    the measured regimes: driver scales keep the historical 20 (plans
-    and oracle unchanged at sf0.01/sf0.1); the local scale study's
-    50k/150k-doc corpora get 7/4; the floor holds below that."""
-    from gazelle_plugin_spark.plans.text_pipeline import ngram_df_cap
+def test_ngram_df_cap_schedule(spark):
+    """The corpus-scaled DF cap, pinned at the measured regimes on the
+    expression doc_ngram_jaccard plans and on its DuckDB twin: the
+    sf0.01/sf0.1 corpora keep the historical 20 (plans and oracle
+    unchanged there); the local scale study's 50k/150k-doc corpora get
+    7/4; the floor holds below that."""
+    import duckdb
 
-    assert ngram_df_cap(500) == 20  # sf0.01 (oracle scale)
-    assert ngram_df_cap(5000) == 20  # sf0.1 (driver bench scale)
-    assert ngram_df_cap(50_000) == 7  # .scale/sf1
-    assert ngram_df_cap(150_000) == 4  # .scale/sf3
-    assert ngram_df_cap(10_000_000) == 4  # floor: 100 TB posture
+    from gazelle_plugin_spark.plans.text_pipeline import _SQL_DF_CAP, _df_cap
+
+    con = duckdb.connect()
+    for n_docs, cap in (
+        (500, 20),  # sf0.01 (oracle scale)
+        (5000, 20),  # sf0.1 (bench.py scale)
+        (50_000, 7),  # .scale/sf1
+        (150_000, 4),  # .scale/sf3
+        (10_000_000, 4),  # floor: 100 TB posture
+    ):
+        assert _df_cap(spark.range(n_docs)).first()["df_cap"] == cap, n_docs
+        sql = f"SELECT {_SQL_DF_CAP} FROM range({n_docs})"
+        assert con.execute(sql).fetchone()[0] == cap, n_docs
 
 
 def test_ngram_positional_filter_sound():

@@ -77,7 +77,6 @@ def test_driver_window_is_a_family_cross_section():
     representative per operator family."""
     from gazelle_plugin_spark.plans import (
         DRIVER_WINDOW,
-        ROWS_ONLY_WINDOW,
         _conditionally_absent,
         all_oracles,
         all_queries,
@@ -89,12 +88,8 @@ def test_driver_window_is_a_family_cross_section():
     assert len(DRIVER_WINDOW) == 50
     assert list(qs)[: len(window)] == window
     assert DRIVER_WINDOW[0] == "q1"
-    missing_oracle = [
-        n for n in window if n not in os_ and n not in ROWS_ONLY_WINDOW
-    ]
+    missing_oracle = [n for n in window if n not in os_]
     assert not missing_oracle, f"window entries without oracle: {missing_oracle}"
-    assert ROWS_ONLY_WINDOW <= set(DRIVER_WINDOW)
-    assert not (ROWS_ONLY_WINDOW & set(os_)), "rows-only entries grew oracles"
     for family in ("doc_", "emb_", "events_", "rel_", "expr_", "mm_", "ds_"):
         assert any(n.startswith(family) for n in DRIVER_WINDOW), family
     # every registered query is still exported (demotion ≠ removal)
